@@ -1,20 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  // Steady-state methodology: run each query once at the smallest SF
+  // before timing it at the target SF, so the measurement charges the
+  // query's data-proportional work, not its one-time codegen + JIT
+  // compilation (cold-start was 2-4× on sub-second queries; the
+  // generated code is identical across SFs, so the warm run compiles
+  // exactly the classes the timed run uses).
+  private[graft] def warmDir(sfDir: String): Option[String] =
+    sys.env.get("SPARK_GRAFT_WARM_DIR").orElse {
+      Option(new java.io.File(sfDir).getParentFile)
+        .map(p => new java.io.File(p, "sf0.001"))
+        .filter(f => f.exists && f.getPath != new java.io.File(sfDir).getPath)
+        .map(_.getPath)
+    }
+
+  /** One timed trial in seconds, or -1.0 (logged) when the query fails. */
+  private[graft] def trial(spark: SparkSession, name: String,
+      build: => DataFrame): Double = {
+    // settle block-manager + GC debt OUTSIDE the timer: queries that
+    // pin frames (localCheckpoint) leave RDD blocks behind, and 100+
+    // queries of leftovers in one session thrash the old gen — q85
+    // measured 66 s in-bench vs 4 s alone before this cleanup
+    // charged each query only its own state.
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc()
+    val t0 = System.nanoTime()
+    // noop sink materializes EVERY output column — count() would let
+    // Catalyst prune computed columns and undermeasure (a query can
+    // "bench" in 0.2s yet cost seconds to actually produce)
+    try { build.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9 }
+    catch { case t: Throwable =>
+      System.err.println(s"[bench] $name failed: $t"); -1.0 }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // BoundedTopK state is ~k rows per group, so the object-hash
-      // aggregate can hold far more groups than the 128-group default
-      // before its sort-based fallback (which would reintroduce the very
-      // sort RewriteRankFilterToTopK removes)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/IO paths so the first timed query isn't charged
     // for JVM/session initialization.
@@ -47,18 +71,6 @@ object Bench {
       try Some(math.min(once(), once()))
       catch { case t: Throwable =>
         System.err.println(s"[bench] calibration failed: $t"); None }
-    }
-    // Steady-state methodology: run each query once at the smallest SF
-    // before timing it at the target SF, so the measurement charges the
-    // query's data-proportional work, not its one-time codegen + JIT
-    // compilation (cold-start was 2-4× on sub-second queries; the
-    // generated code is identical across SFs, so the warm run compiles
-    // exactly the classes the timed run uses).
-    val warmDir: Option[String] = sys.env.get("SPARK_GRAFT_WARM_DIR").orElse {
-      Option(new java.io.File(sfDir).getParentFile)
-        .map(p => new java.io.File(p, "sf0.001"))
-        .filter(f => f.exists && f.getPath != new java.io.File(sfDir).getPath)
-        .map(_.getPath)
     }
     // Optional subset for local drill-downs (comma-separated name
     // prefixes); the driver runs the full set.
@@ -95,7 +107,7 @@ object Bench {
     val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val rescuedNames = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.map { case (name, fn) =>
-      warmDir.foreach { wd =>
+      warmDir(sfDir).foreach { wd =>
         try fn(spark, wd).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
@@ -105,24 +117,7 @@ object Bench {
       // loops) plus rare scheduler stalls measured at 10-60 s on an
       // otherwise sub-2 s query; the min is the steady-state number a
       // cluster run amortizes to.
-      val times = (1 to 2).map { _ =>
-        // settle block-manager + GC debt OUTSIDE the timer: queries that
-        // pin frames (localCheckpoint) leave RDD blocks behind, and 100+
-        // queries of leftovers in one session thrash the old gen — q85
-        // measured 66 s in-bench vs 4 s alone before this cleanup
-        // charged each query only its own state.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        val t0 = System.nanoTime()
-        // noop sink materializes EVERY output column — count() would let
-        // Catalyst prune computed columns and undermeasure (a query can
-        // "bench" in 0.2s yet cost seconds to actually produce)
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] $name failed: $t"); -1.0 }
-      }
+      val times = (1 to 2).map(_ => trial(spark, name, fn(spark, sfDir)))
       val good = times.filter(_ >= 0)
       // Environmental rescue: the host occasionally throttles (CPU
       // steal / IO stalls) for minutes at a time — measured as the SAME
@@ -134,16 +129,7 @@ object Bench {
       val rescued =
         if (good.nonEmpty && good.min > 5.0) {
           rescuedNames += name
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-          System.gc()
-          val t0 = System.nanoTime()
-          val extra =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9 }
-            catch { case t: Throwable =>
-          System.err.println(s"[bench] $name failed: $t"); -1.0 }
-          good ++ Seq(extra).filter(_ >= 0)
+          good ++ Seq(trial(spark, name, fn(spark, sfDir))).filter(_ >= 0)
         } else good
       // a failed query must read as a failure, not a fast time
       val t = if (rescued.isEmpty) -1.0 else rescued.min

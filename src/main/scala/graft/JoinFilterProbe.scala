@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures Spark's RUNTIME BLOOM-FILTER join reduction
@@ -34,9 +33,7 @@ import org.apache.spark.sql.functions._
 object JoinFilterProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.builder()
       // the scenario IS "neither side broadcasts" — at 100 TB the
       // filtered dim is GBs; locally we force the shuffle path
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -49,7 +46,6 @@ object JoinFilterProbe {
       // cluster scale the same estimate gap is why CBO stats (ANALYZE)
       // earn their keep on dimension tables
       .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

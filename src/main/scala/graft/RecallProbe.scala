@@ -2,7 +2,7 @@ package graft
 
 import graft.ann.{KMeans, Knn, Planted, Pq}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the recall-vs-nprobe tradeoff of trained IVF against the
@@ -28,13 +28,7 @@ object RecallProbe {
     val nQ = args.lift(1).map(_.toInt).getOrElse(50)
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val mode = args.lift(3).getOrElse("both")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def sweep(tag: String, emb: DataFrame): Unit = {

@@ -2,7 +2,6 @@ package graft
 
 import graft.ann.Knn
 import graft.dedup.TextDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe for the quadratic-risk operators: generates a
@@ -14,16 +13,10 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
     val nVecs = args.lift(1).map(_.toInt).getOrElse(50000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.builder()
+      // the recorded SCALING.md timings were taken at 32 shuffle
+      // partitions, whatever the core count
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // BoundedTopK state is ~k rows per group, so the object-hash
-      // aggregate can hold far more groups than the 128-group default
-      // before its sort-based fallback (which would reintroduce the very
-      // sort RewriteRankFilterToTopK removes)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -31,9 +31,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.builder()
       // force the sort-merge path: skew split only applies to SMJ, and
       // a broadcast would hide the skew entirely (which is itself the
       // first-line fix when the dim side fits)
@@ -46,7 +44,6 @@ object SkewProbe {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
       // keep AQE from ALSO coalescing the comparison away
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the MULTI-STAGE queries: materializes a scaled copy
@@ -27,6 +27,7 @@ import org.apache.spark.sql.functions._
   *   factor 10 → the decade probe over the q94/q106/q112/q114 spine
   *   family (sf0.1 × 10 ≈ sf1), which cuts the 2.5×→100 TB
   *   extrapolation by one decade of measurement.
+  * Exits 1, naming the failed gates on stderr, if any gate read false.
   */
 object SpineProbe {
   def main(args: Array[String]): Unit = {
@@ -39,14 +40,18 @@ object SpineProbe {
     // the requested factor — labels land in SCALING.md
     val built = 1.0 + fullCopies + (if (halfCopy) 0.5 else 0.0)
     val tag = if (built == built.floor) f"${built}%.0fx" else s"${built}x"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.builder()
+      // the 10x gates were calibrated at 32 shuffle partitions
+      // (OPTIMIZATION_r20 §10)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // every pass/fail line goes through gate(); a false one fails the run
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def gate(name: String, ok: Boolean, detail: String): Unit = {
+      if (!ok) failed += name
+      println(s"""{"gate":"$name","ok":$ok,"detail":"$detail"}""")
+    }
 
     val scaled = s"${System.getProperty("java.io.tmpdir")}/graft_spine_probe_$tag"
     val ordersOff = 4564560L // 2^4·3·5·7·11·13·19: > max key, ≡0 mod every k- and 4·m-modulus
@@ -457,7 +462,8 @@ object SpineProbe {
         val (r1, rN) = (segs1.map(_._2).sum, segsN.map(_._2).sum)
         val ok = n1 > 0 && nN <= n1 + 1 &&
           rN >= r1 * fullCopies && rN <= r1 * (fullCopies + 2)
-        println(s"""{"gate":"${q}_segment_ledger_$tag","ok":$ok,"detail":"segments_1x=$n1 segments_$tag=$nN rows_1x=$r1 rows_$tag=$rN"}""")
+        gate(s"${q}_segment_ledger_$tag", ok,
+          s"segments_1x=$n1 segments_$tag=$nN rows_1x=$r1 rows_$tag=$rN")
       }
       // q158's ledger rows are the maintained VIEW's size after each
       // merge — |(event_type, day)| keys. The events scaling offsets
@@ -469,7 +475,8 @@ object SpineProbe {
           q == "q167_stream_cdc_view")) {
         val ok = segs1.nonEmpty && segsN.nonEmpty &&
           segsN.last._2 == segs1.last._2 && segsN.size <= segs1.size + 1
-        println(s"""{"gate":"${q}_view_rows_$tag","ok":$ok,"detail":"view_rows_1x=${segs1.lastOption.map(_._2).getOrElse(-1L)} view_rows_$tag=${segsN.lastOption.map(_._2).getOrElse(-1L)} batches_1x=${segs1.size} batches_$tag=${segsN.size}"}""")
+        gate(s"${q}_view_rows_$tag", ok,
+          s"view_rows_1x=${segs1.lastOption.map(_._2).getOrElse(-1L)} view_rows_$tag=${segsN.lastOption.map(_._2).getOrElse(-1L)} batches_1x=${segs1.size} batches_$tag=${segsN.size}")
       }
       // q185/q187/q189 fold cluster retractions (and, for q187/q189,
       // appends) per micro-batch: segment COUNT tracks trigger cadence
@@ -485,7 +492,8 @@ object SpineProbe {
         val ok = segs1.nonEmpty && segsN.size <= segs1.size + 1 &&
           segsN.lastOption.map(_._2).getOrElse(-1L) >=
             segs1.lastOption.map(_._2).getOrElse(Long.MaxValue)
-        println(s"""{"gate":"${q}_fold_cadence_$tag","ok":$ok,"detail":"batches_1x=${segs1.size} batches_$tag=${segsN.size} state_rows_1x=${segs1.lastOption.map(_._2).getOrElse(-1L)} state_rows_$tag=${segsN.lastOption.map(_._2).getOrElse(-1L)}"}""")
+        gate(s"${q}_fold_cadence_$tag", ok,
+          s"batches_1x=${segs1.size} batches_$tag=${segsN.size} state_rows_1x=${segs1.lastOption.map(_._2).getOrElse(-1L)} state_rows_$tag=${segsN.lastOption.map(_._2).getOrElse(-1L)}")
       }
       // q159's whole claim is STATELESSNESS: the gate against the probe
       // set is row-local (plan-literal Bloom + broadcast confirm), so
@@ -496,7 +504,8 @@ object SpineProbe {
       if (decade && q == "q159_stream_decontam") {
         val snap = graft.streaming.StreamMetrics.get("graft_stream_decontam")
         val ok = snap.exists(s => s.maxRowsTotal == 0 && s.operators == 0)
-        println(s"""{"gate":"${q}_stateless_$tag","ok":$ok,"detail":"peak_rows=${snap.map(_.maxRowsTotal).getOrElse(-1L)} operators=${snap.map(_.operators).getOrElse(-1)}"}""")
+        gate(s"${q}_stateless_$tag", ok,
+          s"peak_rows=${snap.map(_.maxRowsTotal).getOrElse(-1L)} operators=${snap.map(_.operators).getOrElse(-1)}")
       }
       // The decade re-runs StreamingStateSpec's claim ON THE SCALED
       // TABLE: state rows per key-horizon, not wall time, is what the
@@ -513,7 +522,7 @@ object SpineProbe {
         // and make the gate fail or pass on NOISE instead of the real
         // invariant — report it as its own failure mode, never gate on it
         case (Some(a), Some(_)) if a.maxRowsTotal <= 0 =>
-          println(s"""{"gate":"${q}_state_bound_$tag","ok":false,"detail":"no 1x baseline: peak_1x=${a.maxRowsTotal}"}""")
+          gate(s"${q}_state_bound_$tag", ok = false, s"no 1x baseline: peak_1x=${a.maxRowsTotal}")
         case (Some(a), Some(b)) =>
           val ok = q match {
             case "q132_stream_cms" =>
@@ -544,9 +553,10 @@ object SpineProbe {
               b.removed > 0 &&
                 b.maxRowsTotal <= a.maxRowsTotal * (fullCopies + 2) * 5 / 4 + 64
           }
-          println(s"""{"gate":"${q}_state_bound_$tag","ok":$ok,"detail":"peak_1x=${a.maxRowsTotal} peak_$tag=${b.maxRowsTotal} removed_$tag=${b.removed} operators=${b.operators}"}""")
+          gate(s"${q}_state_bound_$tag", ok,
+            s"peak_1x=${a.maxRowsTotal} peak_$tag=${b.maxRowsTotal} removed_$tag=${b.removed} operators=${b.operators}")
         case _ =>
-          println(s"""{"gate":"${q}_state_bound_$tag","ok":false,"detail":"no StreamMetrics snapshot recorded"}""")
+          gate(s"${q}_state_bound_$tag", ok = false, "no StreamMetrics snapshot recorded")
       }
       if (drainsInBuild(q))
         println(s"""{"probe":"${q}_plan_$tag","skipped":"drain executes inside build; sink-side plan is not the pipeline"}""")
@@ -560,7 +570,7 @@ object SpineProbe {
         val ok = !pN.contains("CartesianProduct") &&
           pN.contains("SortMergeJoin") == p1.contains("SortMergeJoin") &&
           shuffles(pN) == shuffles(p1)
-        println(s"""{"probe":"${q}_plan_$tag","shuffles":${shuffles(pN)},"ok":$ok}""")
+        gate(s"${q}_plan_$tag", ok, s"shuffles=${shuffles(pN)}")
       }
     }
 
@@ -570,9 +580,6 @@ object SpineProbe {
     // QuantileSampleSpec, the q121 est≥exact guarantee), evaluated on
     // the scaled tables.
     if (decade) {
-      def gate(name: String, ok: Boolean, detail: String): Unit =
-        println(s"""{"gate":"$name","ok":$ok,"detail":"$detail"}""")
-
       val kSketch = 256
       // each gate family reads its own scaled table, so a --only filter
       // that never staged it must skip the gate, not crash the probe
@@ -852,5 +859,9 @@ object SpineProbe {
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[spine] ${failed.size} gate(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

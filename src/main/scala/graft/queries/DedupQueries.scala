@@ -645,11 +645,10 @@ object DedupQueries {
       graft.streaming.StreamMetrics.record(sinkName, q)
       EventQueries.dropStaged(in)
       BucketedGens.latest(s"$root/labels") match {
-        case None    => s.read.parquet(s"$stateDir/labels") // empty changelog
+        case None    => atRestLabels(s, stateDir) // empty changelog
           .select(col("id").as("doc_id"), col("component"))
         case Some(g) => BucketedGens.read(s, s"$root/labels", g,
-            s.read.parquet(s"$stateDir/labels")
-              .select(col("id"), col("component"), col("bucket")))
+            atRestLabels(s, stateDir))
           .select(col("id").as("doc_id"), col("component"))
       }
     },
@@ -1135,13 +1134,23 @@ object DedupQueries {
     }
   }
 
+  /** The at-rest label rows (id, component, bucket) of a staged cluster
+    * state — `labels` bucketed by component, `labels_byid` by id — read
+    * with their frozen schema: over a corpus with no near-duplicate
+    * pair the state holds no label rows, the partitioned write leaves
+    * no data files, and an inferring read would throw
+    * UNABLE_TO_INFER_SCHEMA instead of returning the empty relation. */
+  private def atRestLabels(s: org.apache.spark.sql.SparkSession,
+      stateDir: String, rel: String = "labels"): org.apache.spark.sql.DataFrame =
+    s.read.schema("id BIGINT, component BIGINT, bucket INT").parquet(s"$stateDir/$rel")
+
   private def labelBuckets(dir: String): Int =
     stateMeta(dir, "labels").map(_._1).getOrElse(16)
   private def manifestBuckets(dir: String): Int =
     stateMeta(dir, "manifest").map(_._1).getOrElse(64)
   private def labelRows(s: org.apache.spark.sql.SparkSession, dir: String): Long =
     stateMeta(dir, "labels").map(_._2)
-      .getOrElse(s.read.parquet(s"$dir/labels").count())
+      .getOrElse(atRestLabels(s, dir).count())
   private def manifestRows(s: org.apache.spark.sql.SparkSession, dir: String): Long =
     stateMeta(dir, "manifest").map(_._2)
       .getOrElse(s.read.parquet(s"$dir/manifest").count())
@@ -1179,7 +1188,7 @@ object DedupQueries {
       if (nb == 1) Seq(0)
       else ids.select(pmod(col("id"), lit(nb)).cast("int").as("bucket"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted)
-    val byid = s.read.parquet(s"$stateDir/labels_byid")
+    val byid = atRestLabels(s, stateDir, "labels_byid")
     (if (bks.isEmpty) byid.limit(0)
      else byid.filter(col("bucket").isin(bks.map(Int.box): _*)))
       .join(broadcast(ids), Seq("id"), "leftsemi")
@@ -1219,7 +1228,7 @@ object DedupQueries {
   /** The standing labels (id, component) from [[ccStateDir]]. */
   private[graft] def ccAtRestLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"${ccStateDir(s, d)}/labels")
+    atRestLabels(s, ccStateDir(s, d))
 
   /** Components with a deleted CLUSTERED member — the recompute set.
     * O(deletes) rows; lazily pinned because the callers both prune with
@@ -1230,7 +1239,7 @@ object DedupQueries {
         * at a pinned bucket count — the derived default can collapse to
         * 1 bucket at tiny SFs, making pruning asserts vacuous) */
       stateDirOpt: Option[String] = None): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"${stateDirOpt.getOrElse(ccStateDir(s, d))}/labels")
+    atRestLabels(s, stateDirOpt.getOrElse(ccStateDir(s, d)))
       .join(ccDeletedIds(s, d).select(col("doc_id").as("id")), Seq("id"), "leftsemi")
       .select("component").distinct()
       .localCheckpoint(false)
@@ -1277,7 +1286,7 @@ object DedupQueries {
     * resolution target for label generations. */
   private def atRestLabelGenRows(s: org.apache.spark.sql.SparkSession,
       stateDir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"$stateDir/labels")
+    atRestLabels(s, stateDir)
       .select(col("id"), col("component"), col("component").as("orig"),
         col("bucket"))
 
@@ -1312,7 +1321,7 @@ object DedupQueries {
     val s = b.sparkSession
     val labelsRoot = s"$root/labels"
     val nb = labelBuckets(stateDir)
-    val atRest = s.read.parquet(s"$stateDir/labels")
+    val atRest = atRestLabels(s, stateDir)
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
     // BOUND the dels family's reconstruction width (r18 — this family
     // has no state-level compaction, so a long forget-request stream
@@ -1631,8 +1640,9 @@ object DedupQueries {
         t
       }))
 
-  /** Label the jobs of one fold step (guide §1.5) so JobProbe / the UI
-    * can attribute the family's ~70 ms driver-action slots to steps.
+  /** Label the jobs of one fold step (guide §1.5) so graft.Probe's
+    * by-site table / the UI can attribute the family's ~70 ms
+    * driver-action slots to steps.
     * Thread-local, so pool-side steps label their own jobs. */
   private def labeled[A](s: org.apache.spark.sql.SparkSession, d: String)(
       f: => A): A = {
@@ -1819,7 +1829,7 @@ object DedupQueries {
     val stateDir = effectiveState(s, root, Some(id), stateDir0)
     val nb = labelBuckets(stateDir)
     val ledgerFloor = segFloor(root, Some(id))
-    val atRest = s.read.parquet(s"$stateDir/labels")
+    val atRest = atRestLabels(s, stateDir)
     def atRestRows = atRest.select(col("id"), col("component"), col("bucket"))
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
     val emptyIds = b.select(col("doc_id")).limit(0)
@@ -1932,8 +1942,7 @@ object DedupQueries {
     // the same pruning discipline.
     val byidRoot = s"$root/labels_byid"
     val baseBy = BucketedGens.latest(byidRoot, below = Some(id))
-    def atRestById = s.read.parquet(s"$stateDir/labels_byid")
-      .select(col("id"), col("component"), col("bucket"))
+    def atRestById = atRestLabels(s, stateDir, "labels_byid")
     def bucketsOf(df: org.apache.spark.sql.DataFrame, key: String): Seq[Int] =
       // pmod(_, 1) = 0 identically — skip the 2-job collect (r20); the
       // pruned read of bucket 0 over an empty probe frame is still empty
@@ -2312,7 +2321,7 @@ object DedupQueries {
       nbM0: Int = -1): String =
     graft.sources.ZOrder.ensureStagedDir(tag, d, s"$d/documents.parquet") { target =>
       EventQueries.multiWriteStage(target) { stage =>
-        val labels = s.read.parquet(s"$ccState/labels")
+        val labels = atRestLabels(s, ccState)
         // labels is corpus-derived — no broadcast hint (see stagedCcState)
         val membership = docs
           .join(labels.select(col("id").as("doc_id"), col("component")),
@@ -2355,7 +2364,7 @@ object DedupQueries {
     // O(deletes) probe side shuffles against them (AQE may still elect
     // a broadcast at bench scale)
     ccDeletedIds(s, d)
-      .join(s.read.parquet(s"${ccStateOpt.getOrElse(ccStateDir(s, d))}/labels")
+      .join(atRestLabels(s, ccStateOpt.getOrElse(ccStateDir(s, d)))
           .select(col("id").as("doc_id"), col("component")),
         Seq("doc_id"), "left")
       .select(coalesce(col("component"), col("doc_id")).as("component"))

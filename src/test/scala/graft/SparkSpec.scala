@@ -13,18 +13,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
+      // the plan, partition and job-count budgets were measured on 4
+      // slots; pin them whatever the host's core count
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // BoundedTopK state is ~k rows per group, so the object-hash
-      // aggregate can hold far more groups than the 128-group default
-      // before its sort-based fallback (which would reintroduce the very
-      // sort RewriteRankFilterToTopK removes)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
