@@ -1259,36 +1259,23 @@ object AnnQueries {
     // independent of arrival batching.
     QueryDef("q152_stream_index_append", Seq("J12", "A5"),
       faissIvfPqSearchSql("vec_id % 10 <> 0")) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val emb = Tables.embeddings(s0, d)
       val (cents, cb) = persistedFaissIndex(s0, d, histOnly = true)
       val histCodesDir = historyFaissSegment(s0, d, cents, cb)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_index_append"
       val batchSrc = emb.filter(col("vec_id") % 10 === 0)
         .select("vec_id", "embedding")
-      val in = EventQueries.stageRangedDrain(batchSrc, 4, "vec_id", "graft_sia_")
-      val segRoot = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(batchSrc.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$segRoot/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val seg = s"$segRoot/rows/seg-$id"
-          graft.ann.Pq.encode(b, "vec_id", "embedding", cents, cb,
-            residual = true).write.mode("overwrite").parquet(seg)
-          // ledger count from the LANDED files (footer row counts — a
-          // metadata read), so the ledger describes what committed, not
-          // what was attempted
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id,
-            b.sparkSession.read.parquet(seg).count())
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
+      val segRoot = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(batchSrc, 4, "vec_id", "graft_sia_"),
+          batchSrc.schema, "graft_stream_index_append") { (root, b, id) =>
+        val seg = s"$root/rows/seg-$id"
+        graft.ann.Pq.encode(b, "vec_id", "embedding", cents, cb,
+          residual = true).write.mode("overwrite").parquet(seg)
+        // ledger count from the LANDED files (footer row counts — a
+        // metadata read), so the ledger describes what committed, not
+        // what was attempted
+        b.sparkSession.read.parquet(seg).count()
+      }
       // rows/ appears only when a batch actually commits (the
       // drainToParquet empty-drain contract applied to segments)
       val streamed = if (!StateFs.exists(s"$segRoot/rows"))
@@ -1438,7 +1425,7 @@ object AnnQueries {
         .getOrElse(sys.error("q193: no generation committed at or before the ask"))
       require(gen1.genId == 1L,
         s"q193: as-of day-1 must resolve generation 1, got ${gen1.genId}")
-      val asOf = BucketedGens.read(s, genRoot, gen1,
+      val asOf = BucketedGens.read(s, genRoot, Some(gen1),
           s.read.parquet(histCodesDir).limit(0)
             .withColumn("bucket", lit(0))) // AtRest never referenced here
         .drop("bucket")
@@ -1473,12 +1460,10 @@ object AnnQueries {
     // state, the checkpoint prevents re-encoding committed batches.
     QueryDef("q164_stream_tombstone_delete", Seq("J12", "F4", "A5"),
       faissIvfPqSearchSql("vec_id % 10 <> 0", servePred = "e.vec_id % 7 <> 3")) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val emb = Tables.embeddings(s0, d)
       val (cents, cb) = persistedFaissIndex(s0, d, histOnly = true)
       val histCodesDir = historyFaissSegment(s0, d, cents, cb)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_tombstone_delete"
       // the unified changelog: appends carry vectors, deletes carry ids
       // (embedding NULL) — interleaved by vec_id range across the drain
       // files, so most micro-batches carry BOTH ops
@@ -1488,34 +1473,23 @@ object AnnQueries {
         .select(lit("D").as("op"), col("vec_id"),
           lit(null).cast(emb.schema("embedding").dataType).as("embedding"))
       val changelog = appends.unionByName(deletes)
-      val in = EventQueries.stageRangedDrain(changelog, 2, "vec_id", "graft_std_")
-      val segRoot = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$segRoot/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val ss = b.sparkSession
-          val seg = s"$segRoot/rows/seg-$id"
-          val tomb = s"$segRoot/tombs/seg-$id"
-          graft.ann.Pq.encode(b.filter(col("op") === "I")
-              .select("vec_id", "embedding"),
-            "vec_id", "embedding", cents, cb, residual = true)
-            .write.mode("overwrite").parquet(seg)
-          b.filter(col("op") === "D").select("vec_id")
-            .write.mode("overwrite").parquet(tomb)
-          // ledger row = appends landed + deletes landed, both from the
-          // committed files' footers — the scaling evidence that segment
-          // COUNT tracks trigger cadence while rows track volume
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id,
-            ss.read.parquet(seg).count() + ss.read.parquet(tomb).count())
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
+      val segRoot = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(changelog, 2, "vec_id", "graft_std_"),
+          changelog.schema, "graft_stream_tombstone_delete") { (root, b, id) =>
+        val ss = b.sparkSession
+        val seg = s"$root/rows/seg-$id"
+        val tomb = s"$root/tombs/seg-$id"
+        graft.ann.Pq.encode(b.filter(col("op") === "I")
+            .select("vec_id", "embedding"),
+          "vec_id", "embedding", cents, cb, residual = true)
+          .write.mode("overwrite").parquet(seg)
+        b.filter(col("op") === "D").select("vec_id")
+          .write.mode("overwrite").parquet(tomb)
+        // ledger row = appends landed + deletes landed, both from the
+        // committed files' footers — the scaling evidence that segment
+        // COUNT tracks trigger cadence while rows track volume
+        ss.read.parquet(seg).count() + ss.read.parquet(tomb).count()
+      }
       val hist = s.read.parquet(histCodesDir)
       val streamed = if (!StateFs.exists(s"$segRoot/rows"))
         hist.limit(0)

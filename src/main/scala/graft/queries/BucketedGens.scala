@@ -37,6 +37,13 @@ import org.apache.spark.sql.functions._
   * STRICTLY BELOW it and overwrites its own torn dir whole, so folds
   * converge under foreachBatch's at-least-once delivery.
   *
+  * One protocol per fold step: it resolves its predecessor content
+  * only through [[read]] (on `latest(root, below = Some(id))`, which may
+  * be None — every bucket still at rest) and commits only through
+  * [[commitFold]] (owners map, marker, vacuum). Compaction's
+  * full-snapshot commit stays an explicit [[commit]]: it re-points every
+  * bucket at a NEW at-rest state rather than folding onto a base.
+  *
   * All filesystem access goes through [[StateFs]] (Hadoop `FileSystem`),
   * so the store runs unchanged against `file:`, `hdfs:`, or object-store
   * URIs; the marker-last protocol's object-store caveats are documented
@@ -125,20 +132,39 @@ private[graft] object BucketedGens {
     * by owning generation, ONE partition-pruned read per owner dir;
     * [[AtRest]] buckets come from `atRest` (the staged at-rest frame,
     * itself bucket-partitioned so the same pruning applies). Every
-    * frame must carry the physical `bucket` partition column. */
-  def read(s: SparkSession, root: String, gen: Gen, atRest: => DataFrame,
-      only: Option[Seq[Int]] = None): DataFrame = {
-    val wanted = only match {
-      case None     => gen.owners
-      case Some(bs) => gen.owners.filter { case (b, _) => bs.contains(b) }
+    * frame must carry the physical `bucket` partition column. `gen` =
+    * None (no generation committed yet) means every bucket is at rest;
+    * `only = Some(Nil)` is the empty read. */
+  def read(s: SparkSession, root: String, gen: Option[Gen],
+      atRest: => DataFrame, only: Option[Seq[Int]] = None): DataFrame =
+    (gen, only) match {
+      case (_, Some(bs)) if bs.isEmpty => atRest.limit(0)
+      case (None, None)     => atRest
+      case (None, Some(bs)) => atRest.filter(col("bucket").isin(bs.map(Int.box): _*))
+      case (Some(g), _) =>
+        val wanted = only.fold(g.owners)(bs =>
+          g.owners.filter { case (b, _) => bs.contains(b) })
+        val parts = wanted.filter(_._2 != Empty)
+          .groupBy(_._2).toSeq.sortBy(_._1).map { case (o, kv) =>
+            val bs = kv.keys.toSeq.sorted
+            val df = if (o == AtRest) atRest else s.read.parquet(s"$root/gen-$o")
+            df.filter(col("bucket").isin(bs.map(Int.box): _*))
+          }
+        parts.reduceOption(_.unionByName(_)).getOrElse(atRest.limit(0))
     }
-    val parts = wanted.filter(_._2 != Empty)
-      .groupBy(_._2).toSeq.sortBy(_._1).map { case (o, kv) =>
-        val bs = kv.keys.toSeq.sorted
-        val df = if (o == AtRest) atRest else s.read.parquet(s"$root/gen-$o")
-        df.filter(col("bucket").isin(bs.map(Int.box): _*))
-      }
-    parts.reduceOption(_.unionByName(_)).getOrElse(atRest.limit(0))
+
+  /** Commit fold generation `id` on predecessor `base` and vacuum: a
+    * `written` bucket is owned by `id`, a `touched` bucket the write
+    * left empty becomes [[Empty]], every other bucket keeps base's owner
+    * ([[AtRest]] when there is no base, over `nb` buckets). `rows` is
+    * the caller's standing-count arithmetic. */
+  def commitFold(s: SparkSession, root: String, base: Option[Gen], id: Long,
+      nb: Int, touched: Seq[Int], written: Set[Int], rows: Long,
+      ts: Option[Long] = None): Unit = {
+    val owners = base.map(_.owners).getOrElse(initialOwners(nb)) ++
+      touched.map(b => b -> (if (written(b)) id else Empty))
+    commit(root, id, owners, rows, ts)
+    vacuum(s, root, base, id)
   }
 
   /** Write a fold's generation payload with the count arithmetic riding

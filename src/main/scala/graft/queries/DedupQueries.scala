@@ -194,37 +194,21 @@ object DedupQueries {
     // state is O(clustered docs), never O(edges seen).
     QueryDef("q172_stream_components", Seq("A10"),
       ccComponentsSql()) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val sig = Tables.documents(s0, d).select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
       val batch = TextDedup.simHashNearDup(sig, "doc_id", "simhash", 3)
         .select("id_a", "id_b")
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_components"
-      val in = EventQueries.stageRangedDrain(batch, 2, "id_a", "graft_scc_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = componentsMergeStep(root, b, id)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
-      BucketedGens.latest(s"$root/labels") match {
-        case None    => batch.limit(0)
-          .select(col("id_a").as("doc_id"), col("id_b").as("component"))
-        case Some(g) => BucketedGens.read(s, s"$root/labels", g,
-            batch.limit(0).select(col("id_a").as("id"),
-              col("id_b").as("component"), lit(0).cast("int").as("bucket")))
-          .select(col("id").as("doc_id"), col("component"))
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(batch, 2, "id_a", "graft_scc_"),
+          batch.schema, "graft_stream_components") { (root, b, id) =>
+        componentsMergeStep(root, b, id)
       }
+      // the standing state starts EMPTY — at rest is no rows
+      BucketedGens.read(s, s"$root/labels", BucketedGens.latest(s"$root/labels"),
+          batch.limit(0).select(col("id_a").as("id"),
+            col("id_b").as("component"), lit(0).cast("int").as("bucket")))
+        .select(col("id").as("doc_id"), col("component"))
     },
 
     // Incremental dedup: flag a new batch (doc_id % 11 = 0, the "daily
@@ -464,34 +448,17 @@ object DedupQueries {
     // q171/q172 pairing.
     QueryDef("q185_stream_components_retraction", Seq("A10", "F4"),
       ccComponentsSql(ccKeepPredSql)) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val stateDir = ccStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_cc_retraction"
       val deleted = ccDeletedIds(s, d)
-      val in = EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ccr_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(deleted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = componentsRetractStep(stateDir, root, b, id)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
-      BucketedGens.latest(s"$root/labels") match {
-        case None    => ccAtRestLabels(s, d) // no delete ever arrived
-          .select(col("id").as("doc_id"), col("component"))
-        case Some(g) => BucketedGens
-          .read(s, s"$root/labels", g, atRestLabelGenRows(s, stateDir))
-          .select(col("id").as("doc_id"), col("component"))
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ccr_"),
+          deleted.schema, "graft_stream_cc_retraction") { (root, b, id) =>
+        componentsRetractStep(stateDir, root, b, id)
       }
+      BucketedGens.read(s, s"$root/labels", BucketedGens.latest(s"$root/labels"),
+          atRestLabelGenRows(s, stateDir))
+        .select(col("id").as("doc_id"), col("component"))
     },
 
     // SURVIVOR RE-ELECTION UNDER RETRACTION — q174's manifest is a
@@ -555,35 +522,18 @@ object DedupQueries {
     // post-delete corpus.
     QueryDef("q188_stream_survivor_reelection", Seq("A10", "A2", "W6", "F4"),
       survivorManifestSql(ccKeepPredSql)) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val ccState = ccStateDir(s0, d)
       val survState = survivorStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_survivor"
       val deleted = ccDeletedIds(s, d)
-      val in = EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ssr_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(deleted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = survivorRetractStep(ccState, survState, root, b, id)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
-      BucketedGens.latest(s"$root/manifest") match {
-        case None    => s.read.parquet(s"$survState/manifest") // no deletes arrived
-          .select("component", "survivor_id", "n_members", "quality")
-        case Some(g) => BucketedGens
-          .read(s, s"$root/manifest", g, atRestManifestGenRows(s, survState))
-          .select("component", "survivor_id", "n_members", "quality")
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ssr_"),
+          deleted.schema, "graft_stream_survivor") { (root, b, id) =>
+        survivorRetractStep(ccState, survState, root, b, id)
       }
+      BucketedGens.read(s, s"$root/manifest", BucketedGens.latest(s"$root/manifest"),
+          atRestManifestGenRows(s, survState))
+        .select("component", "survivor_id", "n_members", "quality")
     },
 
     // THE FULL CLUSTER LIFECYCLE UNDER ONE CHANGELOG — appends (q171/
@@ -616,10 +566,8 @@ object DedupQueries {
     // all documents minus the deleted history rows.
     QueryDef("q187_stream_components_cdc", Seq("A10", "F4", "R4"),
       ccComponentsSql(ccCdcKeepPredSql)) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val stateDir = ccHistStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_cc_cdc"
       val sigs = Tables.documents(s, d).select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
         .localCheckpoint(false) // the static probe side, pinned once
@@ -628,29 +576,14 @@ object DedupQueries {
         .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
           .select(lit("D").as("op"), col("doc_id"),
             lit(null).cast("long").as("simhash")))
-      val in = EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_cccdc_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = componentsCdcStep(stateDir, root, b, id, sigs)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
-      BucketedGens.latest(s"$root/labels") match {
-        case None    => atRestLabels(s, stateDir) // empty changelog
-          .select(col("id").as("doc_id"), col("component"))
-        case Some(g) => BucketedGens.read(s, s"$root/labels", g,
-            atRestLabels(s, stateDir))
-          .select(col("id").as("doc_id"), col("component"))
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_cccdc_"),
+          changelog.schema, "graft_stream_cc_cdc") { (root, b, id) =>
+        componentsCdcStep(stateDir, root, b, id, sigs)
       }
+      BucketedGens.read(s, s"$root/labels", BucketedGens.latest(s"$root/labels"),
+          atRestLabels(s, stateDir))
+        .select(col("id").as("doc_id"), col("component"))
     },
 
     // THE MANIFEST UNDER THE FULL CHANGELOG — the round's capstone
@@ -670,51 +603,22 @@ object DedupQueries {
     // the post-CDC corpus, however the changelog was batched.
     QueryDef("q189_stream_manifest_cdc", Seq("A10", "A2", "W6", "F4", "R4"),
       survivorManifestSql(ccCdcKeepPredSql)) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val ccState = ccHistStateDir(s0, d)
       val survState = survivorHistStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_stream_manifest_cdc"
       val docs = Tables.documents(s, d)
       val sigs = docs.select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
         .localCheckpoint(false) // the static probe side, pinned once
-      // the I side needs quality, which needs the TEXT — so this is one
-      // slice scan computing both row-local expressions, deliberately
-      // NOT a join against the pinned sigs frame (joining corpus-sized
-      // sigs to the 1/7 slice costs more than re-hashing the slice once
-      // at staging time)
-      val changelog = docs.filter(col("doc_id") % 7 === 0)
-        .select(lit("I").as("op"), col("doc_id"),
-          TextDedup.simHashN(col("text"), 60).as("simhash"),
-          TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality"))
-        .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
-          .select(lit("D").as("op"), col("doc_id"),
-            lit(null).cast("long").as("simhash"),
-            lit(null).cast("double").as("quality")))
-      val in = EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_mcdc_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = survivorCdcStep(ccState, survState, root, b, id, sigs)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
-      BucketedGens.latest(s"$root/manifest") match {
-        case None    => s.read.parquet(s"$survState/manifest") // empty changelog
-          .select("component", "survivor_id", "n_members", "quality")
-        case Some(g) => BucketedGens.read(s, s"$root/manifest", g,
-            s.read.parquet(s"$survState/manifest"))
-          .select("component", "survivor_id", "n_members", "quality")
+      val changelog = manifestCdcChangelog(s, d, docs)
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_mcdc_"),
+          changelog.schema, "graft_stream_manifest_cdc") { (root, b, id) =>
+        survivorCdcStep(ccState, survState, root, b, id, sigs)
       }
+      BucketedGens.read(s, s"$root/manifest", BucketedGens.latest(s"$root/manifest"),
+          s.read.parquet(s"$survState/manifest"))
+        .select("component", "survivor_id", "n_members", "quality")
     },
 
     // LEDGER COMPACTION UNDER THE FULL CHANGELOG — q189's maintained
@@ -738,7 +642,6 @@ object DedupQueries {
     // re-runs its compaction decision idempotently before re-folding.
     QueryDef("q190_stream_manifest_compaction", Seq("A10", "A2", "W6", "F4", "R4"),
       survivorManifestSql(ccCdcKeepPredSql)) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val ccState = ccHistStateDir(s0, d)
       val survState = survivorHistStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
@@ -748,60 +651,38 @@ object DedupQueries {
       val sigs = docs.select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
         .localCheckpoint(false) // the static probe side, pinned once
-      val changelog = docs.filter(col("doc_id") % 7 === 0)
-        .select(lit("I").as("op"), col("doc_id"),
-          TextDedup.simHashN(col("text"), 60).as("simhash"),
-          TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality"))
-        .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
-          .select(lit("D").as("op"), col("doc_id"),
-            lit(null).cast("long").as("simhash"),
-            lit(null).cast("double").as("quality")))
-      val in = EventQueries.stageRangedDrain(changelog, 4, "doc_id", "graft_mcmp_")
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-          // SIZE-DRIVEN cadence (r17 — was a hardcoded `bid == 2`):
-          // compact when the ledger segments outweigh 18% of the
-          // standing manifest. The policy decides the splice point; the
-          // oracle (same text as q189) proves whichever point it picks
-          // invisible. On this fixture one batch accrues ~12% of the
-          // manifest in segments (ops + opsq ≈ 2 × changelog quarter,
-          // scale-invariant — measured 0.122 at sf0.01 AND sf0.1), so
-          // 0.18 fires exactly once, before batch 2, and stays quiet
-          // after the truncation. Gen ids still double up (compaction
-          // 2b, batch 2b+1) and the decision replays idempotently
-          // (skip by marker; truncation is the ledger read FLOOR, so a
-          // replay that re-counts pre-vacuum segments only re-enters
-          // the skip path).
-          if (shouldCompact(root, 2 * bid, frac = 0.18)) {
-            survivorCompactStep(ccState, survState, root, 2 * bid, sigs)
-            // observable beside the fold ledger (separate key — the
-            // fold-cadence gates read the plain sink name)
-            graft.streaming.StreamMetrics.recordSegment(
-              s"${sinkName}_compactions", bid, 1L)
-          }
-          val rows = survivorCdcStep(ccState, survState, root, b, 2 * bid + 1, sigs)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, bid, rows)
+      val changelog = manifestCdcChangelog(s, d, docs)
+      val root = EventQueries.foldDrain(s,
+          EventQueries.stageRangedDrain(changelog, 4, "doc_id", "graft_mcmp_"),
+          changelog.schema, sinkName) { (root, b, bid) =>
+        // SIZE-DRIVEN cadence (r17 — was a hardcoded `bid == 2`):
+        // compact when the ledger segments outweigh 18% of the
+        // standing manifest. The policy decides the splice point; the
+        // oracle (same text as q189) proves whichever point it picks
+        // invisible. On this fixture one batch accrues ~12% of the
+        // manifest in segments (ops + opsq ≈ 2 × changelog quarter,
+        // scale-invariant — measured 0.122 at sf0.01 AND sf0.1), so
+        // 0.18 fires exactly once, before batch 2, and stays quiet
+        // after the truncation. Gen ids still double up (compaction
+        // 2b, batch 2b+1) and the decision replays idempotently
+        // (skip by marker; truncation is the ledger read FLOOR, so a
+        // replay that re-counts pre-vacuum segments only re-enters
+        // the skip path).
+        if (shouldCompact(root, 2 * bid, frac = 0.18)) {
+          survivorCompactStep(ccState, survState, root, 2 * bid, sigs)
+          // observable beside the fold ledger (separate key — the
+          // fold-cadence gates read the plain sink name)
+          graft.streaming.StreamMetrics.recordSegment(
+            s"${sinkName}_compactions", bid, 1L)
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
+        survivorCdcStep(ccState, survState, root, b, 2 * bid + 1, sigs)
+      }
       // the manifest resolves AtRest buckets against the COMPACTED
       // state when one landed — the same resolution the folds use
       val servedState = effectiveState(s, root, None, survState)
-      BucketedGens.latest(s"$root/manifest") match {
-        case None    => s.read.parquet(s"$servedState/manifest") // empty changelog
-          .select("component", "survivor_id", "n_members", "quality")
-        case Some(g) => BucketedGens.read(s, s"$root/manifest", g,
-            s.read.parquet(s"$servedState/manifest"))
-          .select("component", "survivor_id", "n_members", "quality")
-      }
+      BucketedGens.read(s, s"$root/manifest", BucketedGens.latest(s"$root/manifest"),
+          s.read.parquet(s"$servedState/manifest"))
+        .select("component", "survivor_id", "n_members", "quality")
     },
 
     // AS-OF SERVING FOR THE MAINTAINED MANIFEST — time travel the
@@ -822,35 +703,19 @@ object DedupQueries {
     // predecessor in batch 1's replay window.
     QueryDef("q191_manifest_asof", Seq("A10", "A2", "W6", "F4"),
       survivorManifestSql("(doc_id % 13 <> 3 OR doc_id % 2 <> 0)")) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val ccState = ccStateDir(s0, d)
       val survState = survivorStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_manifest_asof"
       val deleted = ccDeletedIds(s, d)
-      val in = EventQueries.stageOrderedDrain("graft_asof_", Seq(
-        deleted.filter(col("doc_id") % 2 === 0),
-        deleted.filter(col("doc_id") % 2 =!= 0)))
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(deleted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = survivorRetractStep(ccState, survState, root, b, id)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
+      val root = EventQueries.foldDrain(s, stageEvenOddDeletes("graft_asof_", deleted),
+          deleted.schema, "graft_manifest_asof") { (root, b, id) =>
+        survivorRetractStep(ccState, survState, root, b, id)
+      }
       // the AS-OF read: resolve generation 0's owners — the manifest
       // after the EVEN deletes only, served while gen 1 is current
       val gen0 = BucketedGens.latest(s"$root/manifest", below = Some(1L))
         .getOrElse(sys.error("q191: generation 0 missing — the first batch never committed"))
-      BucketedGens.read(s, s"$root/manifest", gen0,
+      BucketedGens.read(s, s"$root/manifest", Some(gen0),
           atRestManifestGenRows(s, survState))
         .select("component", "survivor_id", "n_members", "quality")
     },
@@ -869,35 +734,18 @@ object DedupQueries {
     // graft.gens.pins += that id).
     QueryDef("q192_manifest_asof_time", Seq("A10", "A2", "W6", "F4"),
       survivorManifestSql("(doc_id % 13 <> 3 OR doc_id % 2 <> 0)")) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val ccState = ccStateDir(s0, d)
       val survState = survivorStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sinkName = "graft_manifest_asof_time"
       // the synthetic batch watermark: batch id → start of day id
       def tsOf(id: Long): Long = java.time.LocalDate.of(2026, 6, 1)
         .plusDays(id).atStartOfDay(java.time.ZoneOffset.UTC)
         .toInstant.toEpochMilli
       val deleted = ccDeletedIds(s, d)
-      val in = EventQueries.stageOrderedDrain("graft_asoft_", Seq(
-        deleted.filter(col("doc_id") % 2 === 0),
-        deleted.filter(col("doc_id") % 2 =!= 0)))
-      val root = EventQueries.registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(deleted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = survivorRetractStep(ccState, survState, root, b, id,
-            ts = Some(tsOf(id)))
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      EventQueries.dropStaged(in)
+      val root = EventQueries.foldDrain(s, stageEvenOddDeletes("graft_asoft_", deleted),
+          deleted.schema, "graft_manifest_asof_time") { (root, b, id) =>
+        survivorRetractStep(ccState, survState, root, b, id, ts = Some(tsOf(id)))
+      }
       // the AS-OF-TIME read: "as of day 0, 23:00" — after batch 0's
       // watermark, before batch 1's — must resolve generation 0
       val gen0 = BucketedGens.genAsOf(s"$root/manifest",
@@ -905,11 +753,38 @@ object DedupQueries {
         .getOrElse(sys.error("q192: no generation committed at or before the ask"))
       require(gen0.genId == 0L,
         s"q192: as-of day-0 must resolve generation 0, got ${gen0.genId}")
-      BucketedGens.read(s, s"$root/manifest", gen0,
+      BucketedGens.read(s, s"$root/manifest", Some(gen0),
           atRestManifestGenRows(s, survState))
         .select("component", "survivor_id", "n_members", "quality")
     },
   )
+
+  /** q189/q190's mixed I/D changelog over `docs`: arrivals (I) are
+    * doc_id % 7 == 0 carrying their row-local simhash and quality,
+    * deletes (D) are the retraction set restricted to history. The I
+    * side needs quality, which needs the TEXT — so this is one slice
+    * scan computing both row-local expressions, deliberately NOT a join
+    * against the pinned sigs frame (joining corpus-sized sigs to the
+    * 1/7 slice costs more than re-hashing the slice once at staging
+    * time). */
+  private def manifestCdcChangelog(s: org.apache.spark.sql.SparkSession,
+      d: String, docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.filter(col("doc_id") % 7 === 0)
+      .select(lit("I").as("op"), col("doc_id"),
+        TextDedup.simHashN(col("text"), 60).as("simhash"),
+        TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality"))
+      .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
+        .select(lit("D").as("op"), col("doc_id"),
+          lit(null).cast("long").as("simhash"),
+          lit(null).cast("double").as("quality")))
+
+  /** q191/q192's delete stream: two EXPLICITLY-split batches, even
+    * doc_ids then odd — a deterministic boundary their oracle replays. */
+  private def stageEvenOddDeletes(prefix: String,
+      deleted: org.apache.spark.sql.DataFrame): String =
+    EventQueries.stageOrderedDrain(prefix, Seq(
+      deleted.filter(col("doc_id") % 2 === 0),
+      deleted.filter(col("doc_id") % 2 =!= 0)))
 
 
   /** One q172 maintenance step (r17 shape): fold edge micro-batch `b`
@@ -941,21 +816,20 @@ object DedupQueries {
       .select(col("id_a").as("id"), col("id_a").as("component"),
         pmod(col("id_a"), lit(nb)).cast("int").as("bucket"))
       .limit(0)
-    def readGen(r: String, g: Option[BucketedGens.Gen], bks: Seq[Int]) =
-      if (bks.isEmpty || g.isEmpty) atRestEmpty
-      else BucketedGens.read(s, r, g.get, atRestEmpty, Some(bks))
     // every pruning bucket set rides its frame's pin as an observe()
     // metric (pinMetered) — the merge fold pays zero collect actions
     val incidentP = pinMetered(bE.select(col("id_a").as("id"))
         .unionByName(bE.select(col("id_b").as("id"))).distinct(),
       "ibk" -> pmod(col("id"), lit(nb)))
     val incident = incidentP.df
-    val touchedP = pinMetered(readGen(byidRoot, baseBy, incidentP.bks("ibk"))
+    val touchedP = pinMetered(
+        BucketedGens.read(s, byidRoot, baseBy, atRestEmpty, Some(incidentP.bks("ibk")))
         .join(broadcast(incident), Seq("id"), "leftsemi")
         .select("component").distinct(),
       "cbk" -> pmod(col("component"), lit(nb)))
     val touched = touchedP.df
-    val mTouchedP = pinMetered(readGen(labelsRoot, base, touchedP.bks("cbk"))
+    val mTouchedP = pinMetered(
+        BucketedGens.read(s, labelsRoot, base, atRestEmpty, Some(touchedP.bks("cbk")))
         .join(broadcast(touched), Seq("component"), "leftsemi")
         .select("id", "component"),
       "ibk" -> pmod(col("id"), lit(nb)))
@@ -975,28 +849,24 @@ object DedupQueries {
     // discipline is unchanged
     val ((written, nextRows, predRows), (writtenBy, _, _)) = inParallel(
       BucketedGens.observedWrite(
-          readGen(labelsRoot, base, buckets), buckets, s"$labelsRoot/gen-$id") { p =>
+          BucketedGens.read(s, labelsRoot, base, atRestEmpty, Some(buckets)),
+          buckets, s"$labelsRoot/gen-$id") { p =>
         p.select("id", "component")
           .join(broadcast(oldAffected), Seq("id"), "left_anti")
           .unionByName(newLocal)
           .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
       },
       BucketedGens.observedWrite(
-          readGen(byidRoot, baseBy, byBuckets), byBuckets, s"$byidRoot/gen-$id") { p =>
+          BucketedGens.read(s, byidRoot, baseBy, atRestEmpty, Some(byBuckets)),
+          byBuckets, s"$byidRoot/gen-$id") { p =>
         p.select("id", "component")
           .join(broadcast(oldAffected), Seq("id"), "left_anti")
           .unionByName(newLocal)
           .withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
       })
     val rows = base.map(_.rows).getOrElse(0L) - predRows + nextRows
-    val owners = base.map(_.owners).getOrElse(BucketedGens.initialOwners(nb)) ++
-      buckets.map(bk => bk -> (if (written(bk)) id else BucketedGens.Empty))
-    BucketedGens.commit(labelsRoot, id, owners, rows, ts)
-    BucketedGens.vacuum(s, labelsRoot, base, id)
-    val ownersBy = baseBy.map(_.owners).getOrElse(BucketedGens.initialOwners(nb)) ++
-      byBuckets.map(bk => bk -> (if (writtenBy(bk)) id else BucketedGens.Empty))
-    BucketedGens.commit(byidRoot, id, ownersBy, rows, ts)
-    BucketedGens.vacuum(s, byidRoot, baseBy, id)
+    BucketedGens.commitFold(s, labelsRoot, base, id, nb, buckets, written, rows, ts)
+    BucketedGens.commitFold(s, byidRoot, baseBy, id, nb, byBuckets, writtenBy, rows, ts)
     rows
   }
 
@@ -1360,12 +1230,7 @@ object DedupQueries {
     // predecessor content of ONLY the touched buckets — resolved
     // through the owners map, partition-pruned per owning generation,
     // consumed exactly once inside the observed generation write (no pin)
-    val predTouched =
-      if (buckets.isEmpty) atRestRows.limit(0)
-      else base match {
-        case None    => atRestRows.filter(col("bucket").isin(buckets.map(Int.box): _*))
-        case Some(g) => BucketedGens.read(s, labelsRoot, g, atRestRows, Some(buckets))
-      }
+    val predTouched = BucketedGens.read(s, labelsRoot, base, atRestRows, Some(buckets))
     val pruned =
       if (buckets.isEmpty) atRest.select(col("id").as("id_a"), col("id").as("id_b")).limit(0)
       else s.read.parquet(s"$stateDir/edges")
@@ -1402,10 +1267,7 @@ object DedupQueries {
       SegLedger.append(b.select("doc_id").distinct(), s"$root/dels", id))
     val baseRows = base.map(_.rows).getOrElse(labelRows(s, stateDir))
     val rows = baseRows - predRows + nextRows
-    val owners = base.map(_.owners).getOrElse(BucketedGens.initialOwners(nb)) ++
-      buckets.map(b => b -> (if (written(b)) id else BucketedGens.Empty))
-    BucketedGens.commit(labelsRoot, id, owners, rows, ts)
-    BucketedGens.vacuum(s, labelsRoot, base, id)
+    BucketedGens.commitFold(s, labelsRoot, base, id, nb, buckets, written, rows, ts)
     (rows, recomputed)
   }
 
@@ -1460,12 +1322,7 @@ object DedupQueries {
     val buckets = touchedOrigP.bks("mbk")
     // predecessor manifest rows of ONLY the touched buckets — consumed
     // once, inside the observed generation write below
-    val predTouched =
-      if (buckets.isEmpty) atRestRows.limit(0)
-      else baseM match {
-        case None    => atRestRows.filter(col("bucket").isin(buckets.map(Int.box): _*))
-        case Some(g) => BucketedGens.read(s, manRoot, g, atRestRows, Some(buckets))
-      }
+    val predTouched = BucketedGens.read(s, manRoot, baseM, atRestRows, Some(buckets))
     // re-elect over the touched originals' full remaining membership,
     // relabeled through the batch's REBUILT labels (exactly the touched
     // originals' post-delete closure — edge-less members coalesce to
@@ -1513,10 +1370,7 @@ object DedupQueries {
     val baseRows = baseM.map(_.rows)
       .getOrElse(manifestRows(s, survState))
     val rows = baseRows - predRows + nextRows
-    val owners = baseM.map(_.owners).getOrElse(BucketedGens.initialOwners(nbM)) ++
-      buckets.map(b => b -> (if (written(b)) id else BucketedGens.Empty))
-    BucketedGens.commit(manRoot, id, owners, rows, ts)
-    BucketedGens.vacuum(s, manRoot, baseM, id)
+    BucketedGens.commitFold(s, manRoot, baseM, id, nbM, buckets, written, rows, ts)
     rows
   }
 
@@ -1957,22 +1811,14 @@ object DedupQueries {
     def labelsForIds(ids: org.apache.spark.sql.DataFrame,
         bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame = {
       val bks = bksOpt.getOrElse(bucketsOf(ids, "id"))
-      (if (bks.isEmpty) atRestById.limit(0)
-       else baseBy match {
-         case None    => atRestById.filter(col("bucket").isin(bks.map(Int.box): _*))
-         case Some(g) => BucketedGens.read(s, byidRoot, g, atRestById, Some(bks))
-       })
+      BucketedGens.read(s, byidRoot, baseBy, atRestById, Some(bks))
         .join(broadcast(ids), Seq("id"), "leftsemi").select("id", "component")
     }
     // CURRENT member rows of a batch-affected component frame (col `component`)
     def membersOf(comps: org.apache.spark.sql.DataFrame,
         bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame = {
       val bks = bksOpt.getOrElse(bucketsOf(comps, "component"))
-      (if (bks.isEmpty) atRestRows.limit(0)
-       else base match {
-         case None    => atRestRows.filter(col("bucket").isin(bks.map(Int.box): _*))
-         case Some(g) => BucketedGens.read(s, labelsRoot, g, atRestRows, Some(bks))
-       })
+      BucketedGens.read(s, labelsRoot, base, atRestRows, Some(bks))
         .join(broadcast(comps), Seq("component"), "leftsemi").select("id", "component")
     }
     // at-rest ORIGINALS of a batch-affected id frame — the staged byid mirror
@@ -2216,12 +2062,7 @@ object DedupQueries {
       .distinct.sorted
     // predecessor content of the touched buckets — consumed once,
     // inside the observed generation write (no pin)
-    val predTouched =
-      if (buckets.isEmpty) atRestRows.limit(0)
-      else base match {
-        case None    => atRestRows.filter(col("bucket").isin(buckets.map(Int.box): _*))
-        case Some(g) => BucketedGens.read(s, labelsRoot, g, atRestRows, Some(buckets))
-      }
+    val predTouched = BucketedGens.read(s, labelsRoot, base, atRestRows, Some(buckets))
     // the byid mirror's generation payload: the SAME affected rows under
     // the doc keying — touched buckets are pmod(affected ids, 16), write
     // I/O O(affected) like the component-keyed write it mirrors.
@@ -2229,12 +2070,7 @@ object DedupQueries {
     // walk/contract pins' observed sets — driver union, no collect
     val byBuckets = (mRebuildBks ++ mContractP.bks("ibk") ++ newLocalP.bks("ibk"))
       .distinct.sorted
-    val predBy =
-      if (byBuckets.isEmpty) atRestById.limit(0)
-      else baseBy match {
-        case None    => atRestById.filter(col("bucket").isin(byBuckets.map(Int.box): _*))
-        case Some(g) => BucketedGens.read(s, byidRoot, g, atRestById, Some(byBuckets))
-      }
+    val predBy = BucketedGens.read(s, byidRoot, baseBy, atRestById, Some(byBuckets))
     // ONE PARALLEL WAVE of the fold's four independent terminal writes
     // (r19, guide §2.6): the labels generation, the byid-mirror
     // generation, and the two O(batch) ledger segments share no paths
@@ -2273,16 +2109,10 @@ object DedupQueries {
     awaitFold(fPairs, "pairs segment append")
     val baseRows = base.map(_.rows).getOrElse(labelRows(s, stateDir))
     val rows = baseRows - predRows + nextRows
-    val owners = base.map(_.owners).getOrElse(BucketedGens.initialOwners(nb)) ++
-      buckets.map(bk => bk -> (if (written(bk)) id else BucketedGens.Empty))
-    BucketedGens.commit(labelsRoot, id, owners, rows, ts)
-    BucketedGens.vacuum(s, labelsRoot, base, id)
+    BucketedGens.commitFold(s, labelsRoot, base, id, nb, buckets, written, rows, ts)
     // committed after the labels generation; a crash between the two
     // commits replays the whole batch (predecessors always pair up)
-    val ownersBy = baseBy.map(_.owners).getOrElse(BucketedGens.initialOwners(nb)) ++
-      byBuckets.map(bk => bk -> (if (writtenBy(bk)) id else BucketedGens.Empty))
-    BucketedGens.commit(byidRoot, id, ownersBy, rows, ts)
-    BucketedGens.vacuum(s, byidRoot, baseBy, id)
+    BucketedGens.commitFold(s, byidRoot, baseBy, id, nb, byBuckets, writtenBy, rows, ts)
     // no per-batch ledger vacuum: segments ACCUMULATE until a
     // compaction truncates the family (that is the trade — O(batch)
     // writes now, one bulk fold when the size policy fires)
@@ -2574,12 +2404,7 @@ object DedupQueries {
     // the at-rest manifest is component-keyed and already carries the
     // same bucket column — it resolves AtRest buckets directly
     def atRestMan = s.read.parquet(s"$survState/manifest")
-    val predTouched =
-      if (manBuckets.isEmpty) atRestMan.limit(0)
-      else baseM match {
-        case None    => atRestMan.filter(col("bucket").isin(manBuckets.map(Int.box): _*))
-        case Some(g) => BucketedGens.read(s, manRoot, g, atRestMan, Some(manBuckets))
-      }
+    val predTouched = BucketedGens.read(s, manRoot, baseM, atRestMan, Some(manBuckets))
     // ONE action: write + per-bucket counts + count arithmetic as
     // observe() metrics (see componentsRetractImpl)
     val (written, nextRows, predRows) = labeled(s, "mfold:manifestWrite")(
@@ -2593,10 +2418,7 @@ object DedupQueries {
     val baseRows = baseM.map(_.rows)
       .getOrElse(manifestRows(s, survState))
     val rows = baseRows - predRows + nextRows
-    val owners = baseM.map(_.owners).getOrElse(BucketedGens.initialOwners(nbM)) ++
-      manBuckets.map(bk => bk -> (if (written(bk)) id else BucketedGens.Empty))
-    BucketedGens.commit(manRoot, id, owners, rows, ts)
-    BucketedGens.vacuum(s, manRoot, baseM, id)
+    BucketedGens.commitFold(s, manRoot, baseM, id, nbM, manBuckets, written, rows, ts)
     rows
   }
 

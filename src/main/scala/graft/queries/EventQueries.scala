@@ -290,6 +290,39 @@ object EventQueries {
     else s.read.parquet(s"$out/rows")
   }
 
+  /** The LEDGER DRAIN every maintained-state fold runs through: stream
+    * the staged input `in` one file per micro-batch into `step(root,
+    * batch, batchId)` under `foreachBatch`, record each batch's returned
+    * row count as that batch's segment in [[graft.streaming.StreamMetrics]]
+    * (keyed by `sinkName` — the SpineProbe fold-cadence and state-bound
+    * gates read it by that name), drain with AvailableNow and record the
+    * query's progress snapshot. `root` is a fresh sink dir registered for
+    * JVM-exit cleanup (the returned frame reads its generations lazily);
+    * the checkpoint lives at `$root/cp`. The staged input's temp parent
+    * is dropped whether or not the drain succeeds; a failing step's
+    * error propagates. Returns `root`. */
+  private[queries] def foldDrain(s: org.apache.spark.sql.SparkSession,
+      in: String, schema: org.apache.spark.sql.types.StructType,
+      sinkName: String)(
+      step: (String, org.apache.spark.sql.DataFrame, Long) => Long): String =
+    try {
+      import org.apache.spark.sql.streaming.Trigger
+      val root = registerSinkDir(
+        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
+      graft.streaming.StreamMetrics.resetSegments(sinkName)
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(in)
+        .writeStream.queryName(sinkName)
+        .option("checkpointLocation", s"$root/cp")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          graft.streaming.StreamMetrics.recordSegment(sinkName, id, step(root, b, id))
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      graft.streaming.StreamMetrics.record(sinkName, q)
+      root
+    } finally dropStaged(in)
+
   /** One side of a typed stream-stream interval join: the event_type-
     * filtered, prefix-renamed, watermarked feed. */
   private def intervalJoinSide(s: org.apache.spark.sql.SparkSession,
@@ -908,29 +941,13 @@ object EventQueries {
     // arrivals were batched.
     QueryDef("q158_stream_agg_refresh", Seq("A5", "R4"),
       dailyRollupSql) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val batch = Tables.events(s0, d)
       val s = streamSession(s0)
-      val sinkName = "graft_stream_agg_refresh"
-      val in = stageRangedDrain(batch, 2, "ts", "graft_sar_")
-      val root = registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = viewMergeStep(root, b, id)
-          // ledger row = the maintained view's size after this merge —
-          // the claim "state = |keys|, flat in stream depth" as data
-          // (footer row counts: a metadata read)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      dropStaged(in)
+      // ledger row = the maintained view's size after each merge — the
+      // claim "state = |keys|, flat in stream depth" as data (footer
+      // row counts: a metadata read)
+      val root = foldDrain(s, stageRangedDrain(batch, 2, "ts", "graft_sar_"),
+        batch.schema, "graft_stream_agg_refresh")(viewMergeStep)
       latestViewGen(root) match {
         case None      => finishDaily(dailyPartial(batch.limit(0)))
         case Some(dir) => finishDaily(s.read.parquet(dir))
@@ -1071,27 +1088,13 @@ object EventQueries {
     // re-insert them) and leave at serve time via dropEmptied.
     QueryDef("q167_stream_cdc_view", Seq("A5", "R4"),
       postCdcRollupSql) { (s0, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val matDir = incrAggBaseDir(s0, d)
       val batch = s0.read.parquet(cdcDeltaDir(s0, d))
       val s = streamSession(s0)
-      val sinkName = "graft_stream_cdc_view"
-      val in = stageRangedDrain(batch, 2, "ts", "graft_scv_")
-      val root = registerSinkDir(
-        java.nio.file.Files.createTempDirectory(s"${sinkName}_").toString)
-      graft.streaming.StreamMetrics.resetSegments(sinkName)
-      val q = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream.queryName(sinkName)
-        .option("checkpointLocation", s"$root/cp")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = cdcViewMergeStep(root, matDir, b, id)
-          graft.streaming.StreamMetrics.recordSegment(sinkName, id, rows)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamMetrics.record(sinkName, q)
-      dropStaged(in)
+      val root = foldDrain(s, stageRangedDrain(batch, 2, "ts", "graft_scv_"),
+          batch.schema, "graft_stream_cdc_view") { (root, b, id) =>
+        cdcViewMergeStep(root, matDir, b, id)
+      }
       val served = latestViewGen(root) match {
         case None      => s.read.parquet(matDir) // no delta arrived: the view IS the base
         case Some(dir) => s.read.parquet(dir)

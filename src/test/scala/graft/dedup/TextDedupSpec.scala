@@ -202,7 +202,7 @@ class TextDedupSpec extends SparkSpec {
       }
       val want = parent.keys.map(v => v -> find(v)).toMap
       val g = graft.queries.BucketedGens.latest(s"$root/labels").get
-      val got = graft.queries.BucketedGens.read(spark, s"$root/labels", g,
+      val got = graft.queries.BucketedGens.read(spark, s"$root/labels", Some(g),
           allEdges.toDF("id_a", "id_b").select(col("id_a").as("id"),
             col("id_b").as("component"), lit(0).cast("int").as("bucket")).limit(0))
         .select("id", "component")
@@ -223,7 +223,7 @@ class TextDedupSpec extends SparkSpec {
     graft.queries.DedupQueries.componentsMergeStep(root, edges((2L, 10L)), 1L) // bridge
     def served: Map[Long, Long] = {
       val g = graft.queries.BucketedGens.latest(s"$root/labels").get
-      graft.queries.BucketedGens.read(spark, s"$root/labels", g,
+      graft.queries.BucketedGens.read(spark, s"$root/labels", Some(g),
           edges().select(col("id_a").as("id"), col("id_b").as("component"),
             lit(0).cast("int").as("bucket")).limit(0))
         .select("id", "component")

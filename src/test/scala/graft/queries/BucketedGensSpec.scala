@@ -54,14 +54,54 @@ class BucketedGensSpec extends SparkSpec {
       BucketedGens.latest(root, below = Some(1L)).get.owners ++
         Map(2 -> BucketedGens.Empty, 3 -> 1L), 3L)
     val g = BucketedGens.latest(root).get
-    val got = BucketedGens.read(spark, root, g, atRest(rest))
+    val got = BucketedGens.read(spark, root, Some(g), atRest(rest))
       .select("id", "component").as[(Long, Long)].collect().toMap
     assert(got == Map(10L -> 0L, 11L -> 5L, 13L -> 7L),
       s"bucket 0 at rest, 1 from gen 0, 2 empty, 3 from gen 1 — got $got")
     // pruned read: only bucket 3 requested → only gen 1 rows
-    val pruned = BucketedGens.read(spark, root, g, atRest(rest), Some(Seq(3)))
+    val pruned = BucketedGens.read(spark, root, Some(g), atRest(rest), Some(Seq(3)))
       .select("id").as[Long].collect().toSet
     assert(pruned == Set(13L))
+  }
+
+  test("read with no committed generation resolves every bucket at rest") {
+    val rest = atRestDir(Seq((10L, 0L), (11L, 1L), (12L, 2L), (13L, 3L)))
+    val root = Files.createTempDirectory("graft_bg_none_").toString
+    def ids(gen: Option[BucketedGens.Gen], only: Option[Seq[Int]]) =
+      BucketedGens.read(spark, root, gen, atRest(rest), only)
+        .select("id").as[Long].collect().toSet
+    assert(ids(None, None) == Set(10L, 11L, 12L, 13L), "None, all buckets: the at-rest frame")
+    assert(ids(None, Some(Nil)).isEmpty, "no buckets asked: empty")
+    assert(ids(None, Some(Seq(1, 3))) == Set(11L, 13L), "exactly the asked at-rest buckets")
+    writeGen(root, 0, Seq((11L, 5L)))
+    BucketedGens.commit(root, 0, BucketedGens.initialOwners(4) + (1 -> 0L), 4L)
+    assert(ids(BucketedGens.latest(root), Some(Nil)).isEmpty,
+      "no buckets asked is empty with a base too")
+  }
+
+  test("commitFold: written → id, touched-unwritten → Empty, untouched keeps its owner; vacuum runs") {
+    import BucketedGens.{AtRest, Empty}
+    val root = Files.createTempDirectory("graft_bg_commitfold_").toString
+    // no base: every untouched bucket stays at rest
+    writeGen(root, 0, Seq((11L, 1L)))
+    BucketedGens.commitFold(spark, root, None, 0L, 4,
+      touched = Seq(1, 2), written = Set(1), rows = 1L)
+    val g0 = BucketedGens.latest(root).get
+    assert(g0.genId == 0L && g0.rows == 1L && g0.ts.isEmpty)
+    assert(g0.owners == Map(0 -> AtRest, 1 -> 0L, 2 -> Empty, 3 -> AtRest), s"${g0.owners}")
+    // with a base: untouched buckets keep the base's owner (gen 0, Empty
+    // or at rest); a torn dir below the new id is the vacuum's to sweep
+    writeGen(root, 2, Seq((13L, 3L))) // parquet only, never committed
+    writeGen(root, 3, Seq((12L, 2L)))
+    BucketedGens.commitFold(spark, root, Some(g0), 3L, 4,
+      touched = Seq(2, 3), written = Set(2), rows = 2L, ts = Some(5000L))
+    val g3 = BucketedGens.latest(root).get
+    assert(g3.genId == 3L && g3.rows == 2L && g3.ts.contains(5000L))
+    assert(g3.owners == Map(0 -> AtRest, 1 -> 0L, 2 -> 3L, 3 -> Empty), s"${g3.owners}")
+    def gens = Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("gen-")).sorted
+    assert(gens == Seq("gen-0", "gen-3"),
+      s"vacuum sweeps the torn gen-2 and keeps gen-0 (owns bucket 1): $gens")
   }
 
   test("vacuum keeps the replay window and every generation still owning a bucket") {
@@ -89,7 +129,7 @@ class BucketedGensSpec extends SparkSpec {
     // gen-0 survives until a base stops referencing it
     assert(gens.contains("gen-2") && gens.contains("gen-3"))
     val g = BucketedGens.latest(root).get
-    val got = BucketedGens.read(spark, root, g, atRest(rest))
+    val got = BucketedGens.read(spark, root, Some(g), atRest(rest))
       .select("id", "component").as[(Long, Long)].collect().toMap
     assert(got == Map(10L -> 0L, 11L -> 1L, 12L -> 2L))
   }
@@ -129,7 +169,7 @@ class BucketedGensSpec extends SparkSpec {
       pins = Set(1L))
     assert(gens(root) == Seq("gen-0", "gen-1", "gen-2", "gen-3"), s"got ${gens(root)}")
     val g1 = BucketedGens.latest(root, below = Some(2L)).get
-    val got = BucketedGens.read(spark, root, g1, atRest(rest))
+    val got = BucketedGens.read(spark, root, Some(g1), atRest(rest))
       .select("id", "component").as[(Long, Long)].collect().toMap
     assert(got == Map(10L -> 0L, 11L -> 5L, 12L -> 6L, 13L -> 3L),
       s"the pinned snapshot must resolve through its own owners: $got")
@@ -198,7 +238,7 @@ class BucketedGensSpec extends SparkSpec {
     }
     def state(g: Long): (Map[Int, Long], Map[Long, Long]) = {
       val gen = BucketedGens.latest(s"$root/labels", below = Some(g + 1)).get
-      val rows = BucketedGens.read(spark, s"$root/labels", gen,
+      val rows = BucketedGens.read(spark, s"$root/labels", Some(gen),
           spark.read.parquet(s"$dir/labels")
             .select(col("id"), col("component"), col("component").as("orig"), col("bucket")))
         .select("id", "component").as[(Long, Long)].collect().toMap

@@ -42,7 +42,7 @@ class ClusterRetractionSpec extends SparkSpec {
     val stateDir = EventQueries.latestViewGen(s"$root/state", below = Some(g + 1))
       .getOrElse(dir)
     val gen = BucketedGens.latest(s"$root/labels", below = Some(g + 1)).get
-    BucketedGens.read(spark, s"$root/labels", gen,
+    BucketedGens.read(spark, s"$root/labels", Some(gen),
         spark.read.parquet(s"$stateDir/labels")
           .select(col("id"), col("component"), col("bucket")))
       .select("id", "component").as[(Long, Long)].collect().toMap
@@ -53,7 +53,7 @@ class ClusterRetractionSpec extends SparkSpec {
     val stateDir = EventQueries.latestViewGen(s"$root/state", below = Some(g + 1))
       .getOrElse(sdir)
     val gen = BucketedGens.latest(s"$root/manifest", below = Some(g + 1)).get
-    BucketedGens.read(spark, s"$root/manifest", gen,
+    BucketedGens.read(spark, s"$root/manifest", Some(gen),
         spark.read.parquet(s"$stateDir/manifest"))
       .select("component", "survivor_id", "n_members", "quality")
       .as[(Long, Long, Long, Double)].collect()
@@ -673,7 +673,7 @@ class ClusterRetractionSpec extends SparkSpec {
     // (atRestLabelGenRows' contract: orig == component at rest)
     def labelsNow(g: Long): Map[Long, Long] = {
       val gen = BucketedGens.latest(s"$root/labels", below = Some(g + 1)).get
-      BucketedGens.read(spark, s"$root/labels", gen,
+      BucketedGens.read(spark, s"$root/labels", Some(gen),
           spark.read.parquet(s"$dir/labels")
             .select(col("id"), col("component"),
               col("component").as("orig"), col("bucket")))

@@ -211,7 +211,7 @@ class StateLayerSpec extends SparkSpec {
     assert(rows == 4L)
     val g = BucketedGens.latest(s"$root/cc/labels").get
     assert(g.genId == 1L && g.rows == 4L)
-    val labels = BucketedGens.read(spark, s"$root/cc/labels", g,
+    val labels = BucketedGens.read(spark, s"$root/cc/labels", Some(g),
         Seq.empty[(Long, Long, Int)].toDF("id", "component", "bucket"))
       .select(col("id"), col("component")).as[(Long, Long)].collect().toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L))
