@@ -26,7 +26,7 @@ for line in open("SURVEY.md"):
 covers = collections.defaultdict(list)
 for f in sorted(glob.glob("src/main/scala/graft/queries/*.scala")):
     src = open(f).read()
-    for m in re.finditer(r'QueryDef(?:\.noOracle)?\("(q\d+_\w+)",\s*Seq\(([^)]*)\)', src):
+    for m in re.finditer(r'QueryDef\("(q\d+_\w+)",\s*Seq\(([^)]*)\)', src):
         name = m.group(1)
         for i in re.findall(r'"([A-Z]+\d+)"', m.group(2)):
             covers[i].append(name)

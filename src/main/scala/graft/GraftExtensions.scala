@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{CosineSim, MinGramMd5Hex, MinHashBandsExpr, OsaDistance, SimHashMd5, WinnowFingerprints}
 
 /** The engine's custom SQL function surface, defined once and injected by
-  * both registration routes (GraftExtensions / GraftFunctions.register). */
+  * [[GraftExtensions]]. */
 object GraftFunctionDefs {
 
   private def litInt(e: Expression, arg: String): Int = e match {
@@ -55,8 +55,8 @@ object GraftFunctionDefs {
   *
   * — so SQL-only users (JDBC/thrift server, notebook SQL cells) get the
   * same function surface as DataFrame users without any driver-side
-  * registration call. `GraftFunctions.register` is the per-session
-  * programmatic alternative; both inject `GraftFunctionDefs.all`.
+  * registration call. Every [[GraftSession]] installs it and refuses a
+  * session without it, so this is the one route for `GraftFunctionDefs.all`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

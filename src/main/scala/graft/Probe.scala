@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
 /** Per-query drill-down behind Bench's one-line totals. Each named query
   * is warmed and timed exactly as Bench does it (warm dir, then 3 runs
@@ -14,14 +16,87 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *     `logOffset` trail from StreamMetrics — WAL and state commits run
   *     between jobs, so only this view decomposes a micro-batch.
   *
+  * [[metered]] is the one listener every runner reads its job and task
+  * numbers from; [[bestOf]] is the min-of-n timer over it.
+  *
   * Usage: runMain graft.Probe <query[,query...]> [sfDir] [spark.conf=v ...]
   *   sfDir defaults to Bench's `SPARK_GRAFT_SF_DIR`.
   */
 object Probe {
-  private final case class J(id: Int, start: Long, tasks: Int, site: String,
-      var end: Long = -1L) {
+  /** One completed Spark job: ids and times as the scheduler reports
+    * them, `site` the job description (the fold steps' `labeled` text)
+    * or else the short call site. */
+  final case class Job(id: Int, start: Long, end: Long, tasks: Int, site: String) {
     def secs: Double = (end - start) / 1e3
   }
+
+  /** One finished task's duration and the bytes it read and shuffled. */
+  final case class Task(durationMs: Long, inputBytes: Long,
+      shuffleRecords: Long, shuffleBytes: Long)
+
+  /** What [[metered]] saw while `value` was computed in `sec` seconds:
+    * the jobs that completed, in start order, and every finished task. */
+  final case class Metered[T](value: T, sec: Double, jobs: Seq[Job], tasks: Seq[Task]) {
+    def inputBytes: Long = tasks.map(_.inputBytes).sum
+    def shuffleRecords: Long = tasks.map(_.shuffleRecords).sum
+    def shuffleBytes: Long = tasks.map(_.shuffleBytes).sum
+    def maxTaskMs: Long = if (tasks.isEmpty) 0L else tasks.map(_.durationMs).max
+    def p50TaskMs: Long =
+      if (tasks.isEmpty) 0L else tasks.map(_.durationMs).sorted.apply(tasks.size / 2)
+  }
+
+  /** Run `body` under a listener of its own and return its value, wall
+    * time, jobs and tasks. The listener bus is async: it is drained
+    * before the listener joins, so no earlier event lands in this meter,
+    * and again before it leaves, so every event `body` caused does. A
+    * fixed sleep or a "counter stopped moving" poll instead undercounts
+    * whenever the bus stalls past one interval on a loaded host — and the
+    * straggler task a skew arm exists to show is by construction the
+    * last event to arrive. */
+  def metered[T](sc: SparkContext)(body: => T): Metered[T] = {
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Task]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val site = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))
+            .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
+        starts.put(e.jobId, Job(e.jobId, e.time, -1L, e.stageInfos.map(_.numTasks).sum, site))
+        ()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(starts.remove(e.jobId)).foreach(j => jobs.add(j.copy(end = e.time)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val m = Option(e.taskMetrics)
+        tasks.add(Task(Option(e.taskInfo).map(_.duration).getOrElse(0L),
+          m.map(_.inputMetrics.bytesRead).getOrElse(0L),
+          m.map(_.shuffleWriteMetrics.recordsWritten).getOrElse(0L),
+          m.map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L)))
+        ()
+      }
+    }
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val value = body
+      val sec = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
+      import scala.jdk.CollectionConverters._
+      Metered(value, sec, jobs.asScala.toSeq.sortBy(_.start), tasks.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Best of `n` metered runs of `body`, each after a GC settle: earlier
+    * work leaves old-gen debt that can double a single run. The value,
+    * jobs and tasks returned are those of the run that set the minimum
+    * wall, so a plan read from the value is the plan that was timed. */
+  def bestOf[T](spark: SparkSession, n: Int)(body: => T): Metered[T] =
+    (1 to n).map { _ =>
+      System.gc()
+      metered(spark.sparkContext)(body)
+    }.minBy(_.sec)
 
   private val usage =
     "usage: runMain graft.Probe <query[,query...]> [sfDir] [spark.conf=v ...]"
@@ -45,21 +120,7 @@ object Probe {
     val spark = confs.foldLeft(GraftSession.builder()) { case (b, (k, v)) =>
       b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    sc.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))
-            .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
-        jobs.put(e.jobId, J(e.jobId, e.time, e.stageInfos.map(_.numTasks).sum, site))
-        ()
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        Option(jobs.get(e.jobId)).foreach(_.end = e.time)
-    })
     import graft.streaming.StreamMetrics
-    import scala.jdk.CollectionConverters._
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       // every drain run re-records its sink, so a sink whose trail is
@@ -69,18 +130,13 @@ object Probe {
         try fn(spark, wd).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => println(s"[warm] $name failed: ${e.getMessage}") }
       }
-      // the bus is drained before each run and after it, so the map
-      // holds exactly the jobs the run started
       val runs = (1 to 3).map { i =>
-        org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
-        jobs.clear()
-        val wall = Bench.trial(spark, name, fn(spark, sfDir))
-        org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
-        val done = jobs.values.asScala.toSeq.filter(_.end > 0).sortBy(_.start)
-        val total = done.map(_.secs).sum
-        println(f"[probe] $name run$i wall=$wall%.2f s, jobs=${done.size}, " +
+        val run = metered(spark.sparkContext)(Bench.trial(spark, name, fn(spark, sfDir)))
+        val wall = run.value
+        val total = run.jobs.map(_.secs).sum
+        println(f"[probe] $name run$i wall=$wall%.2f s, jobs=${run.jobs.size}, " +
           f"sum(job)=$total%.2f s, driver-gap=${wall - total}%.2f s")
-        (wall, done)
+        (wall, run.jobs)
       }
       val walls = runs.map(_._1).sorted
       println(f"[probe] $name min=${walls.head}%.3f med=${walls(1)}%.3f max=${walls.last}%.3f")

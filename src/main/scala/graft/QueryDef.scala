@@ -21,10 +21,4 @@ object QueryDef {
   def apply(name: String, covers: Seq[String], oracle: String)(
       build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle), covers)
-
-  /** For ops with no faithful ANSI-SQL equivalent (driver falls back to a
-    * rows-only check). */
-  def noOracle(name: String, covers: Seq[String])(
-      build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, build, None, covers)
 }

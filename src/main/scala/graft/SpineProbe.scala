@@ -1,12 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import graft.Probe.Metered
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale probe for the MULTI-STAGE queries: materializes a scaled copy
-  * of the fact tables they read and times each query at 1× and N×,
-  * printing one JSON line per measurement (ScaleProbe methodology: min
-  * of 2 runs, GC settling).
+/** The scale gates, one exit-coded protocol for every family: each check
+  * prints one `{"gate":…,"ok":…}` line, measurements print as
+  * `{"probe":…}` lines beside them, and any false gate makes the run
+  * exit 1 with the failed gate names on stderr. A leading family word
+  * selects the family; without one the run is the spine sweep.
+  *
+  * Spine sweep: materializes a scaled copy of the fact tables the
+  * MULTI-STAGE queries read and times each query at 1× and N× (min of
+  * 2 runs, GC settling), gating plan shape, state and ledger bounds.
   *
   * The scaled tables are built by key-offset unions — ⌊N⌋-1 full copies
   * plus (for fractional N) a KEY-RANGE half copy (`key ≤ max/2`). The
@@ -22,15 +28,52 @@ import org.apache.spark.sql.functions._
   * `doc_id DIV 50`, so its offset just needs to be a bin-width multiple
   * past the max id. `nation` stays 1× (dimension).
   *
-  * Usage: runMain graft.SpineProbe [sfDir] [factor]
-  *   factor 2.5 (default) → the per-round 2.5× sweep over the full list;
-  *   factor 10 → the decade probe over the q94/q106/q112/q114 spine
-  *   family (sf0.1 × 10 ≈ sf1), which cuts the 2.5×→100 TB
-  *   extrapolation by one decade of measurement.
-  * Exits 1, naming the failed gates on stderr, if any gate read false.
+  * Usage:
+  *   runMain graft.SpineProbe [sfDir] [factor] [query,...]
+  *     factor 2.5 (default) → the per-round 2.5× sweep over the full
+  *     list; factor 10 → the decade probe over the spine family (sf0.1
+  *     × 10 ≈ sf1), which cuts the 2.5×→100 TB extrapolation by one
+  *     decade of measurement. The query list filters queries and the
+  *     staging and gate families they need.
+  *   runMain graft.SpineProbe skew [sfDir] [hotFrac]   — [[skew]]
+  *   runMain graft.SpineProbe bloom [sfDir]            — [[bloom]]
+  *   runMain graft.SpineProbe scale [nDocs] [nVecs]    — [[scale]]
   */
 object SpineProbe {
-  def main(args: Array[String]): Unit = {
+  /** The pass/fail protocol: one JSON line per check; `evidence` (a
+    * plan, say) goes to stderr only when the check fails. */
+  final class Gates {
+    private val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def apply(name: String, ok: Boolean, detail: String, evidence: => String = ""): Unit = {
+      if (!ok) {
+        failed += name
+        if (evidence.nonEmpty) System.err.println(s"[$name] failed on:\n$evidence")
+      }
+      println(s"""{"gate":"$name","ok":$ok,"detail":"$detail"}""")
+    }
+    /** Stop the session; exit 1, naming the failed gates, if any failed. */
+    def finish(spark: SparkSession): Unit = {
+      spark.stop()
+      if (failed.nonEmpty) {
+        System.err.println(s"[spine] ${failed.size} gate(s) failed: ${failed.mkString(", ")}")
+        sys.exit(1)
+      }
+    }
+  }
+
+  /** `base` and n-1 copies of it with `key` shifted by c·off (copy c);
+    * copy 0 is `base` untouched. */
+  def offsetCopies(base: DataFrame, key: String, off: Long, n: Int): Seq[DataFrame] =
+    (0 until n).map(c => if (c == 0) base else base.withColumn(key, col(key) + c * off))
+
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("skew") => skew(args.tail)
+    case Some("bloom") => bloom(args.tail)
+    case Some("scale") => scale(args.tail)
+    case _ => spine(args)
+  }
+
+  private def spine(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toDouble).getOrElse(2.5)
     require(factor >= 1, s"scale factor must be >= 1, got $factor")
@@ -46,12 +89,7 @@ object SpineProbe {
       .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // every pass/fail line goes through gate(); a false one fails the run
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    def gate(name: String, ok: Boolean, detail: String): Unit = {
-      if (!ok) failed += name
-      println(s"""{"gate":"$name","ok":$ok,"detail":"$detail"}""")
-    }
+    val gate = new Gates
 
     val scaled = s"${System.getProperty("java.io.tmpdir")}/graft_spine_probe_$tag"
     val ordersOff = 4564560L // 2^4·3·5·7·11·13·19: > max key, ≡0 mod every k- and 4·m-modulus
@@ -61,14 +99,13 @@ object SpineProbe {
       * applied per copy index (0 = the base, untouched). */
     def scaleUnion(base: DataFrame, key: String, off: Long,
         mutate: (DataFrame, Int) => DataFrame = (df, _) => df): DataFrame = {
-      val half = base.agg(max(col(key)).cast("long")).head().getLong(0) / 2
-      val copies = (0 to fullCopies).map { c =>
-        if (c == 0) base else mutate(base.withColumn(key, col(key) + c * off), c)
-      }
+      val copies = offsetCopies(base, key, off, fullCopies + 1).zipWithIndex
+        .map { case (df, c) => if (c == 0) df else mutate(df, c) }
       val withHalf =
         if (!halfCopy) copies
         else {
           val c = fullCopies + 1
+          val half = base.agg(max(col(key)).cast("long")).head().getLong(0) / 2
           // contiguous key RANGE (not parity): whole id-groups survive,
           // so this adds ~half the groups at full per-group membership
           copies :+ mutate(base.filter(col(key) <= half)
@@ -369,17 +406,12 @@ object SpineProbe {
     }
 
     def time(name: String, fn: => DataFrame): Unit = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 2) {
+      val best = Probe.bestOf(spark, 2) {
         spark.sharedState.cacheManager.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
         fn.write.format("noop").mode("overwrite").save() // materializes every column
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (sec < best) best = sec
       }
       val rows = fn.count() // outside the timer — result-size sanity only
-      println(s"""{"probe":"$name","sec":${math.round(best * 100) / 100.0},"rows":$rows}""")
+      println(s"""{"probe":"$name","sec":${math.round(best.sec * 100) / 100.0},"rows":$rows}""")
     }
 
     // Streaming queries run their whole drain INSIDE build() and return
@@ -570,7 +602,7 @@ object SpineProbe {
         val ok = !pN.contains("CartesianProduct") &&
           pN.contains("SortMergeJoin") == p1.contains("SortMergeJoin") &&
           shuffles(pN) == shuffles(p1)
-        gate(s"${q}_plan_$tag", ok, s"shuffles=${shuffles(pN)}")
+        gate(s"${q}_plan_$tag", ok, s"shuffles=${shuffles(pN)}", pN)
       }
     }
 
@@ -655,26 +687,8 @@ object SpineProbe {
       // copies share simhashes and would merge cross-copy cliques,
       // growing the affected set itself — a data effect, not an
       // architecture one).
-      def meteredBytes(body: => Unit): Long = {
-        val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (e.taskMetrics != null) {
-              bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); ()
-            }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          body
-          // the listener bus is async — drain it (not a fixed sleep
-          // poll, which undercounts when the bus stalls past one
-          // interval on a loaded host)
-          org.apache.spark.GraftListenerBridge
-            .waitListenerBusEmpty(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        bytes.get
-      }
+      def meteredBytes(body: => Unit): Long =
+        Probe.metered(spark.sparkContext)(body).inputBytes
       def labelFoldBytes(dir: String, nb: Int, batch: DataFrame): Long = {
         val st = graft.queries.DedupQueries.ccGateStateDir(spark, dir, nb)
         val root = java.nio.file.Files
@@ -858,10 +872,490 @@ object SpineProbe {
       }
       }
     }
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"[spine] ${failed.size} gate(s) failed: ${failed.mkString(", ")}")
-      sys.exit(1)
+    gate.finish(spark)
+  }
+
+  /** An off or on arm: its best run, valued at the frame it ran and its
+    * row count. */
+  private type Arm = Metered[(DataFrame, Int)]
+
+  /** Warm once, then time `df` with the boolean conf `conf` false (the
+    * off arm) and true (the on arm), best of 3 each. Each run
+    * `collect()`s — a noop write or `count()` builds its OWN
+    * QueryExecution and leaves df's adaptive plan unexecuted, so its
+    * plan would show none of the runtime rewrites the gates read. Each
+    * arm's value is the frame that set its best wall and its row count. */
+  private def arms(spark: SparkSession, conf: String)(df: => DataFrame): (Arm, Arm) = {
+    def arm(on: Boolean) = {
+      spark.conf.set(conf, on.toString)
+      Probe.bestOf(spark, 3) { val d = df; (d, d.collect().length) }
     }
+    arm(on = false) // warm IO + codegen before either timed arm
+    (arm(on = false), arm(on = true))
+  }
+
+  private def plan(arm: Arm): String =
+    arm.value._1.queryExecution.executedPlan.toString
+
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+
+  /** AQE's runtime skew-join split against the same join run with the
+    * splitter disabled — the "let the optimizer handle it" counterpart
+    * to q60's manual salting (SCALING.md "Knobs that change at cluster
+    * scale" and "the hot-cell straggler").
+    *
+    * Join fixture: a sort-merge join where `hotFrac` of the fact rows
+    * carry ONE join key (the q60 shape). With a hash shuffle that key
+    * lands in a single reduce task: the stage's wall-clock is that task,
+    * and the other cores idle. AQE's OptimizeSkewedJoin splits the
+    * oversized partition into advisory-sized slices at RUNTIME (both
+    * sides of a SMJ can replay the matching range), which salting
+    * achieves only by rewriting the query. Salting stays necessary where
+    * AQE cannot reach: skewed AGGREGATION keys (no join to split) and
+    * broadcast-ineligible skew under non-equi conditions.
+    *
+    * Hot-cell fixture: SemDeDup's within-cell pair join with `hotFrac`
+    * of the vectors constructed into ONE cell (rest uniform over 256 —
+    * the skew mechanism is quantizer-independent, and bypassing training
+    * isolates the join-side straggler). The pair join is an equi-join on
+    * cid, so the runtime split slices one side of the hot partition and
+    * replicates the matching partition of the other per slice: every
+    * within-cell pair is still produced exactly once, and the quadratic
+    * work spreads over many tasks instead of one.
+    *
+    * Gates: each on arm's executed plan carries an `AQEShuffleRead
+    * skewed` node and its off arm's none; for the hot cell also the on
+    * arm's largest task is shorter than the off arm's. The wall-time
+    * speed-ups print but are not gated: their recorded values were
+    * measured at local[32], and the ratio depends on the core count. */
+  private def skew(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.3)
+    val spark = GraftSession.builder()
+      // force the sort-merge path: skew split only applies to SMJ, and
+      // a broadcast would hide the skew entirely (which is itself the
+      // first-line fix when the dim side fits)
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+      .config("spark.sql.adaptive.enabled", "true")
+      // bench-scale thresholds: the hot partition is MBs here, where at
+      // 100 TB the 256 MB production default triggers by itself — the
+      // knob moves, the mechanism is identical
+      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
+      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+      // keep AQE from ALSO coalescing the comparison away
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val gate = new Gates
+    val splitter = "spark.sql.adaptive.skewJoin.enabled"
+    def skewReads(arm: Arm) =
+      plan(arm).linesIterator.count(_.trim.endsWith("AQEShuffleRead skewed"))
+    val hot = lit((hotFrac * 1000).toInt)
+
+    // q60's skew shape from lineitem ×8 (copies shift l_orderkey so the
+    // non-hot key space replicates): hotFrac of rows on key 0, the rest
+    // uniform over 10k keys; the hot partition must clear the (lowered)
+    // threshold by a wide margin
+    val fact = offsetCopies(spark.read.parquet(s"$sfDir/lineitem.parquet"),
+        "l_orderkey", 4564560L, 8)
+      .reduce(_ unionByName _)
+      .select(
+        when(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(1000)) < hot, 0L)
+          .otherwise(pmod(hash(col("l_partkey")), lit(10000)).cast("long") + 1L)
+          .as("k"),
+        col("l_extendedprice"), col("l_quantity"),
+        col("l_returnflag"), col("l_shipdate"))
+    val dim = spark.range(10001).select(col("id").as("k"),
+      (col("id") % 97).cast("double").as("rate"))
+    val (joinOff, joinOn) = arms(spark, splitter)(fact.join(dim, "k")
+      .select(sum(col("l_extendedprice") * col("rate")).as("s"),
+        count(lit(1)).as("n")))
+    val (joinOffReads, joinOnReads) = (skewReads(joinOff), skewReads(joinOn))
+    println(s"""{"probe":"skew_join_off","sec":${r2(joinOff.sec)},"skewed_reads":$joinOffReads}""")
+    println(s"""{"probe":"skew_join_on","sec":${r2(joinOn.sec)},"skewed_reads":$joinOnReads,"speedup":${r2(joinOff.sec / joinOn.sec)}}""")
+    gate("skew_join_split", joinOnReads >= 1 && joinOffReads == 0,
+      s"skewed_reads off=$joinOffReads on=$joinOnReads",
+      s"off arm:\n${plan(joinOff)}\non arm:\n${plan(joinOn)}")
+
+    // ×16 key-offset copies of the embeddings: enough rows that the hot
+    // cell's partition clears the (lowered) skew threshold the way a
+    // production hot cell clears the 256 MB default
+    val cells = offsetCopies(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+        "vec_id", 1000000L, 16)
+      .reduce(_ unionByName _)
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("__v"),
+        when(pmod(hash(col("vec_id")), lit(1000)) < hot, 0L)
+          .otherwise(pmod(hash(col("vec_id") + 7), lit(256)).cast("long") + 1L)
+          .as("cid"))
+      .localCheckpoint() // both pair sides + the anti spine read ONE materialization
+    val (cellOff, cellOn) = arms(spark, splitter)(
+      graft.dedup.SemDedup.semanticDedupOnCells(cells, tau = 0.3))
+    // the straggler shows as task max ≫ p50 in the off arm and collapses
+    // toward p50 in the on arm
+    val (cellOffReads, cellOnReads) = (skewReads(cellOff), skewReads(cellOn))
+    println(s"""{"probe":"semdedup_hot_cell_off","sec":${r2(cellOff.sec)},"task_p50_ms":${cellOff.p50TaskMs},"task_max_ms":${cellOff.maxTaskMs},"skewed_reads":$cellOffReads}""")
+    println(s"""{"probe":"semdedup_hot_cell_on","sec":${r2(cellOn.sec)},"task_p50_ms":${cellOn.p50TaskMs},"task_max_ms":${cellOn.maxTaskMs},"skewed_reads":$cellOnReads,"speedup":${r2(cellOff.sec / cellOn.sec)}}""")
+    gate("semdedup_hot_cell_split",
+      cellOnReads >= 1 && cellOffReads == 0 &&
+        cellOn.maxTaskMs < cellOff.maxTaskMs &&
+        cellOn.value._2 > 0 && cellOn.value._2 == cellOff.value._2,
+      s"skewed_reads off=$cellOffReads on=$cellOnReads " +
+        s"task_max_ms off=${cellOff.maxTaskMs} on=${cellOn.maxTaskMs} " +
+        s"survivors off=${cellOff.value._2} on=${cellOn.value._2}",
+      s"off arm:\n${plan(cellOff)}\non arm:\n${plan(cellOn)}")
+    gate.finish(spark)
+  }
+
+  /** Spark's RUNTIME BLOOM-FILTER join reduction
+    * (`spark.sql.optimizer.runtime.bloomFilter.enabled`) — the
+    * shuffle-reduction lever for the 100 TB case the engine's broadcast
+    * discipline cannot reach: BOTH join sides too big to broadcast, the
+    * dim side selectively filtered on columns the fact side cannot see.
+    * The optimizer builds a Bloom filter over the FILTERED creation
+    * side's join keys and injects a `might_contain` filter above the
+    * fact scan, so non-matching fact rows die before the exchange
+    * instead of after the sort-merge.
+    *
+    * Gates: the on arm's executed plan carries `might_contain` and the
+    * off arm's does not, and the on arm writes fewer shuffle records.
+    * Wall time prints but is not gated: at bench scale the filter build
+    * costs about what a local 600k-row shuffle saves (SCALING.md). */
+  private def bloom(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val spark = GraftSession.builder()
+      // the scenario IS "neither side broadcasts" — at 100 TB the
+      // filtered dim is GBs; locally we force the shuffle path
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // bench-scale application threshold: the 10 GB default expects a
+      // cluster-scale fact scan, and at 100 TB triggers by itself
+      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "10MB")
+      // without CBO, Filter stats fall back to the CHILD's sizeInBytes,
+      // so the filtered dim is "sized" as the whole table and the
+      // default 10 MB creation threshold rejects the filter the planner
+      // would build from 4.8k actual rows — raise it; at cluster scale
+      // the same estimate gap is why CBO stats (ANALYZE) earn their
+      // keep on dimension tables
+      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val gate = new Gates
+
+    // Both sides are SINGLE scans: InjectRuntimeFilter only accepts a
+    // creation side that is a selective Filter directly over a scan (a
+    // union of key-offset copies breaks the shape).
+    val fact = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select("l_orderkey", "l_extendedprice", "l_quantity")
+    // dim: orders SELECTIVELY filtered — ~0.2% survive (priority ∧ low
+    // total). Both predicates are deliberately on NON-KEY columns: a
+    // predicate on the join key itself gets inferred onto the fact side
+    // STATICALLY by constraint propagation, and measuring it here would
+    // credit the Bloom with the optimizer's static win.
+    val dim = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") < 6000)
+      .select("o_orderkey", "o_totalprice")
+    val (off, on) = arms(spark, "spark.sql.optimizer.runtime.bloomFilter.enabled")(
+      fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+        .select(sum(col("l_extendedprice") * col("l_quantity")).as("s"),
+          count(lit(1)).as("n")))
+    def bloomNodes(arm: Arm) =
+      plan(arm).linesIterator.count(_.toLowerCase.contains("might_contain"))
+    val (offNodes, onNodes) = (bloomNodes(off), bloomNodes(on))
+    // shuffle records come from task metrics: the exchanges hide inside
+    // AQE query stages, task metrics see every shuffle write
+    println(s"""{"probe":"runtime_bloom_off","sec":${r2(off.sec)},"shuffle_records":${off.shuffleRecords},"might_contain_nodes":$offNodes}""")
+    println(s"""{"probe":"runtime_bloom_on","sec":${r2(on.sec)},"shuffle_records":${on.shuffleRecords},"might_contain_nodes":$onNodes,"speedup":${r2(off.sec / on.sec)},"records_ratio":${r2(off.shuffleRecords.toDouble / math.max(on.shuffleRecords, 1))}}""")
+    gate("runtime_bloom_might_contain", onNodes >= 1 && offNodes == 0,
+      s"might_contain_nodes off=$offNodes on=$onNodes",
+      s"off arm:\n${plan(off)}\non arm:\n${plan(on)}")
+    gate("runtime_bloom_shuffle_records_cut", on.shuffleRecords < off.shuffleRecords,
+      s"shuffle_records off=${off.shuffleRecords} on=${on.shuffleRecords}")
+    gate.finish(spark)
+  }
+
+  /** The quadratic-risk operators at 40-67× bench scale: a deterministic
+    * synthetic corpus far larger than the bench tables, with planted
+    * duplicates — every 50th doc/vector (id ≡ 1 mod 50) copies its
+    * predecessor — so each dedup and ANN output has an exact expected
+    * value at any nDocs/nVecs. Each such output is a gate; walls, growth
+    * ratios and the outputs with no closed form print as measurements
+    * (their SCALING.md values come from one host at local[32], so no
+    * bound can be stated from them). */
+  private def scale(args: Array[String]): Unit = {
+    val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
+    val nVecs = args.lift(1).map(_.toInt).getOrElse(50000)
+    val spark = GraftSession.builder()
+      // the recorded SCALING.md timings were taken at 32 shuffle
+      // partitions, whatever the core count
+      .config("spark.sql.shuffle.partitions", "32")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val gate = new Gates
+    import graft.ann.Knn
+    import graft.dedup.TextDedup
+    import graft.functions.VectorFns
+    /** ids below n that are ≡ 1 mod `every` — the planted copies of
+      * their predecessors (n/every when every divides n) */
+    def planted(n: Long, every: Int): Long = (n + every - 2) / every
+    def exact(name: String, got: Long, want: Long): Unit =
+      gate(s"scale_$name", got == want, s"got=$got want=$want")
+
+    def time[T](name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      println(s"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9},"result":"$r"}""")
+      r
+    }
+
+    // synthetic docs: ~12 words drawn deterministically from id hashes;
+    // every 50th doc duplicates its predecessor (planted near-dups)
+    val docs = spark.range(nDocs)
+      .withColumn("base", when(col("id") % 50 === 1, col("id") - 1).otherwise(col("id")))
+      .withColumn("text",
+        concat_ws(" ", (0 until 12).map(i =>
+          substring(md5(concat(col("base"), lit(s"w$i"))), 1, 6)): _*))
+      .select("id", "text")
+      .cache()
+    docs.count()
+
+    exact("exact_dedup_survivors",
+      time("exact_dedup")(TextDedup.exactDedup(docs.toDF(), "text", "id").count()),
+      nDocs - planted(nDocs, 50))
+    time("minhash_lsh_pairs") {
+      val bands = TextDedup.minHashBands(docs.toDF(), "text", 8, 8)
+      TextDedup.lshCandidatePairs(bands, "id").count()
+    }
+    time("incremental_dedup") {
+      // daily-increment shape: ~1% batch vs the rest as history; the
+      // history side must stream once with no shuffle (see SCALING.md)
+      TextDedup.incrementalDupFlags(
+        docs.filter(col("id") % 100 =!= 0).toDF(),
+        docs.filter(col("id") % 100 === 0).toDF(),
+        "text", "id", 8, 4)
+        .filter(col("dup_in_history")).count()
+    }
+    time("simhash")(docs.select(TextDedup.simHash32(col("text"))).count())
+    exact("simhash_neardup_members",
+      time("simhash_neardup_components") {
+        // full near-dup path at scale: 60-bit sigs -> banded pairs -> clusters
+        val sig = docs.select(col("id"),
+          TextDedup.simHashN(col("text"), 60).as("simhash"))
+        val pairs = TextDedup.simHashNearDup(sig, "id", "simhash", 3)
+        graft.dedup.Components.connectedComponents(pairs, "id_a", "id_b").count()
+      },
+      2 * planted(nDocs, 50))
+
+    // top-k-per-key at scale: the same row_number()<=k query through the
+    // stock Spark plan (rewrite off: WindowGroupLimit + two full
+    // partition sorts) vs the BoundedTopK aggregate (rewrite on: O(n
+    // log k) heap, no sort) — the 100 TB argument for
+    // RewriteRankFilterToTopK, measured. nDocs*25 rows in 8 input
+    // partitions (NOT one per thread): the rewrite's win is the
+    // eliminated per-partition sort, so rows-per-partition is the scale
+    // variable — cluster tasks run millions of rows, not thousands.
+    locally {
+      import org.apache.spark.sql.expressions.Window
+      val rows = spark.range(0L, nDocs.toLong * 25, 1L, 8)
+        .withColumn("grp", col("id") % (nDocs / 200))
+        .withColumn("score",
+          conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10).cast("long"))
+      val w = Window.partitionBy("grp").orderBy(col("score").desc, col("id"))
+      def top5 = rows.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 5).drop("rn")
+      // shuffle bytes are reported as a sanity check that BOTH forms
+      // bound what crosses the exchange (~k rows per group × map
+      // partition): stock Spark 4 inserts a Partial WindowGroupLimit
+      // below the exchange, so shuffle volume is NOT where the rewrite
+      // wins — the eliminated full partition sorts are (see SCALING.md).
+      def measured(name: String): Long = {
+        val best = Probe.bestOf(spark, 2)(top5.count())
+        println(s"""{"probe":"$name","sec":${best.sec},""" +
+          s""""shuffle_mb":${best.shuffleBytes / 1048576.0},"result":"${best.value}"}""")
+        best.value
+      }
+      spark.conf.set("spark.graft.topk.rewrite.enabled", "false")
+      val window = measured("topk_window_sort")
+      spark.conf.set("spark.graft.topk.rewrite.enabled", "true")
+      exact("topk_bounded_agg_eq_window", measured("topk_bounded_agg"), window)
+    }
+
+    val vecs = spark.range(nVecs)
+      .withColumn("embedding", array((0 until 64).map(i =>
+        (conv(substring(md5(concat(col("id"), lit(i))), 1, 6), 16, 10).cast("float") / 8388608f) - 1f): _*))
+      .select(col("id").as("vec_id"), col("embedding"))
+      .cache()
+    vecs.count()
+    exact("ann_lsh_top3_rows",
+      time("ann_lsh_top3")(
+        Knn.lshTopK(vecs, vecs.filter(col("vec_id") < 20), "vec_id", "embedding", 3, 8).count()),
+      20 * 3)
+
+    // The pair-stage FLOP cut in isolation: ~nVecs × 100 pairs at
+    // 64 dims (each candidate meets the ~100 same-parity queries of the
+    // 200 on the __k = id % 2 join key), per-pair cosine the ONLY work —
+    // fused kernel (dot + both norms per pair) vs norms factored per
+    // side (one dot per pair). Results are bit-equal (VectorFnsSpec),
+    // so the sums must match exactly; the time ratio is the cut the
+    // Knn/Pq/SemDedup pair stages inherit where pairs dominate.
+    locally {
+      val pq = vecs.filter(col("vec_id") < 200)
+        .select((col("vec_id") % 2).cast("int").as("__k"),
+          col("embedding").as("__qvec"))
+      val fused = time("pair_stage_fused") {
+        vecs.select((col("vec_id") % 2).cast("int").as("__k"),
+            col("embedding").as("__cvec"))
+          .join(broadcast(pq), Seq("__k"))
+          .select(sum(round(VectorFns.cosine(col("__qvec"), col("__cvec")), 6)).as("s"))
+          .head.getDouble(0).round
+      }
+      exact("pair_stage_factored_eq_fused", time("pair_stage_factored") {
+        vecs.select((col("vec_id") % 2).cast("int").as("__k"),
+            col("embedding").as("__cvec"))
+          .withColumn("__cn", VectorFns.normN(col("__cvec")))
+          .join(broadcast(pq.withColumn("__qn", VectorFns.normN(col("__qvec")))), Seq("__k"))
+          .select(sum(round(VectorFns.cosineFactored(
+            VectorFns.dotN(col("__qvec"), col("__cvec")),
+            col("__qn"), col("__cn")), 6)).as("s"))
+          .head.getDouble(0).round
+      }, fused)
+      // production-width embeddings (512-dim), in the engine's REAL
+      // pair shape: a broadcast HASH equi-join on a cell-like key
+      // inside whole-stage codegen (the ivfTopK/semdedup plan) — NOT a
+      // cross join, whose interpreted BroadcastNestedLoopJoin showed
+      // per-pair expression-eval overhead swallowing the FLOP cut. The
+      // per-pair arithmetic share grows with dim, so the factored
+      // ratio climbs toward the 3× FLOP bound.
+      val wide = spark.range(nVecs / 5)
+        .withColumn("__k", (col("id") % 2).cast("int"))
+        .withColumn("__cvec", array((0 until 512).map(i =>
+          (conv(substring(md5(concat(col("id"), lit(s"d$i"))), 1, 6), 16, 10)
+            .cast("float") / 8388608f) - 1f): _*))
+        .select("__k", "__cvec").cache()
+      wide.count()
+      val wq = wide.limit(400).select(col("__k"), col("__cvec").as("__qvec"))
+        .withColumn("__qn", VectorFns.normN(col("__qvec"))).cache()
+      wq.count()
+      val fusedWide = time("pair_stage_fused_512d") {
+        wide.join(broadcast(wq.select("__k", "__qvec")), Seq("__k"))
+          .select(sum(round(VectorFns.cosine(col("__qvec"), col("__cvec")), 6)).as("s"))
+          .head.getDouble(0).round
+      }
+      exact("pair_stage_factored_eq_fused_512d", time("pair_stage_factored_512d") {
+        wide.withColumn("__cn", VectorFns.normN(col("__cvec")))
+          .join(broadcast(wq), Seq("__k"))
+          .select(sum(round(VectorFns.cosineFactored(
+            VectorFns.dotN(col("__qvec"), col("__cvec")),
+            col("__qn"), col("__cn")), 6)).as("s"))
+          .head.getDouble(0).round
+      }, fusedWide)
+      wide.unpersist(); wq.unpersist()
+    }
+
+    // Shared fixture for the three SemDeDup probes: every 50th vector
+    // duplicates its predecessor. Built and cached ONCE so the timers
+    // measure dedup work, not three identical fixture builds.
+    val vdup = spark.range(nVecs)
+      .withColumn("base", when(col("id") % 50 === 1, col("id") - 1).otherwise(col("id")))
+      .withColumn("embedding", array((0 until 64).map(i =>
+        (conv(substring(md5(concat(col("base"), lit(i))), 1, 6), 16, 10).cast("float") / 8388608f) - 1f): _*))
+      .select(col("id").as("vec_id"), col("embedding"))
+      .cache()
+    vdup.count()
+
+    // SemDeDup at scale: k grows with the corpus (k = nVecs/800, the
+    // documented scaling rule) so the within-cell all-pairs term stays
+    // ~linear in N; the assigned corpus is materialized ONCE inside the
+    // timer (the IVF index build) rather than re-derived per plan leg.
+    // Full recall: an exact copy shares its original's cell and scores
+    // cosine 1.0, so every planted copy goes.
+    exact("semantic_dedup_survivors", time("semantic_dedup") {
+      val k = math.max(16, nVecs / 800)
+      val cents = graft.ann.KMeans.fit(vdup, "vec_id", "embedding", k = k, iters = 2)
+      val cells = graft.dedup.SemDedup.assignCells(vdup, "vec_id", "embedding", cents).cache()
+      val kept = graft.dedup.SemDedup.semanticDedupOnCells(cells, tau = 0.999999).count()
+      cells.unpersist()
+      kept
+    }, nVecs - planted(nVecs, 50))
+
+    // the same dedup under the two-level tree quantizer: k1·k2 ≈ k cells
+    // but assignment is k1+k2 cosines per row instead of k — the term
+    // that keeps growing once k scales with the corpus. Same recall
+    // contract (identical vectors share a cell under any row-local
+    // assignment).
+    exact("semantic_dedup_tree_survivors", time("semantic_dedup_tree") {
+      val side = math.max(4, math.ceil(math.sqrt(nVecs / 800.0)).toInt)
+      val tq = graft.ann.KMeans.fitTree(vdup, "vec_id", "embedding",
+        k1 = side, k2 = side, iters = 2)
+      val cells = graft.dedup.SemDedup.assignCellsTree(vdup, "vec_id", "embedding", tq).cache()
+      val kept = graft.dedup.SemDedup.semanticDedupOnCells(cells, tau = 0.999999).count()
+      cells.unpersist()
+      kept
+    }, nVecs - planted(nVecs, 50))
+
+    // Incremental (batch-vs-history) semantic dedup at scale, the q109
+    // contract: ~1% batch against the rest as history; the quantizer
+    // trains on history alone and the history side streams map-side into
+    // broadcast joins (never reshuffles). Every batch vector (id ≡ 0 mod
+    // 100) has its exact copy at id+1 in history, so the flags are the
+    // ids ≡ 1 mod 100.
+    exact("incremental_semantic_dedup_flags", time("incremental_semantic_dedup") {
+      val history = vdup.filter(col("vec_id") % 100 =!= 0)
+      val batch = vdup.filter(col("vec_id") % 100 === 0)
+      val k = math.max(16, nVecs / 800)
+      val cents = graft.ann.KMeans.fit(history, "vec_id", "embedding", k = k, iters = 2)
+      graft.dedup.SemDedup.incrementalSemanticDedup(
+        history, batch, "vec_id", "embedding", cents, tau = 0.999999)
+        .filter(col("dup_in_history")).count()
+    }, planted(nVecs, 100))
+    vdup.unpersist()
+
+    // NB classifier apply throughput: the model trains in one agg pass
+    // over nDocs labeled docs, then scoring is the pure map stage the
+    // q110 plan assertion pins — this measures rows/sec through the
+    // per-class literal-map fold (the realistic "classifier-filter 100
+    // TB" unit cost).
+    time("nb_classifier") {
+      // bounded vocabulary (~997 tokens): NB's train collect is (class,
+      // token)-sized, so the corpus must share words — the shared `docs`
+      // fixture's per-doc-unique md5 tokens would make the "model"
+      // corpus-sized, which is exactly what fit() must never be fed
+      val labeled = spark.range(nDocs.toLong)
+        .withColumn("lang", concat(lit("l"), (col("id") % 5).cast("string")))
+        .withColumn("text", concat_ws(" ", (0 until 12).map(i =>
+          substring(md5((pmod(col("id") * (i + 7), lit(997))).cast("string")), 1, 6)): _*))
+      val m = graft.ml.NaiveBayes.fit(labeled, "lang", "text")
+      labeled.select(graft.ml.NaiveBayes.best(col("text"), m).as("__b"))
+        .select(graft.ml.NaiveBayes.predClass(col("__b"), m).as("p"))
+        .groupBy("p").count().count()
+    }
+
+    // NB plan-literal cost: score()/best() embed the model as typedlit
+    // maps, so plan analysis/optimization and the task binary scale with
+    // the entry count — this times derivation (force executedPlan) and a
+    // tiny run (task serialization + broadcast) at V and 10V entries,
+    // 10V sitting exactly at the NaiveBayes.MaxModelRows ceiling. The
+    // growth factor is the evidence behind the 100k bound.
+    Seq(10000, 100000).foreach { entries =>
+      val classes = (0 until 5).map(i => s"c$i")
+      val perClass = entries / classes.length
+      val synth = graft.ml.NaiveBayes.Model(
+        classes,
+        classes.map(_ -> -1609438L).toMap,
+        classes.map(c => c -> (0 until perClass)
+          .map(j => s"w$j" -> -(10000000L + j)).toMap).toMap,
+        classes.map(_ -> -20000000L).toMap)
+      // construction is INSIDE the timer: typedlit converts the Scala
+      // maps to Catalyst MapData eagerly at Column-build time, and that
+      // conversion is part of what a larger model costs per query
+      def scored = spark.range(1000)
+        .withColumn("text", concat_ws(" ", lit("w1"), lit("w7"), lit("zz")))
+        .select(graft.ml.NaiveBayes.best(col("text"), synth).as("__b"))
+      time(s"nb_plan_derive_${entries}") {
+        scored.queryExecution.executedPlan; "derived"
+      }
+      time(s"nb_plan_run1k_${entries}")(scored.count())
+    }
+    gate.finish(spark)
   }
 }

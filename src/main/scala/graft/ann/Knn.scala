@@ -41,7 +41,7 @@ object Knn {
     * Cross-join caveat: this baseline plans as a BroadcastNestedLoopJoin
     * (no codegen), where the FUSED cosine wins: the factored form's
     * extra per-pair interpreted expressions measured SLOWER at 512-dim
-    * (ScaleProbe's BNLJ arm), so the baseline keeps the single fused
+    * (SCALING.md's pair-stage BNLJ arm), so the baseline keeps the single fused
     * kernel and the factored pairCosine stays on the codegen'd equi-join
     * family below — the serving path at scale. Bit-equal either way
     * (the DotProduct contract). */
@@ -126,7 +126,7 @@ object Knn {
     * accuracy/F1 on a held-out split at train time) applied to similarity
     * search: an index whose recall nobody measured is not a search
     * structure, it's a rumor. KMeansSpec gates trained IVF at its shipped
-    * nprobe on this; RecallProbe sweeps the recall-vs-nprobe tradeoff. */
+    * nprobe on this; SCALING.md records the recall-vs-nprobe tradeoff. */
   def recall(exact: DataFrame, approx: DataFrame): Double = {
     val truth = exact.select("query_id", "neighbor_id")
     val n = truth.count()

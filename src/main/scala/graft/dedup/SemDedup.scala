@@ -149,9 +149,9 @@ object SemDedup {
       // probes, the within-batch self-join's second side, and the
       // output spine). Left lazy, Catalyst re-derives and re-optimizes
       // the k·dim-literal assignment tree per leg — at the documented
-      // k ∝ N rule that turned 2.5× data into 22× wall (ScaleProbe,
-      // k=156). The batch side is increment-sized by contract, so cut
-      // it once (q77/q89 pattern); history stays a single lazy leg and
+      // k ∝ N rule that turned 2.5× data into 22× wall (`SpineProbe
+      // scale`, k=156). The batch side is increment-sized by contract,
+      // so cut it once (q77/q89 pattern); history stays a single lazy leg and
       // still never materializes.
       assignCells(batch, idCol, vecCol, cents).localCheckpoint(false), tau)
 

@@ -64,18 +64,6 @@ object TextFns {
   def bpeishTokenCount(c: Column): Column =
     size(regexp_extract_all(c, lit("""[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"""), lit(0)))
 
-  /** Punctuation character ratio. */
-  def punctRatio(c: Column): Column =
-    when(length(c) === 0, lit(0.0)).otherwise(
-      (length(c) - length(regexp_replace(c, """[^\w\s]""", ""))).cast("double") / length(c))
-
-  /** Ratio of tokens that are in `stop` (lowercased compare). */
-  def stopwordRatio(c: Column, stop: Seq[String]): Column = {
-    val toks = split(lower(trim(c)), """\s+""")
-    val stops = size(filter(toks, t => t.isin(stop: _*)))
-    when(size(toks) === 0, lit(0.0)).otherwise(stops.cast("double") / size(toks))
-  }
-
   /** Composite quality score in [0,1]: favors mid-length docs, low
     * punctuation noise, and some stopword mass (Gopher-style heuristics).
     * FP operation order (multiply before divide) is pinned so an external

@@ -45,7 +45,7 @@ object NaiveBayes {
     * (the same blowup class the centroid work measured at 22× when a
     * literal subtree was re-derived per leg); ~100k entries is where the
     * task binary stays single-digit MiB and plan derivation stays cheap
-    * (measured in ScaleProbe `nb_plan_*`, recorded in SCALING.md).
+    * (measured in `SpineProbe scale` `nb_plan_*`, recorded in SCALING.md).
     * Larger vocabularies must be hashed into a bounded feature space
     * before training — at that size a literal map is the wrong
     * representation, not a tunable. */

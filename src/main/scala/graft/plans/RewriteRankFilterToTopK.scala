@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * two O(n log n) passes (with spill risk) over data of which only k rows
   * per key survive. The aggregate form replaces both sorts with an
   * O(n log k) bounded heap that can never spill beyond k rows per group.
-  * Measured (ScaleProbe): ~1.1× at 150k rows per input partition, 4-6×
+  * Measured (`SpineProbe scale`): ~1.1× at 150k rows per input partition, 4-6×
   * at 5M rows per partition — the win grows with exactly the variable
   * that grows on a cluster. Same rows out (row_number's arbitrary tie
   * order is preserved as "any k of the tied rows", identical to the

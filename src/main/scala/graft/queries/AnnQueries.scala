@@ -433,7 +433,7 @@ object AnnQueries {
     // means rounded to 6, empty cells keep their previous centroid)
     // build the coarse quantizer, then multi-probe (12 of 16 cells)
     // search. The oracle replays the identical training loop as chained
-    // CTEs. nprobe is MEASURED, not assumed: RecallProbe's sweep against
+    // CTEs. nprobe is MEASURED, not assumed: the SCALING.md sweep against
     // the q37 brute-force ground truth puts recall@10 at 0.77 for 6
     // probes and 0.94-0.96 at 12 on this near-uniform synthetic corpus
     // (recall tracks the scan fraction when cosine neighborhoods barely
@@ -832,8 +832,7 @@ object AnnQueries {
           round(graft.functions.VectorFns.cosine(col("__va"), col("__vb")), 6))
         .filter(col("cosine") >= 0.3)
         .select(col("a_id").as("id_a"), col("b_id").as("id_b"), col("cosine"))
-      val sink = EventQueries.drainToParquet(joined, sinkName)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName)(joined)
       sink.select("id_a", "id_b", "cosine")
     },
 
@@ -959,8 +958,7 @@ object AnnQueries {
             round(graft.functions.VectorFns.cosine(col("__v"), col("__vh")), 6) >= 0.3,
           "left_outer")
         .select(col("vec_id"), col("cid"), col("hcid").isNotNull.as("matched"))
-      val sink = EventQueries.drainToParquet(stream, sinkName)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName)(stream)
       sink.groupBy("vec_id", "cid")
         .agg(max(col("matched")).as("dup_in_history"))
     },
@@ -1040,8 +1038,7 @@ object AnnQueries {
           "left_outer")
         .select(col("vec_id"), col("cid"), col("dup_in_batch"),
           col("hcid").isNotNull.as("matched"))
-      val sink = EventQueries.drainToParquet(flagged, sinkName, update = true)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName, update = true)(flagged)
       sink.groupBy("vec_id", "cid", "dup_in_batch")
         .agg(max(col("matched")).as("dup_in_history"))
         .select("vec_id", "cid", "dup_in_history", "dup_in_batch")
@@ -1192,8 +1189,7 @@ object AnnQueries {
         .agg(count(lit(1)).as("n"), round(avg("fit"), 4).as("avg_fit"))
         .select(unix_timestamp(col("w.start")).as("hour_epoch"),
           col("n"), col("avg_fit"))
-      val sink = EventQueries.drainToParquet(stream, sinkName, update = true)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName, update = true)(stream)
       sink.groupBy("hour_epoch")
         .agg(max(struct(col("n"), col("avg_fit"))).as("m"))
         .select(col("hour_epoch"), col("m.n").as("n"), col("m.avg_fit").as("avg_fit"))

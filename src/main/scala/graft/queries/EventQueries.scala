@@ -290,6 +290,13 @@ object EventQueries {
     else s.read.parquet(s"$out/rows")
   }
 
+  /** [[drainToParquet]] of a stream over the staged input `in`: the
+    * input's temp parent is dropped ([[dropStaged]]) whether or not the
+    * drain succeeds, and a failing drain's error propagates. */
+  private[queries] def drainStaged(in: String, sinkName: String, update: Boolean = false)(
+      frame: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    try drainToParquet(frame, sinkName, update) finally dropStaged(in)
+
   /** The LEDGER DRAIN every maintained-state fold runs through: stream
     * the staged input `in` one file per micro-batch into `step(root,
     * batch, batchId)` under `foreachBatch`, record each batch's returned
@@ -642,8 +649,7 @@ object EventQueries {
           .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"))
         .groupBy("entity")
         .agg(max(struct(col("sec"), col("event_id"), col("op"), col("value"))).as("m"))
-      val sink = drainToParquet(state, sinkName, update = true)
-      dropStaged(s"$tmp/in") // the file sink holds the rows; the staged copy is dead weight
+      val sink = drainStaged(s"$tmp/in", sinkName, update = true)(state)
       cdcSinkReduce(sink
         .select(col("entity"), col("m.sec").as("sec"), col("m.event_id").as("event_id"),
           col("m.op").as("op"), col("m.value").as("value")))
@@ -692,8 +698,7 @@ object EventQueries {
         .groupByKey(_.entity)
         .transformWithState(new TwsCdc.LastWriterWins,
           TimeMode.None(), OutputMode.Update())
-      val sink = drainToParquet(ops.toDF(), sinkName, update = true)
-      dropStaged(in)
+      val sink = drainStaged(in, sinkName, update = true)(ops.toDF())
       cdcSinkReduce(sink)
     },
 
@@ -730,8 +735,7 @@ object EventQueries {
       // replay the lateness=0 contract needs — see stampDrainOrder)
       val in = stageRangedDrain(Tables.events(s, d), 2, "ts", "graft_ssj_")
       val joined = intervalJoinPair(s, schema, in)
-      val sink = drainToParquet(joined, sinkName)
-      dropStaged(in)
+      val sink = drainStaged(in, sinkName)(joined)
       sink.groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           round(sum("p_value"), 4).as("attributed"))
@@ -774,8 +778,7 @@ object EventQueries {
         2, "ts", "graft_ssjo_")
       addSentinelWaveB(s0, in, maxTs, Seq("click", "purchase"))
       val joined = intervalJoinPair(s, schema, in, "leftOuter")
-      val sink = drainToParquet(joined, sinkName)
-      dropStaged(in)
+      val sink = drainStaged(in, sinkName)(joined)
       sink.filter(col("c_user") >= 0)
         .groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_rows"),
@@ -827,8 +830,7 @@ object EventQueries {
         .agg(count(lit(1)).as("n_pairs"), round(sum("p_value"), 4).as("attributed"))
         .select(unix_timestamp(col("w.start")).as("hour_epoch"),
           col("n_pairs"), col("attributed"))
-      val sink = drainToParquet(stream, sinkName)
-      dropStaged(in)
+      val sink = drainStaged(in, sinkName)(stream)
       sink.select("hour_epoch", "n_pairs", "attributed")
     },
 
@@ -887,8 +889,7 @@ object EventQueries {
       // session windows are append-only by API, so the file sink holds
       // each session exactly once and the read-back is a plain
       // projection over real files.
-      val sink = drainToParquet(stream, sinkName)
-      dropStaged(in)
+      val sink = drainStaged(in, sinkName)(stream)
       sink.filter(col("user_id") >= 0)
         .select("user_id", "session_start", "n_events", "session_value")
     },

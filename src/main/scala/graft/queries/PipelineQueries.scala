@@ -680,8 +680,7 @@ object PipelineQueries {
           .join(broadcast(marked), Seq("fp"), "left_outer")
           .select(col("source"),
             when(col("__hit").isNull, 1).otherwise(0).as("kept")))
-      val sink = EventQueries.drainToParquet(verdicts, sinkName)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName)(verdicts)
       sink.groupBy("source").agg(sum("kept").cast("long").as("n_kept"))
     },
 

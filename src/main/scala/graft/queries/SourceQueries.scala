@@ -259,11 +259,11 @@ object SourceQueries {
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("qty"))
     },
 
-    // SQL surface for the CUSTOM expressions: the registered functions
-    // (GraftFunctionDefs via GraftFunctions.register, or cluster-wide via
-    // spark.sql.extensions=graft.GraftExtensions) drive the same native
-    // kernels the DataFrame API uses — here simhash bucketing + the
-    // one-permutation minhash, entirely from SQL text.
+    // SQL surface for the CUSTOM expressions: the functions every graft
+    // session injects through spark.sql.extensions=graft.GraftExtensions
+    // drive the same native kernels the DataFrame API uses — here
+    // simhash bucketing + the one-permutation minhash, entirely from SQL
+    // text.
     QueryDef("q73_sql_functions", Seq("A10", "S6"),
       """WITH tok AS (
            SELECT doc_id, ('0x' || substring(md5(unnest(string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' '))), 1, 8))::BIGINT AS h
@@ -281,7 +281,6 @@ object SourceQueries {
            FROM documents)
          SELECT simhash % 64 AS bucket, count(*) AS n, min(minhash) AS min_minhash
          FROM sig JOIN mh USING (doc_id) GROUP BY bucket""") { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("documents_graft")
       s.sql(
         """SELECT bucket, count(*) AS n, min(mh) AS min_minhash

@@ -737,10 +737,8 @@ object TextQueries {
       val cmsStream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
         .select(explode(split(trim(col("text")), """\s+""")).as("token"))
-      val sink = EventQueries.drainToParquet(
-        cmsCells(cmsStream).groupBy("r", "b").agg(count(lit(1)).as("c")),
-        sinkName, update = true)
-      EventQueries.dropStaged(in)
+      val sink = EventQueries.drainStaged(in, sinkName, update = true)(
+        cmsCells(cmsStream).groupBy("r", "b").agg(count(lit(1)).as("c")))
       val cms = sink.groupBy("r", "b").agg(max("c").as("c"))
       cmsEstimate(s, d, cms)
     },

@@ -2,7 +2,7 @@ package org.apache.spark
 
 /** Standard extension-point shim (like `sql.GraftColumnBridge`): exposes
   * the package-private listener bus drain so the job/byte meters
-  * (FoldJobBudgetSpec, SpineProbe's read-floor gates) can settle on the
+  * (FoldJobBudgetSpec, `graft.Probe.metered`) can settle on the
   * BUS BEING EMPTY instead of a fixed sleep poll — the poll undercounts
   * whenever the async bus stalls longer than one interval on a loaded
   * host (the round-18 ADVICE finding). */

@@ -655,7 +655,7 @@ class PlanBudgetSpec extends SparkSpec {
       ("Pq.scala", "q"), ("Pq.scala", "qv"),
       ("Pq.scala", "short"),      // Q·r shortlist, r fixed
       ("Pq.scala", "tombstones"), // O(deletes in the maintenance batch)
-      ("ScaleProbe.scala", "pq"), ("ScaleProbe.scala", "wq"),
+      ("SpineProbe.scala", "pq"), ("SpineProbe.scala", "wq"),
       // corpus planning: per-source/per-lang aggregates (O(#sources)),
       // 1-row totals/min frames
       ("CurationQueries.scala", "budgets"), ("CurationQueries.scala", "fByLang"),

@@ -1,0 +1,29 @@
+package graft
+
+/** [[Probe.metered]], the one listener the runners read their job and
+  * task numbers from: it counts what its body caused, all of it, and
+  * nothing from before it. */
+class ProbeSpec extends SparkSpec {
+
+  /** One exchange over 10,000 rows and no partial aggregate, so exactly
+    * 10,000 shuffle records are written. */
+  private def repartitioned() = Probe.metered(spark.sparkContext) {
+    spark.range(0, 10000, 1, 4).repartition(3)
+      .write.format("noop").mode("overwrite").save()
+  }
+
+  test("metered sees every shuffle record and completed job of its body") {
+    val m = repartitioned()
+    assert(m.shuffleRecords == 10000L, s"shuffle records: ${m.tasks}")
+    assert(m.jobs.nonEmpty, "at least one completed job")
+    assert(m.jobs.forall(j => j.end >= j.start && j.tasks > 0), s"jobs: ${m.jobs}")
+  }
+
+  test("a second metered call sees none of the first call's events") {
+    val first = repartitioned()
+    val second = repartitioned()
+    assert(second.shuffleRecords == 10000L, s"second call's tasks: ${second.tasks}")
+    assert(second.jobs.map(_.id).min > first.jobs.map(_.id).max,
+      s"jobs of the first call in the second: ${first.jobs} / ${second.jobs}")
+  }
+}

@@ -9,7 +9,7 @@ class KMeansSpec extends SparkSpec {
   test("trained IVF at its shipped nprobe: recall@10 >= 0.9 vs brute-force ground truth") {
     // q96's index (k=16 cells, 2 Lloyd rounds) at q96's nprobe (12),
     // measured against q37's exact baseline on a 50-query set — the
-    // recall gate. RecallProbe sweeps the full recall-vs-nprobe curve;
+    // recall gate. SCALING.md records the full recall-vs-nprobe curve;
     // 12 is where this corpus crosses 0.9 (the old recall@5-on-10-queries
     // check passed at nprobe 6 only as a small-sample artifact).
     val emb = Tables.embeddings(spark, sf)

@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 class GraftFunctionsSpec extends SparkSpec {
 
   test("registered SQL functions match the DataFrame API expressions") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT osa_distance('abcd', 'acbd') AS osa,
                 simhash_md5('the quick brown fox', 60) AS sh,
@@ -27,7 +26,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("non-literal size arguments are rejected with a clear message") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT simhash_md5('x', length('abc'))").head
     }

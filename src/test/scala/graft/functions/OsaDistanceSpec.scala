@@ -24,7 +24,6 @@ class OsaDistanceSpec extends SparkSpec {
   }
 
   test("osa_distance is registered for the SQL surface") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT osa_distance('ab', 'ba') AS d").collect()(0).getInt(0)
     assert(r == 1)
   }

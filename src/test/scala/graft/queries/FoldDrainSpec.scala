@@ -51,6 +51,22 @@ class FoldDrainSpec extends SparkSpec {
       "a failed drain must not leak its staged input copy")
   }
 
+  test("a staged drain that throws propagates its error and drops the staged input") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val in = staged()
+    val err = intercept[Exception] {
+      EventQueries.drainStaged(in, "graft_test_drain_staged_fail")(
+        spark.readStream.schema(input.schema).option("maxFilesPerTrigger", 1).parquet(in)
+          .select(when(col("k") > 0, raise_error(lit("staged drain failed")))
+            .otherwise(col("k")).as("k")))
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => Option(c.getMessage).exists(_.contains("staged drain failed"))),
+      s"the drain's own error must propagate: $err")
+    assert(!new java.io.File(in).getParentFile.exists(),
+      "a failed drain must not leak its staged input copy")
+  }
+
   test("foldDrain and drainToParquet are the only foreachBatch sinks under queries/") {
     val needle = ".foreachBatch"
     val memberDef = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
