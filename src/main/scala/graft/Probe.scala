@@ -25,10 +25,19 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   /** One completed Spark job: ids and times as the scheduler reports
     * them, `site` the job description (the fold steps' `labeled` text)
-    * or else the short call site. */
-  final case class Job(id: Int, start: Long, end: Long, tasks: Int, site: String) {
+    * or else the short call site, and `kinds` what each of its stages
+    * runs — the stage's RDD class names in lineage order, joined by `>`
+    * (a parquet schema-inference job reads `ParallelCollectionRDD>…`, a
+    * broadcast of a pinned frame `…LocalCheckpointRDD`, a scan starts at
+    * `FileScanRDD`). */
+  final case class Job(id: Int, start: Long, end: Long, tasks: Int, site: String,
+      kinds: Seq[String] = Nil) {
     def secs: Double = (end - start) / 1e3
   }
+
+  /** A stage's RDD class names in lineage (id) order, repeats dropped. */
+  private def stageKinds(st: org.apache.spark.scheduler.StageInfo): String =
+    st.rddInfos.sortBy(_.id).map(_.name).distinct.mkString(">")
 
   /** One finished task's duration and the bytes it read and shuffled. */
   final case class Task(durationMs: Long, inputBytes: Long,
@@ -62,7 +71,8 @@ object Probe {
         val site = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))
             .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
-        starts.put(e.jobId, Job(e.jobId, e.time, -1L, e.stageInfos.map(_.numTasks).sum, site))
+        starts.put(e.jobId, Job(e.jobId, e.time, -1L, e.stageInfos.map(_.numTasks).sum,
+          site, e.stageInfos.sortBy(_.stageId).map(stageKinds)))
         ()
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -130,8 +140,15 @@ object Probe {
         try fn(spark, wd).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => println(s"[warm] $name failed: ${e.getMessage}") }
       }
+      val sc = spark.sparkContext
       val runs = (1 to 3).map { i =>
-        val run = metered(spark.sparkContext)(Bench.trial(spark, name, fn(spark, sfDir)))
+        // the timed write of the built frame reads `<query>:result` in
+        // the tables below; the build's own jobs keep their labels
+        val run = try metered(sc)(Bench.trial(spark, name, {
+          val df = fn(spark, sfDir)
+          sc.setJobDescription(s"$name:result")
+          df
+        })) finally sc.setJobDescription(null)
         val wall = run.value
         val total = run.jobs.map(_.secs).sum
         println(f"[probe] $name run$i wall=$wall%.2f s, jobs=${run.jobs.size}, " +
@@ -147,7 +164,8 @@ object Probe {
         val gap = if (prevEnd < 0) 0.0 else (j.start - prevEnd) / 1e3
         prevEnd = math.max(prevEnd, j.end)
         println(f"[job] id=${j.id}%4d dur=${j.secs}%6.3f s " +
-          f"gapBefore=$gap%6.3f s tasks=${j.tasks}%4d  ${j.site}")
+          f"gapBefore=$gap%6.3f s tasks=${j.tasks}%4d  ${j.site}  " +
+          j.kinds.mkString("[", " | ", "]"))
       }
       println(s"[probe] $name by call site:")
       last.groupBy(_.site).toSeq

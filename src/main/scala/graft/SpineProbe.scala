@@ -925,9 +925,12 @@ object SpineProbe {
     *
     * Gates: each on arm's executed plan carries an `AQEShuffleRead
     * skewed` node and its off arm's none; for the hot cell also the on
-    * arm's largest task is shorter than the off arm's. The wall-time
-    * speed-ups print but are not gated: their recorded values were
-    * measured at local[32], and the ratio depends on the core count. */
+    * arm's largest task is at most half the off arm's (recorded ratios
+    * 0.105 at local[32] and 0.31 at local[4]; with the splitter forced
+    * off in both arms the ratio read 0.93, so "shorter" alone passed on
+    * noise). The wall-time speed-ups print but are not gated: their
+    * recorded values were measured at local[32], and the ratio depends
+    * on the core count. */
   private def skew(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.3)
@@ -999,7 +1002,7 @@ object SpineProbe {
     println(s"""{"probe":"semdedup_hot_cell_on","sec":${r2(cellOn.sec)},"task_p50_ms":${cellOn.p50TaskMs},"task_max_ms":${cellOn.maxTaskMs},"skewed_reads":$cellOnReads,"speedup":${r2(cellOff.sec / cellOn.sec)}}""")
     gate("semdedup_hot_cell_split",
       cellOnReads >= 1 && cellOffReads == 0 &&
-        cellOn.maxTaskMs < cellOff.maxTaskMs &&
+        cellOn.maxTaskMs <= 0.5 * cellOff.maxTaskMs &&
         cellOn.value._2 > 0 && cellOn.value._2 == cellOff.value._2,
       s"skewed_reads off=$cellOffReads on=$cellOnReads " +
         s"task_max_ms off=${cellOff.maxTaskMs} on=${cellOn.maxTaskMs} " +

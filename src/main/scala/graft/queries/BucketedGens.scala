@@ -134,24 +134,29 @@ private[graft] object BucketedGens {
     * itself bucket-partitioned so the same pruning applies). Every
     * frame must carry the physical `bucket` partition column. `gen` =
     * None (no generation committed yet) means every bucket is at rest;
-    * `only = Some(Nil)` is the empty read. */
+    * `only = Some(Nil)` is the empty read. Generation dirs are read with
+    * `atRest`'s schema, so the frame must carry exactly the gen files'
+    * columns: a read that infers runs one Spark job per owner dir. */
   def read(s: SparkSession, root: String, gen: Option[Gen],
-      atRest: => DataFrame, only: Option[Seq[Int]] = None): DataFrame =
+      atRest: => DataFrame, only: Option[Seq[Int]] = None): DataFrame = {
+    lazy val rest = atRest
     (gen, only) match {
-      case (_, Some(bs)) if bs.isEmpty => atRest.limit(0)
-      case (None, None)     => atRest
-      case (None, Some(bs)) => atRest.filter(col("bucket").isin(bs.map(Int.box): _*))
+      case (_, Some(bs)) if bs.isEmpty => rest.limit(0)
+      case (None, None)     => rest
+      case (None, Some(bs)) => rest.filter(col("bucket").isin(bs.map(Int.box): _*))
       case (Some(g), _) =>
         val wanted = only.fold(g.owners)(bs =>
           g.owners.filter { case (b, _) => bs.contains(b) })
         val parts = wanted.filter(_._2 != Empty)
           .groupBy(_._2).toSeq.sortBy(_._1).map { case (o, kv) =>
             val bs = kv.keys.toSeq.sorted
-            val df = if (o == AtRest) atRest else s.read.parquet(s"$root/gen-$o")
+            val df = if (o == AtRest) rest
+              else s.read.schema(rest.schema).parquet(s"$root/gen-$o")
             df.filter(col("bucket").isin(bs.map(Int.box): _*))
           }
-        parts.reduceOption(_.unionByName(_)).getOrElse(atRest.limit(0))
+        parts.reduceOption(_.unionByName(_)).getOrElse(rest.limit(0))
     }
+  }
 
   /** Commit fold generation `id` on predecessor `base` and vacuum: a
     * `written` bucket is owned by `id`, a `touched` bucket the write

@@ -165,7 +165,7 @@ object DedupQueries {
             "id_a", "id_b")
           .write.mode("overwrite").parquet(target)
       }
-      val labels = s.read.parquet(baseDir)
+      val labels = s.read.schema("id BIGINT, component BIGINT").parquet(baseDir)
       // delta pairs: arrivals probed against the full corpus (arrivals
       // included — batch-internal duplicates matter)
       val deltaPairs = TextDedup.simHashNearDupAgainst(
@@ -422,7 +422,8 @@ object DedupQueries {
       ccComponentsSql(ccKeepPredSql)) { (s, d) =>
       val touched = ccTouchedComps(s, d)
       val (prunedEdges, _) = componentsTouchedRead(s, d, touched)
-      val recomputed = retractedTouchedLabels(prunedEdges, ccDeletedIds(s, d))
+      val recomputed = retractedTouchedLabels(prunedEdges,
+        ccDeletedIds(Tables.documents(s, d)))
       ccAtRestLabels(s, d)
         .join(broadcast(touched), Seq("component"), "left_anti")
         .select(col("id").as("doc_id"), col("component"))
@@ -450,7 +451,7 @@ object DedupQueries {
       ccComponentsSql(ccKeepPredSql)) { (s0, d) =>
       val stateDir = ccStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val deleted = ccDeletedIds(s, d)
+      val deleted = ccDeletedIds(Tables.documents(s, d))
       val root = EventQueries.foldDrain(s,
           EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ccr_"),
           deleted.schema, "graft_stream_cc_retraction") { (root, b, id) =>
@@ -478,8 +479,8 @@ object DedupQueries {
     QueryDef("q182_survivor_reelection", Seq("A10", "A2", "W6", "F4"),
       survivorManifestSql(ccKeepPredSql)) { (s, d) =>
       val manifestState = survivorStateDir(s, d)
-      val manifest = s.read.parquet(s"$manifestState/manifest")
-      val deleted = ccDeletedIds(s, d)
+      val manifest = stateRel(s, manifestState, "manifest")
+      val deleted = ccDeletedIds(Tables.documents(s, d))
       // touched components INCLUDING singletons: coalesce through the
       // at-rest labels exactly as the manifest's component key did
       val touched = survivorTouchedComps(s, d)
@@ -525,7 +526,7 @@ object DedupQueries {
       val ccState = ccStateDir(s0, d)
       val survState = survivorStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val deleted = ccDeletedIds(s, d)
+      val deleted = ccDeletedIds(Tables.documents(s, d))
       val root = EventQueries.foldDrain(s,
           EventQueries.stageRangedDrain(deleted, 2, "doc_id", "graft_ssr_"),
           deleted.schema, "graft_stream_survivor") { (root, b, id) =>
@@ -568,12 +569,13 @@ object DedupQueries {
       ccComponentsSql(ccCdcKeepPredSql)) { (s0, d) =>
       val stateDir = ccHistStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val sigs = Tables.documents(s, d).select(col("doc_id"),
+      val docs = Tables.documents(s, d)
+      val sigs = docs.select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
         .localCheckpoint(false) // the static probe side, pinned once
       val changelog = sigs.filter(col("doc_id") % 7 === 0)
         .select(lit("I").as("op"), col("doc_id"), col("simhash"))
-        .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
+        .unionByName(ccDeletedIds(docs).filter(col("doc_id") % 7 =!= 0)
           .select(lit("D").as("op"), col("doc_id"),
             lit(null).cast("long").as("simhash")))
       val root = EventQueries.foldDrain(s,
@@ -582,7 +584,7 @@ object DedupQueries {
         componentsCdcStep(stateDir, root, b, id, sigs)
       }
       BucketedGens.read(s, s"$root/labels", BucketedGens.latest(s"$root/labels"),
-          atRestLabels(s, stateDir))
+          stateRel(s, stateDir, "labels"))
         .select(col("id").as("doc_id"), col("component"))
     },
 
@@ -603,21 +605,26 @@ object DedupQueries {
     // the post-CDC corpus, however the changelog was batched.
     QueryDef("q189_stream_manifest_cdc", Seq("A10", "A2", "W6", "F4", "R4"),
       survivorManifestSql(ccCdcKeepPredSql)) { (s0, d) =>
-      val ccState = ccHistStateDir(s0, d)
-      val survState = survivorHistStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val docs = Tables.documents(s, d)
-      val sigs = docs.select(col("doc_id"),
-        TextDedup.simHashN(col("text"), 60).as("simhash"))
-        .localCheckpoint(false) // the static probe side, pinned once
-      val changelog = manifestCdcChangelog(s, d, docs)
-      val root = EventQueries.foldDrain(s,
-          EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_mcdc_"),
+      // the pre-drain jobs carry q189's own labels (not cfold:/mfold:,
+      // which count fold work): the docs read and the static sig pin,
+      // then the staged states and the changelog staging
+      val (docs, sigs) = labeled(s, "q189:sigs") {
+        val docs = Tables.documents(s, d)
+        (docs, docs.select(col("doc_id"),
+          TextDedup.simHashN(col("text"), 60).as("simhash"))
+          .localCheckpoint(false)) // the static probe side, pinned once
+      }
+      val changelog = manifestCdcChangelog(docs)
+      val (ccState, survState, staged) = labeled(s, "q189:stage")((
+        ccHistStateDir(s0, d), survivorHistStateDir(s0, d),
+        EventQueries.stageRangedDrain(changelog, 3, "doc_id", "graft_mcdc_")))
+      val root = EventQueries.foldDrain(s, staged,
           changelog.schema, "graft_stream_manifest_cdc") { (root, b, id) =>
         survivorCdcStep(ccState, survState, root, b, id, sigs)
       }
       BucketedGens.read(s, s"$root/manifest", BucketedGens.latest(s"$root/manifest"),
-          s.read.parquet(s"$survState/manifest"))
+          stateRel(s, survState, "manifest"))
         .select("component", "survivor_id", "n_members", "quality")
     },
 
@@ -651,7 +658,7 @@ object DedupQueries {
       val sigs = docs.select(col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"))
         .localCheckpoint(false) // the static probe side, pinned once
-      val changelog = manifestCdcChangelog(s, d, docs)
+      val changelog = manifestCdcChangelog(docs)
       val root = EventQueries.foldDrain(s,
           EventQueries.stageRangedDrain(changelog, 4, "doc_id", "graft_mcmp_"),
           changelog.schema, sinkName) { (root, b, bid) =>
@@ -681,7 +688,7 @@ object DedupQueries {
       // state when one landed — the same resolution the folds use
       val servedState = effectiveState(s, root, None, survState)
       BucketedGens.read(s, s"$root/manifest", BucketedGens.latest(s"$root/manifest"),
-          s.read.parquet(s"$servedState/manifest"))
+          stateRel(s, servedState, "manifest"))
         .select("component", "survivor_id", "n_members", "quality")
     },
 
@@ -706,7 +713,7 @@ object DedupQueries {
       val ccState = ccStateDir(s0, d)
       val survState = survivorStateDir(s0, d)
       val s = EventQueries.streamSession(s0)
-      val deleted = ccDeletedIds(s, d)
+      val deleted = ccDeletedIds(Tables.documents(s, d))
       val root = EventQueries.foldDrain(s, stageEvenOddDeletes("graft_asof_", deleted),
           deleted.schema, "graft_manifest_asof") { (root, b, id) =>
         survivorRetractStep(ccState, survState, root, b, id)
@@ -741,7 +748,7 @@ object DedupQueries {
       def tsOf(id: Long): Long = java.time.LocalDate.of(2026, 6, 1)
         .plusDays(id).atStartOfDay(java.time.ZoneOffset.UTC)
         .toInstant.toEpochMilli
-      val deleted = ccDeletedIds(s, d)
+      val deleted = ccDeletedIds(Tables.documents(s, d))
       val root = EventQueries.foldDrain(s, stageEvenOddDeletes("graft_asoft_", deleted),
           deleted.schema, "graft_manifest_asof_time") { (root, b, id) =>
         survivorRetractStep(ccState, survState, root, b, id, ts = Some(tsOf(id)))
@@ -767,13 +774,13 @@ object DedupQueries {
     * against the pinned sigs frame (joining corpus-sized sigs to the
     * 1/7 slice costs more than re-hashing the slice once at staging
     * time). */
-  private def manifestCdcChangelog(s: org.apache.spark.sql.SparkSession,
-      d: String, docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def manifestCdcChangelog(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.filter(col("doc_id") % 7 === 0)
       .select(lit("I").as("op"), col("doc_id"),
         TextDedup.simHashN(col("text"), 60).as("simhash"),
         TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality"))
-      .unionByName(ccDeletedIds(s, d).filter(col("doc_id") % 7 =!= 0)
+      .unionByName(ccDeletedIds(docs).filter(col("doc_id") % 7 =!= 0)
         .select(lit("D").as("op"), col("doc_id"),
           lit(null).cast("long").as("simhash"),
           lit(null).cast("double").as("quality")))
@@ -810,39 +817,28 @@ object DedupQueries {
     val byidRoot = s"$root/labels_byid"
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
     val baseBy = BucketedGens.latest(byidRoot, below = Some(id))
-    val bE = b.select("id_a", "id_b").localCheckpoint()
+    // every frame below is batch-sized and held on the driver (see
+    // [[Held]]): its key and bucket sets are Scala, its semi/anti
+    // consumers InSet filters — the merge fold pays one collect per
+    // frame and no broadcast or bucket-collect job
+    val bE = Held(b.select("id_a", "id_b"))
     // the standing state starts EMPTY — AtRest buckets resolve to no rows
-    def atRestEmpty = bE
-      .select(col("id_a").as("id"), col("id_a").as("component"),
-        pmod(col("id_a"), lit(nb)).cast("int").as("bucket"))
-      .limit(0)
-    // every pruning bucket set rides its frame's pin as an observe()
-    // metric (pinMetered) — the merge fold pays zero collect actions
-    val incidentP = pinMetered(bE.select(col("id_a").as("id"))
-        .unionByName(bE.select(col("id_b").as("id"))).distinct(),
-      "ibk" -> pmod(col("id"), lit(nb)))
-    val incident = incidentP.df
-    val touchedP = pinMetered(
-        BucketedGens.read(s, byidRoot, baseBy, atRestEmpty, Some(incidentP.bks("ibk")))
-        .join(broadcast(incident), Seq("id"), "leftsemi")
-        .select("component").distinct(),
-      "cbk" -> pmod(col("component"), lit(nb)))
-    val touched = touchedP.df
-    val mTouchedP = pinMetered(
-        BucketedGens.read(s, labelsRoot, base, atRestEmpty, Some(touchedP.bks("cbk")))
-        .join(broadcast(touched), Seq("component"), "leftsemi")
-        .select("id", "component"),
-      "ibk" -> pmod(col("id"), lit(nb)))
-    val mTouched = mTouchedP.df
-    val newLocalP = pinMetered(Components.connectedComponents(
-        mTouched.select(col("id").as("id_a"), col("component").as("id_b"))
-          .unionByName(bE), "id_a", "id_b"),
-      "cbk" -> pmod(col("component"), lit(nb)),
-      "ibk" -> pmod(col("id"), lit(nb))) // written under BOTH keyings
-    val newLocal = newLocalP.df
-    val oldAffected = mTouched.select("id")
-    val buckets = (touchedP.bks("cbk") ++ newLocalP.bks("cbk")).distinct.sorted
-    val byBuckets = (mTouchedP.bks("ibk") ++ newLocalP.bks("ibk")).distinct.sorted
+    def atRestEmpty = emptyState(s, "labels")
+    val incident = (bE.keys("id_a") ++ bE.keys("id_b")).distinct
+    val touched = Held(
+      semiIn(BucketedGens.read(s, byidRoot, baseBy, atRestEmpty,
+          Some(bucketsOf(incident, nb))), "id", incident)
+        .select("component")).keys("component")
+    val mTouched = Held(
+      semiIn(BucketedGens.read(s, labelsRoot, base, atRestEmpty,
+          Some(bucketsOf(touched, nb))), "component", touched)
+        .select("id", "component"))
+    val newLocal = componentsHeld( // written under BOTH keyings
+      mTouched.df.select(col("id").as("id_a"), col("component").as("id_b"))
+        .unionByName(bE.df))
+    val oldAffected = mTouched.keys("id")
+    val buckets = bucketsOf(touched ++ newLocal.keys("component"), nb)
+    val byBuckets = bucketsOf(oldAffected ++ newLocal.keys("id"), nb)
     // the two mirror writes in ONE parallel wave (r19, guide §2.6 —
     // independent dirs, independent payload derivations); the commits
     // below stay sequential in the original order, so the replay
@@ -851,17 +847,15 @@ object DedupQueries {
       BucketedGens.observedWrite(
           BucketedGens.read(s, labelsRoot, base, atRestEmpty, Some(buckets)),
           buckets, s"$labelsRoot/gen-$id") { p =>
-        p.select("id", "component")
-          .join(broadcast(oldAffected), Seq("id"), "left_anti")
-          .unionByName(newLocal)
+        antiIn(p.select("id", "component"), "id", oldAffected)
+          .unionByName(newLocal.df)
           .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
       },
       BucketedGens.observedWrite(
           BucketedGens.read(s, byidRoot, baseBy, atRestEmpty, Some(byBuckets)),
           byBuckets, s"$byidRoot/gen-$id") { p =>
-        p.select("id", "component")
-          .join(broadcast(oldAffected), Seq("id"), "left_anti")
-          .unionByName(newLocal)
+        antiIn(p.select("id", "component"), "id", oldAffected)
+          .unionByName(newLocal.df)
           .withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
       })
     val rows = base.map(_.rows).getOrElse(0L) - predRows + nextRows
@@ -876,9 +870,9 @@ object DedupQueries {
     * docs). ONE definition feeding the engine's delete frames and — via
     * [[ccKeepPredSql]] — every retraction oracle, so the two sides can
     * never disagree on what was forgotten. */
-  private[graft] def ccDeletedIds(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    Tables.documents(s, d).filter(col("doc_id") % 13 === 3).select("doc_id")
+  private[graft] def ccDeletedIds(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.filter(col("doc_id") % 13 === 3).select("doc_id")
 
   /** The keep-side document predicate (oracle form of [[ccDeletedIds]]).
     * A def — `defs` above initializes first and a val here would still
@@ -907,7 +901,8 @@ object DedupQueries {
     * live in subdirs. */
   private def stagedCcState(s: org.apache.spark.sql.SparkSession,
       d: String, tag: String,
-      docs: org.apache.spark.sql.DataFrame,
+      /** by name: a staged-cache hit builds no frame */
+      docs: => org.apache.spark.sql.DataFrame,
       /** explicit bucket count (the decade gates' handle); ≤ 0 derives
         * it from the standing label rows via [[stagedBuckets]] — the
         * byte-floor density rule, applied at initial staging (r19) */
@@ -1004,15 +999,44 @@ object DedupQueries {
     }
   }
 
-  /** The at-rest label rows (id, component, bucket) of a staged cluster
-    * state — `labels` bucketed by component, `labels_byid` by id — read
-    * with their frozen schema: over a corpus with no near-duplicate
-    * pair the state holds no label rows, the partitioned write leaves
-    * no data files, and an inferring read would throw
-    * UNABLE_TO_INFER_SCHEMA instead of returning the empty relation. */
-  private def atRestLabels(s: org.apache.spark.sql.SparkSession,
-      stateDir: String, rel: String = "labels"): org.apache.spark.sql.DataFrame =
-    s.read.schema("id BIGINT, component BIGINT, bucket INT").parquet(s"$stateDir/$rel")
+  /** The declared schema of every relation a staged or compacted state
+    * holds (`labels` bucketed by component, `labels_byid` by id, `edges`,
+    * the compaction's `sigs` snapshot, `membership`, `manifest`) and of
+    * every fold ledger's segments (`ops`, `pairs`, `opsq`, `dels`).
+    * Every read of them declares it, for two reasons: over a corpus with
+    * no near-duplicate pair the state holds no label rows, the
+    * partitioned write leaves no data files, and an inferring read would
+    * throw UNABLE_TO_INFER_SCHEMA instead of returning the empty
+    * relation; and an inferring read runs one Spark job per call (the
+    * footer-merge job), which the folds paid ~10 times per micro-batch.
+    * A declared column the files lack reads as null with no error, so
+    * DeclaredSchemaSpec pins each entry to what the writers produce. */
+  private[graft] val stateSchemas: Map[String, String] = {
+    val labels = "id BIGINT, component BIGINT, bucket INT"
+    Map("labels" -> labels, "labels_byid" -> labels,
+      "edges" -> "id_a BIGINT, id_b BIGINT, component BIGINT, bucket INT",
+      "sigs" -> "doc_id BIGINT, simhash BIGINT",
+      "membership" -> "doc_id BIGINT, component BIGINT, quality DOUBLE, bucket INT",
+      "manifest" ->
+        "component BIGINT, survivor_id BIGINT, n_members BIGINT, quality DOUBLE, bucket INT",
+      "ops" -> "op STRING, doc_id BIGINT, simhash BIGINT",
+      "pairs" -> "id_a BIGINT, id_b BIGINT",
+      "opsq" -> "op STRING, doc_id BIGINT, quality DOUBLE",
+      "dels" -> "doc_id BIGINT")
+  }
+
+  /** Relation `rel` of the state under `dir`, read with its declared
+    * schema ([[stateSchemas]]). */
+  private[graft] def stateRel(s: org.apache.spark.sql.SparkSession,
+      dir: String, rel: String): org.apache.spark.sql.DataFrame =
+    s.read.schema(stateSchemas(rel)).parquet(s"$dir/$rel")
+
+  /** An empty frame in `rel`'s declared schema — for a ledger family,
+    * the schema [[SegLedger.read]] reads its segments with. */
+  private def emptyState(s: org.apache.spark.sql.SparkSession,
+      rel: String): org.apache.spark.sql.DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(stateSchemas(rel)))
 
   private def labelBuckets(dir: String): Int =
     stateMeta(dir, "labels").map(_._1).getOrElse(16)
@@ -1020,10 +1044,10 @@ object DedupQueries {
     stateMeta(dir, "manifest").map(_._1).getOrElse(64)
   private def labelRows(s: org.apache.spark.sql.SparkSession, dir: String): Long =
     stateMeta(dir, "labels").map(_._2)
-      .getOrElse(atRestLabels(s, dir).count())
+      .getOrElse(stateRel(s, dir, "labels").count())
   private def manifestRows(s: org.apache.spark.sql.SparkSession, dir: String): Long =
     stateMeta(dir, "manifest").map(_._2)
-      .getOrElse(s.read.parquet(s"$dir/manifest").count())
+      .getOrElse(stateRel(s, dir, "manifest").count())
 
   /** A cc state staged at an explicit bucket count — the decade probe's
     * handle for the nb ∝ corpus rule (the gate stages 1× and N× states
@@ -1041,27 +1065,18 @@ object DedupQueries {
     stagedSurvivorState(s, d, s"graft_survivor_gate_b${nbM}v1",
       Tables.documents(s, d), ccState, nbM)
 
-  /** At-rest labels for a batch-sized id frame (col `id`) — a doc-keyed
-    * pruned read of the staged `labels_byid` mirror: only pmod(id, 16)
-    * buckets open, never the full label relation. Rows absent from the
-    * result are unclustered at rest (callers left-join + coalesce where
-    * the singleton rule applies). */
+  /** At-rest labels for a batch-sized set of driver-held doc ids — a
+    * doc-keyed pruned read of the staged `labels_byid` mirror: only the
+    * ids' pmod(id, nb) buckets open, never the full label relation, and
+    * the row filter is an InSet. Rows absent from the result are
+    * unclustered at rest (callers coalesce where the singleton rule
+    * applies). */
   private def atRestLabelsForIds(s: org.apache.spark.sql.SparkSession,
-      stateDir: String, ids: org.apache.spark.sql.DataFrame,
-      /** pmod(id, labelBuckets(stateDir)) set when the caller already
-        * holds it (observed off a pin) — skips the collect action */
-      bksOpt: Option[Seq[Int]] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val nb = labelBuckets(stateDir)
-    // nb == 1 ⇒ the only possible bucket is 0 — skip the collect (r20)
-    val bks = bksOpt.getOrElse(
-      if (nb == 1) Seq(0)
-      else ids.select(pmod(col("id"), lit(nb)).cast("int").as("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted)
-    val byid = atRestLabels(s, stateDir, "labels_byid")
-    (if (bks.isEmpty) byid.limit(0)
-     else byid.filter(col("bucket").isin(bks.map(Int.box): _*)))
-      .join(broadcast(ids), Seq("id"), "leftsemi")
+      stateDir: String, ids: Seq[Any]): org.apache.spark.sql.DataFrame = {
+    val bks = bucketsOf(ids, labelBuckets(stateDir))
+    val byid = stateRel(s, stateDir, "labels_byid")
+    semiIn(if (bks.isEmpty) byid.limit(0)
+      else byid.filter(col("bucket").isin(bks.map(Int.box): _*)), "id", ids)
       .select("id", "component")
   }
 
@@ -1074,10 +1089,8 @@ object DedupQueries {
       stateDirOpt: Option[String] = None)
       : (org.apache.spark.sql.DataFrame, Seq[Int]) = {
     val stateDir = stateDirOpt.getOrElse(ccStateDir(s, d))
-    val nb = labelBuckets(stateDir)
-    val bks = ids.select(pmod(col("id"), lit(nb)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    (atRestLabelsForIds(s, stateDir, ids), bks)
+    val keys = Held(ids.select("id")).keys("id")
+    (atRestLabelsForIds(s, stateDir, keys), bucketsOf(keys, labelBuckets(stateDir)))
   }
 
   /** Full-corpus cluster state (q181/q182/q185). */
@@ -1098,7 +1111,7 @@ object DedupQueries {
   /** The standing labels (id, component) from [[ccStateDir]]. */
   private[graft] def ccAtRestLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    atRestLabels(s, ccStateDir(s, d))
+    stateRel(s, ccStateDir(s, d), "labels")
 
   /** Components with a deleted CLUSTERED member — the recompute set.
     * O(deletes) rows; lazily pinned because the callers both prune with
@@ -1109,8 +1122,9 @@ object DedupQueries {
         * at a pinned bucket count — the derived default can collapse to
         * 1 bucket at tiny SFs, making pruning asserts vacuous) */
       stateDirOpt: Option[String] = None): org.apache.spark.sql.DataFrame =
-    atRestLabels(s, stateDirOpt.getOrElse(ccStateDir(s, d)))
-      .join(ccDeletedIds(s, d).select(col("doc_id").as("id")), Seq("id"), "leftsemi")
+    stateRel(s, stateDirOpt.getOrElse(ccStateDir(s, d)), "labels")
+      .join(ccDeletedIds(Tables.documents(s, d)).select(col("doc_id").as("id")),
+        Seq("id"), "leftsemi")
       .select("component").distinct()
       .localCheckpoint(false)
 
@@ -1131,7 +1145,7 @@ object DedupQueries {
       else touched
         .select(pmod(col("component"), lit(nbT)).cast("int").as("bucket"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val pruned = s.read.parquet(s"$stateDir/edges")
+    val pruned = stateRel(s, stateDir, "edges")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(touched), Seq("component"), "leftsemi")
       .select("id_a", "id_b")
@@ -1156,7 +1170,7 @@ object DedupQueries {
     * resolution target for label generations. */
   private def atRestLabelGenRows(s: org.apache.spark.sql.SparkSession,
       stateDir: String): org.apache.spark.sql.DataFrame =
-    atRestLabels(s, stateDir)
+    stateRel(s, stateDir, "labels")
       .select(col("id"), col("component"), col("component").as("orig"),
         col("bucket"))
 
@@ -1179,19 +1193,21 @@ object DedupQueries {
   private[graft] def componentsRetractStep(stateDir: String, root: String,
       b: org.apache.spark.sql.DataFrame, id: Long,
       ts: Option[Long] = None): Long =
-    componentsRetractImpl(stateDir, root, b, id, ts)._1
+    componentsRetractImpl(stateDir, root, b, Held(b.select("doc_id")).keys("doc_id"),
+      id, ts)._1
 
-  /** [[componentsRetractStep]] returning also the batch's REBUILT label
-    * rows (pinned) — the manifest repair relabels through exactly these,
-    * sparing a re-read of the generation just written. */
+  /** [[componentsRetractStep]] over the batch's driver-held doc ids
+    * `bIds`, returning also the batch's REBUILT label rows (pinned) — the
+    * manifest repair relabels through exactly these, sparing a re-read
+    * of the generation just written. */
   private def componentsRetractImpl(stateDir: String, root: String,
-      b: org.apache.spark.sql.DataFrame, id: Long,
-      ts: Option[Long] = None)
+      b: org.apache.spark.sql.DataFrame, bIds: Seq[Any], id: Long,
+      ts: Option[Long])
       : (Long, org.apache.spark.sql.DataFrame) = {
     val s = b.sparkSession
     val labelsRoot = s"$root/labels"
     val nb = labelBuckets(stateDir)
-    val atRest = atRestLabels(s, stateDir)
+    val atRest = stateRel(s, stateDir, "labels")
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
     // BOUND the dels family's reconstruction width (r18 — this family
     // has no state-level compaction, so a long forget-request stream
@@ -1204,7 +1220,7 @@ object DedupQueries {
     // standingCountSweeping also sweeps dirs stranded by a crash between
     // a checkpoint's commit and its vacuum (riding this check's listing)
     if (SegLedger.standingCountSweeping(s"$root/dels", id) > maxSegs)
-      SegLedger.checkpoint(s, s"$root/dels", id, b.select("doc_id").limit(0))
+      SegLedger.checkpoint(s, s"$root/dels", id, emptyState(s, "dels"))
     // the cumulative delete set reconstructed from O(batch) SEGMENTS
     // (r17): each fold appends only its own doc ids; deletes never
     // retract in this family, so the union IS the cumulative state
@@ -1212,20 +1228,18 @@ object DedupQueries {
     // checkpoint and the batch's orig point read share only the batch
     // frame — after the dels-family checkpoint trigger above, nothing
     // below mutates the family, so the two actions overlap
-    val (cumDels, touchedOrigP) = inParallel(
-      SegLedger.read(s, s"$root/dels", id, b.select("doc_id").limit(0))
+    val bIdFrame = Held.ids(s, "doc_id", bIds).df
+    val (cumDels, touchedOrig) = inParallel(
+      SegLedger.read(s, s"$root/dels", id, emptyState(s, "dels"))
         .select("doc_id")
-        .unionByName(b.select("doc_id")).distinct()
+        .unionByName(bIdFrame).distinct()
         .localCheckpoint(), // read by both anti-joins
       // the batch's ORIGINAL components — a doc-keyed pruned point read
       // (r17: the r16 shape semi-joined the full at-rest label relation,
-      // an O(corpus) scan per micro-batch)
-      pinMetered(
-        atRestLabelsForIds(s, stateDir, b.select(col("doc_id").as("id")))
-          .select("component").distinct(),
-        "cbk" -> pmod(col("component"), lit(nb))))
-    val touchedOrig = touchedOrigP.df // ≤ batch rows; prunes, anti-joins
-    val buckets = touchedOrigP.bks("cbk")
+      // an O(corpus) scan per micro-batch); ≤ batch rows, held
+      Held(atRestLabelsForIds(s, stateDir, bIds).select("component"))
+        .keys("component"))
+    val buckets = bucketsOf(touchedOrig, nb)
     val atRestRows = atRestLabelGenRows(s, stateDir)
     // predecessor content of ONLY the touched buckets — resolved
     // through the owners map, partition-pruned per owning generation,
@@ -1233,17 +1247,16 @@ object DedupQueries {
     val predTouched = BucketedGens.read(s, labelsRoot, base, atRestRows, Some(buckets))
     val pruned =
       if (buckets.isEmpty) atRest.select(col("id").as("id_a"), col("id").as("id_b")).limit(0)
-      else s.read.parquet(s"$stateDir/edges")
-        .filter(col("bucket").isin(buckets.map(Int.box): _*))
-        .join(broadcast(touchedOrig), Seq("component"), "leftsemi")
+      else semiIn(stateRel(s, stateDir, "edges")
+          .filter(col("bucket").isin(buckets.map(Int.box): _*)), "component", touchedOrig)
         .select("id_a", "id_b")
     // every recomputed id is an at-rest member of a touched original, so
     // its orig comes from the SAME pruned bucket set the edges use —
     // never a join against the full at-rest relation
     val touchedAtRestOrig =
       if (buckets.isEmpty) atRest.select(col("id"), col("component").as("orig")).limit(0)
-      else atRest.filter(col("bucket").isin(buckets.map(Int.box): _*))
-        .join(broadcast(touchedOrig), Seq("component"), "leftsemi")
+      else semiIn(atRest.filter(col("bucket").isin(buckets.map(Int.box): _*)),
+          "component", touchedOrig)
         .select(col("id"), col("component").as("orig"))
     val recomputed = retractedTouchedLabels(pruned, cumDels)
       .join(touchedAtRestOrig, Seq("id"))
@@ -1258,13 +1271,12 @@ object DedupQueries {
     val ((written, nextRows, predRows), _) = inParallel(
       BucketedGens.observedWrite(
           predTouched, buckets, s"$labelsRoot/gen-$id") { pred =>
-        pred.join(broadcast(touchedOrig.select(col("component").as("orig"))),
-            Seq("orig"), "left_anti")
+        antiIn(pred, "orig", touchedOrig)
           .select("id", "component", "orig")
           .unionByName(recomputed.select("id", "component", "orig"))
           .withColumn("bucket", pmod(col("orig"), lit(nb)).cast("int"))
       },
-      SegLedger.append(b.select("doc_id").distinct(), s"$root/dels", id))
+      SegLedger.append(bIdFrame, s"$root/dels", id))
     val baseRows = base.map(_.rows).getOrElse(labelRows(s, stateDir))
     val rows = baseRows - predRows + nextRows
     BucketedGens.commitFold(s, labelsRoot, base, id, nb, buckets, written, rows, ts)
@@ -1276,7 +1288,7 @@ object DedupQueries {
     * resolution target for manifest generations. */
   private def atRestManifestGenRows(s: org.apache.spark.sql.SparkSession,
       survState: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"$survState/manifest")
+    stateRel(s, survState, "manifest")
       .select(col("component"), col("survivor_id"), col("n_members"),
         col("quality"), col("component").as("orig"), col("bucket"))
 
@@ -1305,21 +1317,19 @@ object DedupQueries {
     // label relation, an O(corpus) scan per micro-batch. Runs on
     // [[foldPool]] OVERLAPPING the label fold (r19, guide §2.6): it
     // reads only the immutable at-rest state + the batch frame, never
-    // the generations the fold is writing.
-    val fTouchedOrig = scala.concurrent.Future(
-      pinMetered(b.select(col("doc_id"))
-        .join(atRestLabelsForIds(s, ccState, b.select(col("doc_id").as("id")))
-            .withColumnRenamed("id", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(coalesce(col("component"), col("doc_id")).as("orig"))
-        .distinct(),
-        "mbk" -> pmod(col("orig"), lit(nbM))))(foldPool)
-    val (_, rebuilt) = componentsRetractImpl(ccState, root, b, id, ts)
+    // the generations the fold is writing. The batch ids and the
+    // originals are held on the driver: the coalesce is Scala.
+    val bIds = Held(b.select("doc_id")).keys("doc_id")
+    val fTouchedOrig = scala.concurrent.Future {
+      val comp = Held(atRestLabelsForIds(s, ccState, bIds)).rows
+        .map(r => r.get(0) -> r.get(1)).toMap
+      bIds.map(d => comp.getOrElse(d, d)).distinct
+    }(foldPool)
+    val (_, rebuilt) = componentsRetractImpl(ccState, root, b, bIds, id, ts)
     val baseM = BucketedGens.latest(manRoot, below = Some(id))
     val atRestRows = atRestManifestGenRows(s, survState)
-    val touchedOrigP = awaitFold(fTouchedOrig, "touched-orig pin")
-    val touchedOrig = touchedOrigP.df // pass-through anti + member prune
-    val buckets = touchedOrigP.bks("mbk")
+    val touchedOrig = awaitFold(fTouchedOrig, "touched-orig read")
+    val buckets = bucketsOf(touchedOrig, nbM)
     // predecessor manifest rows of ONLY the touched buckets — consumed
     // once, inside the observed generation write below
     val predTouched = BucketedGens.read(s, manRoot, baseM, atRestRows, Some(buckets))
@@ -1327,33 +1337,27 @@ object DedupQueries {
     // relabeled through the batch's REBUILT labels (exactly the touched
     // originals' post-delete closure — edge-less members coalesce to
     // their own id, the singleton rule)
-    val cumDels = SegLedger.read(s, s"$root/dels", id + 1,
-        b.select("doc_id").limit(0))
+    val cumDels = SegLedger.read(s, s"$root/dels", id + 1, emptyState(s, "dels"))
       .select("doc_id").distinct()
     val newLabels = rebuilt
       .select(col("id").as("doc_id"), col("component").as("__newc"))
-    val reElectedP = pinMetered(s.read.parquet(s"$survState/membership")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .join(broadcast(touchedOrig.select(col("orig").as("component"))),
-        Seq("component"), "leftsemi")
+    // held: one row per touched original's re-elected component, and
+    // the orig lookup below keys on its component ids
+    val reElected = Held(semiIn(stateRel(s, survState, "membership")
+        .filter(col("bucket").isin(buckets.map(Int.box): _*)), "component", touchedOrig)
       .join(cumDels, Seq("doc_id"), "left_anti")
       .drop("component")
       .join(newLabels, Seq("doc_id"), "left")
       .select(col("doc_id"), col("quality"),
         coalesce(col("__newc"), col("doc_id")).as("component"))
-      .transform(electSurvivors),
-      // the orig lookup's byid bucket set rides the pin (batch-affected
-      // rows; the pin also feeds the generation write)
-      "ibk" -> pmod(col("component"), lit(labelBuckets(ccState))))
-    val reElected = reElectedP.df
+      .transform(electSurvivors))
     // a re-elected component is a member id of a touched original, so
     // its orig resolves through the at-rest labels (self for remnant
     // singletons) and lands INSIDE the touched bucket set — a doc-keyed
     // pruned point read of the byid mirror (r17: was a per-batch join
     // against the full O(corpus) at-rest relation)
-    val reElectedO = reElected
-      .join(atRestLabelsForIds(s, ccState, reElected.select(col("component").as("id")),
-          Some(reElectedP.bks("ibk")))
+    val reElectedO = reElected.df
+      .join(atRestLabelsForIds(s, ccState, reElected.keys("component"))
           .select(col("id").as("component"), col("component").as("__ro")),
         Seq("component"), "left")
       .select(col("component"), col("survivor_id"), col("n_members"),
@@ -1362,7 +1366,7 @@ object DedupQueries {
     // sides as observe() metrics (see componentsRetractImpl)
     val (written, nextRows, predRows) = BucketedGens.observedWrite(
         predTouched, buckets, s"$manRoot/gen-$id") { pred =>
-      pred.join(broadcast(touchedOrig), Seq("orig"), "left_anti")
+      antiIn(pred, "orig", touchedOrig)
         .select("component", "survivor_id", "n_members", "quality", "orig")
         .unionByName(reElectedO)
         .withColumn("bucket", pmod(col("orig"), lit(nbM)).cast("int"))
@@ -1420,24 +1424,21 @@ object DedupQueries {
     * components the batch rebuilt or merged), the affected docs' OLD
     * ids (label rows dropped this batch), and the cumulative deletes —
     * so [[survivorCdcStep]] never re-derives the rebuild universe. */
-  private final case class CdcFold(rows: Long,
-      newLocal: org.apache.spark.sql.DataFrame,
-      oldAffected: org.apache.spark.sql.DataFrame,
-      cumDels: org.apache.spark.sql.DataFrame)
+  private final case class CdcFold(rows: Long, newLocal: Held,
+      oldAffected: Seq[Any], cumDels: org.apache.spark.sql.DataFrame)
 
   /** Batch work a COMPOSED caller (the manifest fold) has already paid
     * that [[componentsCdcImpl]] would otherwise redo (r19/r20 job
     * diet): NET op presence (hasD counts net-D docs — the only
     * downstream question is "is there any delete/append work") with
     * the seq-less payload-ambiguity check ALREADY ENFORCED by the
-    * caller, and the net-op batch pin, whose frame carries the label
-    * payload columns (op, doc_id, simhash[, …]) plus the pin's
-    * observed pmod(doc_id, nb) bucket set under the key "ibk".
-    * survivorCdcStep folds its quality columns into the SAME aggregate
-    * and the SAME pin, so the composed fold pays one checkpoint where
-    * it paid a stats head plus two of each. */
+    * caller, and the held net-op batch, whose rows carry the label
+    * payload columns (op, doc_id, simhash[, …]). survivorCdcStep folds
+    * its quality columns into the SAME aggregate and the SAME collect,
+    * so the composed fold pays one batch head where it paid a stats
+    * head plus two of each. */
   private[queries] final case class CdcBatchPre(hasD: Boolean,
-      hasI: Boolean, opsPin: Pin)
+      hasI: Boolean, ops: Held)
 
   /** Normalize an ORDERED changelog batch — a `seq` column carrying
     * each row's changelog position — to per-doc NET ops: the max-seq
@@ -1459,23 +1460,89 @@ object DedupQueries {
           .partitionBy("doc_id").orderBy(col("seq").desc)))
       .filter(col("__r") === 1).drop("__r", "seq")
 
-  /** A pinned batch-sized frame with its row count and the bucket
-    * list(s) its downstream consumers prune by — ALL read off the one
-    * localCheckpoint action as observe() metrics, so neither the
-    * emptiness probes that gate the fold's branches nor the bucket-list
-    * collects cost extra jobs (r16 paid an isEmpty action per probe
-    * and a distinct+collect action per bucket list). collect_set is
-    * agg-legal in observed metrics; the sets are EXACT — a driver-side
-    * union of per-piece observed sets equals the collect the r16 shape
-    * ran over the unioned frame. AQE may replace a statically-empty
-    * observed subtree with an empty relation and drop the
-    * CollectMetrics node — the metrics map comes back EMPTY, which
-    * means the true count/sets are zero/empty (the fold defaults, per
-    * the round-17 observe lesson). */
-  private[queries] final case class Pin(df: org.apache.spark.sql.DataFrame,
-      n: Long, bkSets: Map[String, Seq[Int]]) {
-    def bks(k: String): Seq[Int] = bkSets.getOrElse(k, Nil)
+  /** The per-doc payload-ambiguity flag of the batch head's groupBy: more
+    * than one distinct non-null `struct(payload)` among the doc's I rows.
+    * Written as min ≠ max over the same structs, not count_distinct > 1:
+    * the predicate is the same (a doc with no I row reads null, counted
+    * as no conflict), but a distinct aggregate beside the head's other
+    * aggregates forces an Expand rewrite and a second shuffle — one
+    * extra Spark job per micro-batch. */
+  private def ambiguous(payload: String): org.apache.spark.sql.Column = {
+    val p = when(col("op") === "I", struct(col(payload)))
+    min(p) =!= max(p)
   }
+
+  /** A pinned CORPUS-sized frame (the staging and compaction builds)
+    * with its row count, read off the one localCheckpoint action as an
+    * observe() metric. AQE may replace a statically-empty observed
+    * subtree with an empty relation and drop the CollectMetrics node —
+    * the metrics map comes back EMPTY, which means the true count is
+    * zero (the round-17 observe lesson). Batch-sized fold frames are
+    * [[Held]] instead. */
+  private[queries] final case class Pin(df: org.apache.spark.sql.DataFrame, n: Long)
+
+  /** A BATCH-SIZED fold frame held on the driver: its rows, collected by
+    * the one action that used to be its localCheckpoint. The count, key
+    * sets and bucket sets are then Scala over the rows (no observe()
+    * metrics, no AQE missing-metric rule), `df` is a LocalRelation over
+    * them for the consumers that still need a frame, and semi/anti
+    * consumers filter with [[semiIn]]/[[antiIn]] on a key set — an
+    * InSet, which runs no Spark job where a broadcast build side ran
+    * one (a broadcast of a LocalRelation still does).
+    *
+    * Bound: every frame held here was a broadcast build side on
+    * PlanBudgetSpec's O(batch) allowlist (or the batch head and V, built
+    * only from such frames), and its broadcast already collected it
+    * whole to the driver — holding it adds no driver-memory exposure,
+    * so there is no size switch and no second path. */
+  private[queries] final case class Held(s: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) {
+    lazy val df: org.apache.spark.sql.DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def n: Long = rows.length.toLong
+    /** The distinct non-null values of column `c`. */
+    def keys(c: String): Seq[Any] = {
+      val i = schema.fieldIndex(c)
+      rows.iterator.map(_.get(i)).filter(_ != null).toSeq.distinct
+    }
+    /** The rows whose column `c` reads `v`. */
+    def where(c: String, v: Any): Seq[org.apache.spark.sql.Row] = {
+      val i = schema.fieldIndex(c)
+      rows.toSeq.filter(_.get(i) == v)
+    }
+  }
+
+  private[queries] object Held {
+    /** Collect `df` — the one action the frame costs. */
+    def apply(df: org.apache.spark.sql.DataFrame): Held =
+      Held(df.sparkSession, df.collect(), df.schema)
+    def empty(s: org.apache.spark.sql.SparkSession, ddl: String): Held =
+      Held(s, Array.empty, org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    /** One BIGINT column `c` over driver-side keys. */
+    def ids(s: org.apache.spark.sql.SparkSession, c: String, keys: Seq[Any]): Held =
+      Held(s, keys.map(org.apache.spark.sql.Row(_)).toArray,
+        org.apache.spark.sql.types.StructType.fromDDL(s"$c BIGINT"))
+  }
+
+  /** `df` semi-joined on `key` against a driver-held key set, as an
+    * InSet filter: equal to a leftsemi join on `key` against the keys as
+    * a broadcast frame (null keys never match), with no Spark job. */
+  private[queries] def semiIn(df: org.apache.spark.sql.DataFrame, key: String,
+      keys: Seq[Any]): org.apache.spark.sql.DataFrame =
+    df.filter(col(key).isInCollection(keys.filter(_ != null)))
+
+  /** `df` anti-joined on `key` against a driver-held key set, as an InSet
+    * filter: equal to a left_anti join on `key` against the keys as a
+    * broadcast frame, which keeps a row whose key is null. */
+  private[queries] def antiIn(df: org.apache.spark.sql.DataFrame, key: String,
+      keys: Seq[Any]): org.apache.spark.sql.DataFrame =
+    df.filter(col(key).isNull || !col(key).isInCollection(keys.filter(_ != null)))
+
+  /** The pmod(key, nb) bucket set of driver-held long keys. */
+  private def bucketsOf(keys: Seq[Any], nb: Int): Seq[Int] =
+    keys.map(k => java.lang.Math.floorMod(k.asInstanceOf[Long], nb.toLong).toInt)
+      .distinct.sorted
   /** Dedicated daemon pool for OVERLAPPING independent driver actions
     * inside a fold (spark_optimization_guide §2.6): Spark's scheduler
     * happily runs several jobs at once; fold actions are sequential only
@@ -1530,38 +1597,23 @@ object DedupQueries {
     (ra, awaitFold(fb, "inParallel"))
   }
 
-  private[queries] def pinMetered(df: org.apache.spark.sql.DataFrame,
-      bucketOf: (String, org.apache.spark.sql.Column)*): Pin =
-    pinMeteredEx(df, Nil, bucketOf: _*)._1
-
-  /** [[pinMetered]] with EXTRA observed metrics riding the same
-    * checkpoint action (r20 job diet: a fold step that needs both a pin
-    * and scalar batch stats pays ONE action, not two). Missing metrics
-    * read as 0/empty per the AQE empty-subtree rule on [[Pin]]. */
-  private[queries] def pinMeteredEx(df: org.apache.spark.sql.DataFrame,
-      extra: Seq[org.apache.spark.sql.Column],
-      bucketOf: (String, org.apache.spark.sql.Column)*)
-      : (Pin, Map[String, Any]) = {
+  private[queries] def pinMetered(df: org.apache.spark.sql.DataFrame): Pin = {
     val obs = org.apache.spark.sql.Observation()
-    val metrics = count(lit(1)).as("n") +: (bucketOf.map { case (k, c) =>
-      collect_set(c.cast("int")).as(k) } ++ extra)
-    val p = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint()
-    val m = obs.get
-    (Pin(p, m.get("n").fold(0L)(_.asInstanceOf[Long]),
-      bucketOf.map { case (k, _) =>
-        k -> m.get(k).fold(Seq.empty[Int])(
-          _.asInstanceOf[scala.collection.Seq[Any]]
-            .map(_.asInstanceOf[Int]).toSeq.sorted)
-      }.toMap), m)
+    val p = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    Pin(p, obs.get.get("n").fold(0L)(_.asInstanceOf[Long]))
   }
 
-  /** Observed-metric helpers on the [[pinMeteredEx]] map (missing = the
-    * AQE-proved-empty case = 0 / empty set). */
-  private def mLong(m: Map[String, Any], k: String): Long =
-    m.get(k).fold(0L)(_.asInstanceOf[Long])
-  private def mIntSet(m: Map[String, Any], k: String): Seq[Int] =
-    m.get(k).fold(Seq.empty[Int])(_.asInstanceOf[scala.collection.Seq[Any]]
-      .map(_.asInstanceOf[Int]).toSeq.sorted)
+  /** Connected components of batch-sized evidence, held: the local
+    * union-find's result is already on the driver; the distributed
+    * path's frame is collected (its ids feed V, a held frame). */
+  private def componentsHeld(edges: org.apache.spark.sql.DataFrame): Held =
+    Components.connectedComponentsEither(edges, "id_a", "id_b") match {
+      case Left(pairs) =>
+        Held(edges.sparkSession,
+          pairs.map { case (i, c) => org.apache.spark.sql.Row(i, c) },
+          org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, component BIGINT"))
+      case Right(df) => Held(df.select(col("id"), col("component")))
+    }
   /** Ledger-size compaction TRIGGER (q190 — the policy in place of
     * r16's hardcoded cadence): compact when the accumulated ledger
     * segment rows exceed `frac` of the standing manifest rows, OR when
@@ -1683,59 +1735,41 @@ object DedupQueries {
     val stateDir = effectiveState(s, root, Some(id), stateDir0)
     val nb = labelBuckets(stateDir)
     val ledgerFloor = segFloor(root, Some(id))
-    val atRest = atRestLabels(s, stateDir)
+    val atRest = stateRel(s, stateDir, "labels")
     def atRestRows = atRest.select(col("id"), col("component"), col("bucket"))
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
-    val emptyIds = b.select(col("doc_id")).limit(0)
-    val emptyPairs = b
-      .select(col("doc_id").as("id_a"), col("doc_id").as("id_b")).limit(0)
-    // ONE batch-stats aggregate in place of three per-fold actions
-    // (isEmpty ×2 + the ambiguity head): op presence and the seq-less
-    // ambiguity counts come from a single job over the batch. distinct
-    // aggregates can't ride observe(), so this stays its own action —
+    val emptyPairs = emptyState(s, "pairs")
+    // THE BATCH'S NET OPS — this (and only this) lands as the batch's
+    // `ops` ledger SEGMENT: per-batch ledger write I/O is O(batch), not
+    // O(churn-since-compaction) (r17 — r16 rewrote the full cumulative
+    // frames every fold). I beats D within a batch (the D-then-I upsert
+    // order), so a doc carries exactly one row per segment. ONE action
+    // (r20): the per-doc groupBy computes the net op + surviving payload
+    // + ambiguity flag, and its rows are held on the driver, so op
+    // presence, the ambiguity count and the touched id set are Scala —
     // unless a composed caller (the manifest fold) already paid it and
-    // hands the counts plus the net-op pin in via `pre` (r19 job diet:
-    // one stats job + one checkpoint per composed fold, not two).
-    val (hasD, hasI, batchOpsP) = pre match {
+    // hands the held batch in via `pre` (r19 job diet).
+    val (hasD, hasI, ops) = pre match {
       case Some(p) =>
         // payload ambiguity already enforced by the composed caller's
         // shared aggregate — nothing to recheck here
-        (p.hasD, p.hasI, p.opsPin)
+        (p.hasD, p.hasI, p.ops)
       case None =>
-        // THE BATCH'S NET OPS — this (and only this) lands as the batch's
-        // `ops` ledger SEGMENT: per-batch ledger write I/O is O(batch), not
-        // O(churn-since-compaction) (r17 — r16 rewrote the full cumulative
-        // frames every fold). I beats D within a batch (the D-then-I upsert
-        // order), so a doc carries exactly one row per segment. This is the
-        // fold's ONE batch pin: the delete/append slices and the touched id
-        // set are filters/projections of it (a doc appears exactly once),
-        // and its observed id-bucket set prunes the touched-seed point read.
-        // ONE action (r20): the per-doc groupBy computes the net op +
-        // surviving payload + ambiguity flag, and op presence rides the
-        // pin's checkpoint as observe() metrics — the r19 shape paid a
-        // separate stats head and three exchanges (two distincts + an
-        // anti-join) where this pays one.
-        val netRaw = b.groupBy("doc_id").agg(
+        val ops = labeled(s, "cfold:opsPin")(Held(b.groupBy("doc_id").agg(
           max("op").as("op"),
           first(col("simhash"), ignoreNulls = true).as("simhash"),
-          (count_distinct(when(col("op") === "I", struct(col("simhash")))) > 1)
-            .as("__ambS"))
-        val (p, m) = labeled(s, "cfold:opsPin")(pinMeteredEx(netRaw,
-          Seq(count(when(col("op") === "D", 1)).as("nD"),
-            count(when(col("op") === "I", 1)).as("nI"),
-            count(when(col("__ambS"), 1)).as("ambS")),
-          "ibk" -> pmod(col("doc_id"), lit(nb))))
+          ambiguous("simhash").as("__ambS"))))
         if (!b0.columns.contains("seq"))
-          require(mLong(m, "ambS") == 0,
+          require(ops.where("__ambS", true).isEmpty,
             "seq-less batch carries conflicting I payloads (simhash) for one " +
               "doc_id — the op order is ambiguous; ordered producers must " +
               "ship a `seq` column")
-        (mLong(m, "nD") > 0, mLong(m, "nI") > 0, p)
+        (ops.where("op", "D").nonEmpty, ops.where("op", "I").nonEmpty, ops)
     }
-    // a composed caller's pin may carry extra payload columns (quality)
-    // — project to the label fold's shape; the ops ledger schema and
-    // every downstream slice are unchanged either way
-    val batchOps = batchOpsP.df.select("op", "doc_id", "simhash")
+    // a composed caller's batch may carry extra payload columns
+    // (quality) — project to the label fold's shape; the ops ledger
+    // schema and every downstream slice are unchanged either way
+    val batchOps = ops.df.select("op", "doc_id", "simhash")
     val bI = batchOps.filter(col("op") === "I").select("doc_id", "simhash")
     // cumulative state RECONSTRUCTED from the segments: last-writer-wins
     // per doc over segment ordinals (within a segment the net op is
@@ -1745,10 +1779,10 @@ object DedupQueries {
     // batch, or right after a compaction — a DRIVER-side listing, no
     // job) skips the window: its own net ops ARE the winners.
     val hasOpsSegs = SegLedger.dirs(s"$root/ops", id, ledgerFloor).nonEmpty
-    val allOps = SegLedger.read(s, s"$root/ops", id, batchOps.limit(0), ledgerFloor)
+    val allOps = SegLedger.read(s, s"$root/ops", id, emptyState(s, "ops"), ledgerFloor)
       .unionByName(batchOps.withColumn("__seg", lit(id)))
     val winners =
-      if (!hasOpsSegs) batchOps // already one net row per doc, and pinned
+      if (!hasOpsSegs) batchOps // already one net row per doc, and held
       else labeled(s, "cfold:winners")(
         allOps.withColumn("__r", row_number().over(
           org.apache.spark.sql.expressions.Window
@@ -1762,9 +1796,8 @@ object DedupQueries {
     // its old pairs are purged and its component rebuilt, with fresh
     // probe pairs (below) re-defining it. This makes a bare I on a
     // present doc a full upsert, not a probe-only patch.
-    // the touched docs are exactly the net-op docs (D ∪ I as a set) —
-    // a projection of the one batch pin, one row per doc
-    val touchedIds = batchOps.select("doc_id")
+    // the touched docs are exactly the net-op docs (D ∪ I as a set)
+    val touchedIds = ops.keys("doc_id")
     // the standing APPENDED-pair ledger: a pair from segment k is alive
     // iff no LATER segment carries any op for either endpoint (the
     // purge, resolved at read time — same-batch probe pairs survive
@@ -1777,7 +1810,7 @@ object DedupQueries {
     val opsTouchB = allOps.select(col("doc_id").as("__tb"), col("__seg").as("__tsb"))
     // pinned on [[foldPool]] so its reconstruction window overlaps the
     // closure walk below — the two share no inputs beyond the already-
-    // pinned batch/winners frames (r19 job diet, guide §2.6); awaited
+    // held batch/winners frames (r19 job diet, guide §2.6); awaited
     // at ledgerEdges, its first consumer
     val fLedger = scala.concurrent.Future(labeled(s, "cfold:pairLedger")(
       if (pairSegs.isEmpty) emptyPairs
@@ -1789,70 +1822,40 @@ object DedupQueries {
         .select("id_a", "id_b")
         .localCheckpoint()))(foldPool)
     // THE DOC-KEYED LABEL MIRROR (r17): every id-keyed probe below
-    // resolves through pmod(id, 16) point reads of the `labels_byid`
+    // resolves through pmod(id, nb) point reads of the `labels_byid`
     // generations — r16 pinned the FULL standing label relation here, an
     // O(corpus) scan per micro-batch (the read floor). Component-keyed
     // member reads resolve through the component-keyed generations under
-    // the same pruning discipline.
+    // the same pruning discipline. Every probe takes a driver-held key
+    // set: its bucket set is Scala and its row filter an InSet, so a
+    // probe costs only the collect of the frame it feeds.
     val byidRoot = s"$root/labels_byid"
     val baseBy = BucketedGens.latest(byidRoot, below = Some(id))
-    def atRestById = atRestLabels(s, stateDir, "labels_byid")
-    def bucketsOf(df: org.apache.spark.sql.DataFrame, key: String): Seq[Int] =
-      // pmod(_, 1) = 0 identically — skip the 2-job collect (r20); the
-      // pruned read of bucket 0 over an empty probe frame is still empty
-      if (nb == 1) Seq(0)
-      else df.select(pmod(col(key), lit(nb)).cast("int").as("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // Each helper takes the caller's OBSERVED bucket set when one is on
-    // hand (ridden on a pin — see [[pinMetered]]); the collect fallback
-    // covers the frames with no pin to ride (one consumer, pinning
-    // would cost the action it saves).
-    // CURRENT label rows for a batch-sized id frame (col `id`)
-    def labelsForIds(ids: org.apache.spark.sql.DataFrame,
-        bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame = {
-      val bks = bksOpt.getOrElse(bucketsOf(ids, "id"))
-      BucketedGens.read(s, byidRoot, baseBy, atRestById, Some(bks))
-        .join(broadcast(ids), Seq("id"), "leftsemi").select("id", "component")
-    }
-    // CURRENT member rows of a batch-affected component frame (col `component`)
-    def membersOf(comps: org.apache.spark.sql.DataFrame,
-        bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame = {
-      val bks = bksOpt.getOrElse(bucketsOf(comps, "component"))
-      BucketedGens.read(s, labelsRoot, base, atRestRows, Some(bks))
-        .join(broadcast(comps), Seq("component"), "leftsemi").select("id", "component")
-    }
-    // at-rest ORIGINALS of a batch-affected id frame — the staged byid mirror
-    // no distinct (r20): consumers are join build sides, emptiness
-    // gates, and observed bucket sets — duplicates (one per affected
-    // member sharing an orig) are harmless; the distinct cost an
-    // exchange inside every walk-hop pin
-    def origsForIds(ids: org.apache.spark.sql.DataFrame,
-        bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame =
-      atRestLabelsForIds(s, stateDir, ids, bksOpt)
-        .select(col("component").as("orig"))
-    // at-rest MEMBER ids of an orig frame (col `orig`) — staged labels, pruned
-    def atRestMembersOf(origs: org.apache.spark.sql.DataFrame,
-        bksOpt: Option[Seq[Int]] = None): org.apache.spark.sql.DataFrame = {
-      val bks = bksOpt.getOrElse(bucketsOf(origs, "orig"))
-      (if (bks.isEmpty) atRest.limit(0)
-       else atRest.filter(col("bucket").isin(bks.map(Int.box): _*)))
-        .join(broadcast(origs.select(col("orig").as("component"))),
-          Seq("component"), "leftsemi")
+    def atRestById = stateRel(s, stateDir, "labels_byid")
+    // CURRENT label rows (id, component) of a batch-sized id set
+    def labelsForIds(ids: Seq[Any]): org.apache.spark.sql.DataFrame =
+      semiIn(BucketedGens.read(s, byidRoot, baseBy, atRestById, Some(bucketsOf(ids, nb))),
+        "id", ids).select("id", "component")
+    // CURRENT member rows (id, component) of a batch-affected component set
+    def membersOf(comps: Seq[Any]): org.apache.spark.sql.DataFrame =
+      semiIn(BucketedGens.read(s, labelsRoot, base, atRestRows, Some(bucketsOf(comps, nb))),
+        "component", comps).select("id", "component")
+    // at-rest ORIGINALS of a batch-affected id set — the staged byid mirror
+    def origsForIds(ids: Seq[Any]): org.apache.spark.sql.DataFrame =
+      atRestLabelsForIds(s, stateDir, ids).select(col("component").as("orig"))
+    // at-rest MEMBER ids of an orig set — staged labels, pruned
+    def atRestMembersOf(origs: Seq[Any]): org.apache.spark.sql.DataFrame = {
+      val bks = bucketsOf(origs, nb)
+      semiIn(if (bks.isEmpty) atRest.limit(0)
+        else atRest.filter(col("bucket").isin(bks.map(Int.box): _*)), "component", origs)
         .select("id")
     }
 
     // ---- retract side: the orig-closure rebuild universe, seeded by
     // every component holding a doc this batch deletes OR re-defines ----
-    // no distinct (r20): consumers are semi/anti-join build sides and
-    // the observed bucket set — duplicates (one per batch doc sharing a
-    // component) are harmless and the distinct cost an exchange per fold
-    val touchedP = labeled(s, "cfold:touched")(pinMetered(
-      labelsForIds(touchedIds.withColumnRenamed("doc_id", "id"),
-        Some(batchOpsP.bks("ibk")))
-        .select("component"),
-      "cbk" -> pmod(col("component"), lit(nb))))
-    val touched = touchedP.df
-    val hasTouched = touchedP.n > 0
+    val touched = labeled(s, "cfold:touched")(
+      Held(labelsForIds(touchedIds).select("component"))).keys("component")
+    val hasTouched = touched.nonEmpty
     // The closure WALK (replaces the per-batch connectedComponents over
     // a corpus-derived comp↔orig relation): appended bridges can MERGE
     // original components and successive merges/splits chain comp↔orig
@@ -1864,31 +1867,26 @@ object DedupQueries {
     // containing the touched components; each hop is two pruned point
     // reads (current members → their origs; the new origs' at-rest
     // members → their current comps) — O(affected) rows and buckets per
-    // hop, never a corpus scan, and it accumulates the member rows so
+    // hop, never a corpus scan, and it accumulates the member ids so
     // the rebuild below re-reads nothing. Terminates: the component set
     // grows monotonically inside a finite corpus. Star-forest batches
     // (no appended pair in play) converge in one round + one empty
-    // check — the r16 fast path, without a separate code path.
-    // Each walk frame's pin carries the bucket set(s) the NEXT hop
-    // prunes by, and the running comps/origs/mAll unions stay unpinned
-    // (unions of pinned pieces — trivial lineage, re-pinning each hop
-    // was an action per frame per hop); their bucket sets accumulate
-    // driver-side, exactly the sets the r16 shape collected per use.
+    // check — the r16 fast path, without a separate code path. Every
+    // set the walk carries (components, origs, member ids) is a
+    // driver-side key set, accumulated in Scala.
     // ---- append side, STARTED before the walk (r19, guide §2.6): the
-    // probe of the present corpus depends only on the pinned winners +
-    // the static sig frame — it overlaps the closure walk's serial
-    // hops on [[foldPool]] and is awaited at its first consumer ----
+    // probe of the present corpus depends only on the winners + the
+    // static sig frame — it overlaps the closure walk's serial hops on
+    // [[foldPool]] and is awaited at its first consumer ----
     // at-rest evidence superseded by a delete OR a (re-)append — those
     // docs' standing edges come from the pair ledger + fresh probes
-    // derived from the pinned winners, consumed only by anti-joins —
+    // derived from the winners, consumed only by anti-joins —
     // duplicates are harmless, so no distinct shuffle, no pin
     val supersededAtRest = cumDels.unionByName(cumApps.select("doc_id"))
-    // pinned WITH its endpoints' observed id-bucket sets (r20): the
-    // append-side contraction probe (aApp below) resolves the pair
-    // endpoints' current labels, and riding the sets on this checkpoint
-    // saves its 2-job bucket collect
+    // held: the append-side contraction probe (aApp below) resolves the
+    // pair endpoints' current labels from its key sets
     val fDeltaPairs = scala.concurrent.Future(labeled(s, "cfold:deltaPairs")(
-      if (!hasI) Pin(emptyPairs, 0L, Map.empty) else {
+      if (!hasI) Held.empty(s, stateSchemas("pairs")) else {
         // the probe's base corpus is whatever the at-rest state COVERS:
         // the historyPred slice of the static frame initially, the
         // compacted state's own sig snapshot after a compaction (it
@@ -1896,180 +1894,100 @@ object DedupQueries {
         // describes coverage)
         val baseCorpus =
           if (stateDir == stateDir0) staticSigs.filter(historyPred)
-          else s.read.parquet(s"$stateDir/sigs")
+          else stateRel(s, stateDir, "sigs")
         val present = baseCorpus
           .join(supersededAtRest, Seq("doc_id"), "left_anti")
           .unionByName(cumApps.select("doc_id", "simhash"))
-        pinMetered( // read by the merge AND the ledger write
-          TextDedup.simHashNearDupAgainst(bI, present, "doc_id", "simhash", 3)
-            .select("id_a", "id_b"),
-          "abk" -> pmod(col("id_a"), lit(nb)),
-          "bbk" -> pmod(col("id_b"), lit(nb)))
+        // read by the merge AND the ledger write
+        Held(TextDedup.simHashNearDupAgainst(bI, present, "doc_id", "simhash", 3)
+          .select("id_a", "id_b"))
       }))(foldPool)
-    val emptyComps = emptyIds.withColumnRenamed("doc_id", "component")
-    val (rebuildComps, closureOrigs, mRebuild, compsBksAll, mRebuildBks, closureOrigBks) =
-      if (!hasTouched)
-        (emptyComps, emptyIds.withColumnRenamed("doc_id", "orig"),
-          atRestById.select("id", "component").limit(0),
-          Seq.empty[Int], Seq.empty[Int], Seq.empty[Int])
+    val (rebuildComps, closureOrigs, mRebuild) =
+      if (!hasTouched) (Seq.empty[Any], Seq.empty[Any], Seq.empty[Any])
       else {
         var comps = touched
-        var compsBks = touchedP.bks("cbk")
-        val mAll0 = labeled(s, "cfold:members0")(
-          pinMetered(membersOf(touched, Some(compsBks)),
-            "ibk" -> pmod(col("id"), lit(nb))))
-        var mAll = mAll0.df
-        var mAllBks = mAll0.bks("ibk")
-        val origs0 = labeled(s, "cfold:origs0")(pinMetered(
-          origsForIds(mAll0.df.select("id"), Some(mAll0.bks("ibk"))),
-          "obk" -> pmod(col("orig"), lit(nb))))
-        var origs = origs0.df
-        var origsBks = origs0.bks("obk")
-        var frontier = origs0
-        var grow = origs0.n > 0
+        var mAll = labeled(s, "cfold:members0")(Held(membersOf(touched))).keys("id")
+        var origs = labeled(s, "cfold:origs0")(Held(origsForIds(mAll))).keys("orig")
+        var frontier = origs
+        var grow = origs.nonEmpty
         while (grow) {
-          // no distinct (r20): fresh's consumers — the running comps
-          // union (itself only ever a broadcast anti/semi build side),
-          // membersOf's semi build side, the emptiness gate, the
-          // observed bucket set — are dup-tolerant; dup volume is one
-          // row per at-rest member sharing a current component, the
-          // same O(affected-members) order the walk's pinned member
-          // frames already carry
-          val fresh = labeled(s, "cfold:walkFresh")(pinMetered(
-            labelsForIds(atRestMembersOf(frontier.df, Some(frontier.bks("obk"))))
-              .select("component")
-              .join(broadcast(comps), Seq("component"), "left_anti"),
-            "cbk" -> pmod(col("component"), lit(nb))))
-          if (fresh.n == 0) grow = false
+          // the frontier's at-rest members (held: their bucket set
+          // prunes the label probe), then their current components the
+          // walk has not seen
+          val fresh = labeled(s, "cfold:walkFresh") {
+            val members = Held(atRestMembersOf(frontier)).keys("id")
+            Held(antiIn(labelsForIds(members).select("component"), "component", comps))
+              .keys("component")
+          }
+          if (fresh.isEmpty) grow = false
           else {
-            comps = comps.unionByName(fresh.df)
-            compsBks = (compsBks ++ fresh.bks("cbk")).distinct.sorted
-            val mNew = labeled(s, "cfold:walkMembers")(
-              pinMetered(membersOf(fresh.df, Some(fresh.bks("cbk"))),
-                "ibk" -> pmod(col("id"), lit(nb))))
-            mAll = mAll.unionByName(mNew.df)
-            mAllBks = (mAllBks ++ mNew.bks("ibk")).distinct.sorted
-            val oNew = labeled(s, "cfold:walkOrigs")(pinMetered(
-              origsForIds(mNew.df.select("id"), Some(mNew.bks("ibk")))
-                .join(broadcast(origs), Seq("orig"), "left_anti"),
-              "obk" -> pmod(col("orig"), lit(nb))))
-            if (oNew.n == 0) grow = false
+            comps = comps ++ fresh
+            val mNew = labeled(s, "cfold:walkMembers")(Held(membersOf(fresh))).keys("id")
+            mAll = (mAll ++ mNew).distinct
+            val oNew = labeled(s, "cfold:walkOrigs")(
+              Held(antiIn(origsForIds(mNew), "orig", origs))).keys("orig")
+            if (oNew.isEmpty) grow = false
             else {
-              origs = origs.unionByName(oNew.df)
-              origsBks = (origsBks ++ oNew.bks("obk")).distinct.sorted
+              origs = origs ++ oNew
               frontier = oNew
             }
           }
         }
-        (comps, origs, mAll, compsBks, mAllBks, origsBks)
+        (comps, origs, mAll)
       }
 
     // ---- append side: join the probe started before the walk ----
-    val deltaPairsP = awaitFold(fDeltaPairs, "delta-pair probe")
-    val deltaPairs = deltaPairsP.df
+    val deltaPairs = awaitFold(fDeltaPairs, "delta-pair probe")
     // components incident to the delta (under pred labels) that the
     // delete side is NOT already rebuilding re-enter as contractions —
     // the incident ids are batch-derived, so this is a doc-keyed point
-    // read like every other id probe
-    // delete-only batches skip the checkpoint jobs entirely — pinning a
-    // statically-empty frame is a wasted action per micro-batch
-    // no distincts (r20): the endpoint-id frame only builds a broadcast
-    // SEMI side inside labelsForIds (byid rows emit once however many
-    // times an id repeats), and aApp's own consumers — the anti-join's
-    // LEFT side here, membersOf's semi build side, the emptiness gate,
-    // the observed bucket set — are all dup-tolerant; each distinct was
-    // an exchange + AQE stage job per fold (dup volume is batch-bounded:
-    // one row per delta-pair endpoint sharing a component)
-    val aAppOnlyP = if (!hasI) Pin(touched.limit(0), 0L, Map.empty) else
-      labeled(s, "cfold:aApp") {
-        val aApp = labelsForIds(deltaPairs.select(col("id_a").as("id"))
-            .unionByName(deltaPairs.select(col("id_b").as("id"))),
-          Some((deltaPairsP.bks("abk") ++ deltaPairsP.bks("bbk"))
-            .distinct.sorted))
-          .select("component")
-        pinMetered(
-          if (!hasTouched) aApp
-          else aApp.join(broadcast(rebuildComps), Seq("component"), "left_anti"),
-          "cbk" -> pmod(col("component"), lit(nb)))
-      }
-    val aAppOnly = aAppOnlyP.df
+    // read like every other id probe; delete-only batches skip it
+    val aAppOnly = if (!hasI) Seq.empty[Any] else labeled(s, "cfold:aApp")(
+      Held(antiIn(labelsForIds((deltaPairs.keys("id_a") ++ deltaPairs.keys("id_b")).distinct)
+        .select("component"), "component", rebuildComps))).keys("component")
     // mRebuild accumulated during the closure walk (zero extra reads);
     // the contract side is one pruned member read of its own components
-    // (the r16 note about pruned re-reads duplicating the pinned scan's
-    // I/O is moot — the full pin no longer exists)
-    val mContractP = if (!hasI) Pin(mRebuild.limit(0), 0L, Map.empty)
-      else labeled(s, "cfold:mContract")(
-        pinMetered(membersOf(aAppOnly, Some(aAppOnlyP.bks("cbk"))),
-          "ibk" -> pmod(col("id"), lit(nb))))
-    val mContract = mContractP.df
+    val mContract = if (aAppOnly.isEmpty) Held.empty(s, "id BIGINT, component BIGINT")
+      else labeled(s, "cfold:mContract")(Held(membersOf(aAppOnly)))
 
     // ---- ONE local components run over batch-sized evidence ----
-    val atRestEdges = if (!hasTouched) emptyPairs else {
-      val bks = closureOrigBks
-      if (bks.isEmpty) emptyPairs
-      else s.read.parquet(s"$stateDir/edges")
-        .filter(col("bucket").isin(bks.map(Int.box): _*))
-        .join(broadcast(closureOrigs.select(col("orig").as("component"))),
-          Seq("component"), "leftsemi")
+    val atRestEdges = if (closureOrigs.isEmpty) emptyPairs else
+      semiIn(stateRel(s, stateDir, "edges")
+          .filter(col("bucket").isin(bucketsOf(closureOrigs, nb).map(Int.box): _*)),
+        "component", closureOrigs)
         .select("id_a", "id_b")
         .join(supersededAtRest.select(col("doc_id").as("id_a")),
           Seq("id_a"), "left_anti")
         .join(supersededAtRest.select(col("doc_id").as("id_b")),
           Seq("id_b"), "left_anti")
-    }
     // a ledger pair's live endpoints share one current component, so
     // the id_a witness suffices (the purge above already dropped pairs
     // with a deleted endpoint). Awaited unconditionally so a failed
     // reconstruction surfaces here even on folds that don't consume it.
     val ledger = awaitFold(fLedger, "pair-ledger reconstruction")
-    val ledgerEdges = if (!hasTouched) emptyPairs else ledger
-      .join(broadcast(mRebuild.select(col("id").as("id_a"))), Seq("id_a"), "leftsemi")
-      .select("id_a", "id_b")
-    val contractEdges = mContract
+    val ledgerEdges = if (!hasTouched) emptyPairs
+      else semiIn(ledger, "id_a", mRebuild).select("id_a", "id_b")
+    val contractEdges = mContract.df
       .select(col("id").as("id_a"), col("component").as("id_b"))
     val localE = atRestEdges.unionByName(ledgerEdges)
-      .unionByName(contractEdges).unionByName(deltaPairs)
-    // pinned (written, counted, read by the manifest repair) with BOTH
-    // bucket keyings observed — its component set feeds the label
-    // generation's bucket list, its id set the byid mirror's
-    val newLocalP =
-      if (!hasTouched && !hasI) Pin(mRebuild.limit(0), 0L, Map.empty)
-      else labeled(s, "cfold:cc")(
-        Components.connectedComponentsEither(localE, "id_a", "id_b") match {
-          // batch-sized graph solved on the driver: the labels are
-          // already local, so the count and BOTH bucket sets are Scala
-          // arithmetic — no checkpoint/observe job over a local
-          // relation (r20; was 1-2 jobs per fold)
-          case Left(pairs) =>
-            import s.implicits._
-            def bk(x: Long): Int = (((x % nb) + nb) % nb).toInt
-            Pin(pairs.toSeq.toDF("id", "component"), pairs.length.toLong,
-              Map("cbk" -> pairs.map(p => bk(p._2)).distinct.sorted.toSeq,
-                "ibk" -> pairs.map(p => bk(p._1)).distinct.sorted.toSeq))
-          case Right(df) => pinMetered(df.select(col("id"), col("component")),
-            "cbk" -> pmod(col("component"), lit(nb)),
-            "ibk" -> pmod(col("id"), lit(nb)))
-        })
-    val newLocal = newLocalP.df
-    // union of two PINNED frames — cheap to re-derive, no checkpoint job
-    val oldAffected = mRebuild.select("id").unionByName(mContract.select("id"))
+      .unionByName(contractEdges).unionByName(deltaPairs.df)
+    // held (written, counted, read by the manifest repair): its
+    // component set feeds the label generation's bucket list, its id
+    // set the byid mirror's
+    val newLocal =
+      if (!hasTouched && !hasI) Held.empty(s, "id BIGINT, component BIGINT")
+      else labeled(s, "cfold:cc")(componentsHeld(localE))
+    val oldAffected = (mRebuild ++ mContract.keys("id")).distinct
 
     // ---- bucket-local rewrite: old homes of affected rows ∪ new ----
-    // a driver-side union of the walk/append/CC pins' observed
-    // component-bucket sets — exactly the set the r16 collect computed
-    // over the unioned frames, with zero extra actions
-    val buckets = (compsBksAll ++ aAppOnlyP.bks("cbk") ++ newLocalP.bks("cbk"))
-      .distinct.sorted
+    val buckets = bucketsOf(rebuildComps ++ aAppOnly ++ newLocal.keys("component"), nb)
     // predecessor content of the touched buckets — consumed once,
     // inside the observed generation write (no pin)
     val predTouched = BucketedGens.read(s, labelsRoot, base, atRestRows, Some(buckets))
     // the byid mirror's generation payload: the SAME affected rows under
-    // the doc keying — touched buckets are pmod(affected ids, 16), write
-    // I/O O(affected) like the component-keyed write it mirrors.
-    // oldAffected = mRebuild ∪ mContract, so its id-bucket set is the
-    // walk/contract pins' observed sets — driver union, no collect
-    val byBuckets = (mRebuildBks ++ mContractP.bks("ibk") ++ newLocalP.bks("ibk"))
-      .distinct.sorted
+    // the doc keying — touched buckets are pmod(affected ids, nb), write
+    // I/O O(affected) like the component-keyed write it mirrors
+    val byBuckets = bucketsOf(oldAffected ++ newLocal.keys("id"), nb)
     val predBy = BucketedGens.read(s, byidRoot, baseBy, atRestById, Some(byBuckets))
     // ONE PARALLEL WAVE of the fold's four independent terminal writes
     // (r19, guide §2.6): the labels generation, the byid-mirror
@@ -2085,9 +2003,8 @@ object DedupQueries {
     val fByid = scala.concurrent.Future(labeled(s, "cfold:byidWrite")(
       BucketedGens.observedWrite(
         predBy, byBuckets, s"$byidRoot/gen-$id") { pred =>
-      pred.select("id", "component")
-        .join(broadcast(oldAffected), Seq("id"), "left_anti")
-        .unionByName(newLocal)
+      antiIn(pred.select("id", "component"), "id", oldAffected)
+        .unionByName(newLocal.df)
         .withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
     }))(foldPool)
     // O(batch) ledger segments — the batch's own contribution, nothing
@@ -2095,13 +2012,12 @@ object DedupQueries {
     val fOps = scala.concurrent.Future(labeled(s, "cfold:opsSeg")(
       SegLedger.append(batchOps, s"$root/ops", id)))(foldPool)
     val fPairs = scala.concurrent.Future(labeled(s, "cfold:pairsSeg")(
-      if (hasI) SegLedger.append(deltaPairs, s"$root/pairs", id)))(foldPool)
+      if (hasI) SegLedger.append(deltaPairs.df, s"$root/pairs", id)))(foldPool)
     val (written, nextRows, predRows) = labeled(s, "cfold:labelsWrite")(
       BucketedGens.observedWrite(
         predTouched, buckets, s"$labelsRoot/gen-$id") { pred =>
-      pred.select("id", "component")
-        .join(broadcast(oldAffected), Seq("id"), "left_anti")
-        .unionByName(newLocal)
+      antiIn(pred.select("id", "component"), "id", oldAffected)
+        .unionByName(newLocal.df)
         .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
     })
     val (writtenBy, _, _) = awaitFold(fByid, "byid mirror write")
@@ -2140,7 +2056,9 @@ object DedupQueries {
       ccHistStateDir(s, d))
 
   private def stagedSurvivorState(s: org.apache.spark.sql.SparkSession,
-      d: String, tag: String, docs: org.apache.spark.sql.DataFrame,
+      d: String, tag: String,
+      /** by name: a staged-cache hit builds no frame */
+      docs: => org.apache.spark.sql.DataFrame,
       ccState: String,
       /** explicit manifest/membership bucket count (the decade gates'
         * handle); ≤ 0 derives it from the standing MANIFEST rows via
@@ -2151,7 +2069,7 @@ object DedupQueries {
       nbM0: Int = -1): String =
     graft.sources.ZOrder.ensureStagedDir(tag, d, s"$d/documents.parquet") { target =>
       EventQueries.multiWriteStage(target) { stage =>
-        val labels = atRestLabels(s, ccState)
+        val labels = stateRel(s, ccState, "labels")
         // labels is corpus-derived — no broadcast hint (see stagedCcState)
         val membership = docs
           .join(labels.select(col("id").as("doc_id"), col("component")),
@@ -2193,8 +2111,8 @@ object DedupQueries {
     // the at-rest labels are O(corpus): no broadcast hint — the
     // O(deletes) probe side shuffles against them (AQE may still elect
     // a broadcast at bench scale)
-    ccDeletedIds(s, d)
-      .join(atRestLabels(s, ccStateOpt.getOrElse(ccStateDir(s, d)))
+    ccDeletedIds(Tables.documents(s, d))
+      .join(stateRel(s, ccStateOpt.getOrElse(ccStateDir(s, d)), "labels")
           .select(col("id").as("doc_id"), col("component")),
         Seq("doc_id"), "left")
       .select(coalesce(col("component"), col("doc_id")).as("component"))
@@ -2217,7 +2135,7 @@ object DedupQueries {
       else touched
         .select(pmod(col("component"), lit(nbT)).cast("int").as("bucket"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val members = s.read.parquet(s"$stateDir/membership")
+    val members = stateRel(s, stateDir, "membership")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(touched), Seq("component"), "leftsemi")
       .select("doc_id", "component", "quality")
@@ -2253,55 +2171,43 @@ object DedupQueries {
     val survState = effectiveState(s, root, Some(id), survState0)
     val nbM = manifestBuckets(survState)
     val baseM = BucketedGens.latest(manRoot, below = Some(id))
-    val ccStateEff = effectiveState(s, root, Some(id), ccState)
     // ONE action for the WHOLE composed fold's batch head (r20 job
     // diet — r19 still paid a stats head PLUS a net-op checkpoint; the
     // two-distinct + anti-join + union shape also cost three exchanges
     // where one groupBy costs one): a single per-doc aggregate computes
     // the net op (I beats D — max over {"D","I"}), the surviving I
     // payload (first non-null: D rows carry null simhash/quality), and
-    // a per-doc payload-ambiguity flag; the pin's checkpoint then
-    // carries op presence, the ambiguity counts, and the delete side's
-    // manifest bucket set as observe() metrics. The flags replace the
-    // old rIs==dI / rIq==dI global-distinct check with the SAME
-    // predicate per doc: >1 distinct I payload for one doc_id.
-    val netRaw = b.groupBy("doc_id").agg(
+    // a per-doc payload-ambiguity flag; its rows are held on the
+    // driver, so op presence, the ambiguity counts, the delete side's
+    // manifest bucket set and the arrival ids are Scala. The flags
+    // replace the old rIs==dI / rIq==dI global-distinct check with the
+    // SAME predicate per doc: >1 distinct I payload for one doc_id.
+    val ops = labeled(s, "mfold:opsPin")(Held(b.groupBy("doc_id").agg(
       max("op").as("op"),
       first(col("simhash"), ignoreNulls = true).as("simhash"),
       first(col("quality"), ignoreNulls = true).as("quality"),
-      (count_distinct(when(col("op") === "I", struct(col("simhash")))) > 1)
-        .as("__ambS"),
-      (count_distinct(when(col("op") === "I", struct(col("quality")))) > 1)
-        .as("__ambQ"))
-    val (opsPin, statsM) = labeled(s, "mfold:opsPin")(pinMeteredEx(netRaw,
-      Seq(count(when(col("op") === "D", 1)).as("nD"),
-        count(when(col("op") === "I", 1)).as("nI"),
-        count(when(col("__ambS"), 1)).as("ambS"),
-        count(when(col("__ambQ"), 1)).as("ambQ"),
-        collect_set(when(col("op") === "D",
-          pmod(col("doc_id"), lit(nbM))).cast("int")).as("dbk")),
-      "ibk" -> pmod(col("doc_id"), lit(labelBuckets(ccStateEff)))))
+      ambiguous("simhash").as("__ambS"),
+      ambiguous("quality").as("__ambQ"))))
     if (!b0.columns.contains("seq")) {
-      require(mLong(statsM, "ambS") == 0,
+      require(ops.where("__ambS", true).isEmpty,
         "seq-less batch carries conflicting I payloads (simhash) for one " +
           "doc_id — the op order is ambiguous; ordered producers must " +
           "ship a `seq` column")
-      require(mLong(statsM, "ambQ") == 0,
+      require(ops.where("__ambQ", true).isEmpty,
         "seq-less batch carries conflicting I payloads (quality) for one " +
           "doc_id — the op order is ambiguous; ordered producers must " +
           "ship a `seq` column")
     }
-    // NET delete buckets: a doc whose D was superseded by a same-batch
-    // I is an arrival — it reaches manBuckets through the V pin's
-    // observed set (and dropKeys through V), so the raw-D set the r19
-    // stats collected adds nothing
-    val bDManBks = mIntSet(statsM, "dbk")
+    // NET delete and arrival docs: a doc whose D was superseded by a
+    // same-batch I is an arrival — it reaches manBuckets and dropKeys
+    // through V
+    val bD = ops.where("op", "D").map(_.getAs[Any]("doc_id"))
+    val bIids = ops.where("op", "I").map(_.getAs[Any]("doc_id"))
     // the quality ledger in SEGMENT form (r17, same discipline as the
     // fold's op/pair ledgers): the batch lands only its net ops, the
     // cumulative "live append qualities" resolve last-writer-wins.
-    // A projection of the one shared pin — no second checkpoint.
-    val batchOpsQ = opsPin.df.select("op", "doc_id", "quality")
-    val bIids = batchOpsQ.filter(col("op") === "I").select("doc_id")
+    // A projection of the one held batch — no second action.
+    val batchOpsQ = ops.df.select("op", "doc_id", "quality")
     // reconstruction + segment append OVERLAP the label fold on
     // [[foldPool]] (r19, guide §2.6): this family ($root/opsq) is
     // touched by nothing inside the label fold, and both the listing
@@ -2313,7 +2219,7 @@ object DedupQueries {
       val q =
         if (SegLedger.dirs(s"$root/opsq", id, segFloor(root, Some(id))).isEmpty)
           batchOpsQ.filter(col("op") === "I").select("doc_id", "quality")
-        else SegLedger.read(s, s"$root/opsq", id, batchOpsQ.limit(0),
+        else SegLedger.read(s, s"$root/opsq", id, emptyState(s, "opsq"),
             segFloor(root, Some(id)))
           .unionByName(batchOpsQ.withColumn("__seg", lit(id)))
           .withColumn("__r", row_number().over(
@@ -2327,31 +2233,19 @@ object DedupQueries {
     })(foldPool)
     val fold = componentsCdcImpl(ccState, root,
       b.select("op", "doc_id", "simhash"), id, staticSigs, historyPred, ts,
-      Some(CdcBatchPre(mLong(statsM, "nD") > 0, mLong(statsM, "nI") > 0,
-        opsPin)))
-    // NET delete docs, a slice of the pinned frame (no extra shuffle in
-    // the manifest-write plan): a doc whose D was superseded by a
-    // same-batch I reaches dropKeys through V (it is an arrival), so
-    // the raw-D distinct the r19 shape rebuilt here added nothing.
-    val bD = opsPin.df.filter(col("op") === "D").select("doc_id")
+      Some(CdcBatchPre(bD.nonEmpty, bIids.nonEmpty, ops)))
     val appsQ = awaitFold(fAppsQ, "quality-ledger reconstruction")
-    val cumDels = fold.cumDels
     // re-election universe V: the fold's affected docs (new labels ∪
-    // dropped old members) + arrivals, minus the deletes
-    // no distinct (r20): every consumer is a semi/anti-join build side
-    // or an observed bucket set — duplicates (bounded by the 3-way
-    // union's overlap) are harmless, and the distinct was one exchange
-    // + an AQE stage job per fold
-    val vP = labeled(s, "mfold:vPin")(pinMetered(fold.newLocal.select("id")
-      .unionByName(fold.oldAffected.select("id"))
-      .unionByName(bIids.select(col("doc_id").as("id")))
-      .join(cumDels.select(col("doc_id").as("id")), Seq("id"), "left_anti"),
-      "mbk" -> pmod(col("id"), lit(nbM)),
-      "ibk" -> pmod(col("id"), lit(labelBuckets(ccStateEff)))))
-    val v = vP.df
-    val vIds = v.select(col("id").as("doc_id"))
-    val appsQv = appsQ.join(broadcast(vIds), Seq("doc_id"), "leftsemi")
-      .select("doc_id", "quality")
+    // dropped old members) + arrivals, minus the deletes. Its inputs are
+    // all held, so V is a driver-side key set: the only action is the
+    // probe of the cumulative deletes for the candidates (none when the
+    // deletes are this batch's own held rows)
+    val vCand = (fold.newLocal.keys("id") ++ fold.oldAffected ++ bIids).distinct
+    val vDeleted = labeled(s, "mfold:vPin")(
+      Held(semiIn(fold.cumDels, "doc_id", vCand)).keys("doc_id").toSet)
+    val v = vCand.filterNot(vDeleted)
+    val vIds = Held.ids(s, "doc_id", v).df
+    val appsQv = semiIn(appsQ, "doc_id", v).select("doc_id", "quality")
     // history quality from pruned membership buckets (bucket key = the
     // at-rest COALESCED component — singletons under their own id);
     // docs in the quality ledger are anti-joined off — for a
@@ -2362,31 +2256,27 @@ object DedupQueries {
     // absorbed, arrivals included). The orig lookup is a doc-keyed
     // pruned point read of the byid mirror (r17: was a per-batch join
     // against the full at-rest relation).
-    val vHist = vIds.join(appsQ.select("doc_id"), Seq("doc_id"), "left_anti")
-      .withColumnRenamed("doc_id", "id")
-    // vHist ⊆ v, so v's pin-observed id-bucket set is a correct
-    // (superset) prune for the byid point read — a few extra bucket
-    // files at worst, one collect action saved per fold
     // nbM == 1 ⇒ pmod(_, 1) = 0 identically: the only possible bucket
     // list is {0}, so the orig-lookup collect buys nothing (r20 — at
-    // bench scale the byte-floor staging collapses to one bucket and
-    // this was 2 jobs per fold; multi-bucket states still pay the
-    // collect because it prunes real I/O)
+    // bench scale the byte-floor staging collapses to one bucket;
+    // multi-bucket states still pay the collect because it prunes real
+    // I/O). The byid read keys on all of v, a superset of the ids it
+    // must resolve.
     val vBuckets = if (nbM == 1) Seq(0)
-      else labeled(s, "mfold:vBuckets")(vHist
-      .join(atRestLabelsForIds(s, ccStateEff, vHist, Some(vP.bks("ibk")))
-          .select(col("id"), col("component").as("orig")), Seq("id"), "left")
-      .select(pmod(coalesce(col("orig"), col("id")), lit(nbM)).cast("int").as("bucket"))
-      .distinct().collect()).map(_.getInt(0)).toSeq
+      else labeled(s, "mfold:vBuckets")(vIds.withColumnRenamed("doc_id", "id")
+        .join(appsQ.select(col("doc_id").as("id")), Seq("id"), "left_anti")
+        .join(atRestLabelsForIds(s, effectiveState(s, root, Some(id), ccState), v)
+            .select(col("id"), col("component").as("orig")), Seq("id"), "left")
+        .select(pmod(coalesce(col("orig"), col("id")), lit(nbM)).cast("int").as("bucket"))
+        .distinct().collect()).map(_.getInt(0)).toSeq
     val memberQ = (
-      if (vBuckets.isEmpty) appsQ.limit(0).select("doc_id", "quality")
-      else s.read.parquet(s"$survState/membership")
-        .filter(col("bucket").isin(vBuckets.map(Int.box): _*))
-        .join(broadcast(vIds), Seq("doc_id"), "leftsemi")
+      if (vBuckets.isEmpty || v.isEmpty) appsQ.limit(0).select("doc_id", "quality")
+      else semiIn(stateRel(s, survState, "membership")
+          .filter(col("bucket").isin(vBuckets.map(Int.box): _*)), "doc_id", v)
         .select("doc_id", "quality"))
       .join(appsQ.select("doc_id"), Seq("doc_id"), "left_anti")
     val reElected = memberQ.unionByName(appsQv)
-      .join(fold.newLocal.select(col("id").as("doc_id"),
+      .join(fold.newLocal.df.select(col("id").as("doc_id"),
           col("component").as("__newc")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("quality"),
@@ -2394,23 +2284,18 @@ object DedupQueries {
       .transform(electSurvivors)
     // old manifest keys to retire: V ids (an affected comp's old key is
     // a member id, a singleton's key its own id) ∪ this batch's deletes
-    // union of pinned/batch frames, consumed by an anti-join and a
-    // bucket list (itself distinct) — duplicates harmless, no shuffle/pin
-    val dropKeys = v.select(col("id").as("component"))
-      .unionByName(bD.select(col("doc_id").as("component")))
-    // dropKeys = v ∪ bD, so its bucket set is v's pin-observed set ∪
-    // the batch aggregate's delete set — driver union, no collect
-    val manBuckets = (vP.bks("mbk") ++ bDManBks).distinct.sorted
+    val dropKeys = (v ++ bD).distinct
+    val manBuckets = bucketsOf(dropKeys, nbM)
     // the at-rest manifest is component-keyed and already carries the
     // same bucket column — it resolves AtRest buckets directly
-    def atRestMan = s.read.parquet(s"$survState/manifest")
+    def atRestMan = stateRel(s, survState, "manifest")
     val predTouched = BucketedGens.read(s, manRoot, baseM, atRestMan, Some(manBuckets))
     // ONE action: write + per-bucket counts + count arithmetic as
     // observe() metrics (see componentsRetractImpl)
     val (written, nextRows, predRows) = labeled(s, "mfold:manifestWrite")(
       BucketedGens.observedWrite(
         predTouched, manBuckets, s"$manRoot/gen-$id") { pred =>
-      pred.join(broadcast(dropKeys), Seq("component"), "left_anti")
+      antiIn(pred, "component", dropKeys)
         .select("component", "survivor_id", "n_members", "quality")
         .unionByName(reElected)
         .withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
@@ -2472,23 +2357,18 @@ object DedupQueries {
     val rowsLPrev = stateMeta(ccPrev, "labels").map(_._2).getOrElse(-1L)
     val nbMPrev = manifestBuckets(survPrev)
     val rowsMPrev = stateMeta(survPrev, "manifest").map(_._2).getOrElse(-1L)
-    val emptyIds = staticSigs.select("doc_id").limit(0)
     // the cumulative ledgers reconstructed ONCE from their segments —
-    // the bulk fold this compaction exists to amortize
-    val emptyOps = emptyIds
-      .select(lit("D").as("op"), col("doc_id"), lit(null).cast("long").as("simhash"))
-    val emptyOpsQ = emptyIds
-      .select(lit("D").as("op"), col("doc_id"), lit(null).cast("double").as("quality"))
-    // the two ledger reconstructions touch disjoint families — one
-    // parallel wave (r19, guide §2.6)
+    // the bulk fold this compaction exists to amortize; the two
+    // reconstructions touch disjoint families — one parallel wave (r19,
+    // guide §2.6)
     val (winners, appsQ) = inParallel(
-      SegLedger.read(s, s"$root/ops", id, emptyOps, ledgerFloor)
+      SegLedger.read(s, s"$root/ops", id, emptyState(s, "ops"), ledgerFloor)
         .withColumn("__r", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("doc_id").orderBy(col("__seg").desc)))
         .filter(col("__r") === 1)
         .localCheckpoint(),
-      SegLedger.read(s, s"$root/opsq", id, emptyOpsQ, ledgerFloor)
+      SegLedger.read(s, s"$root/opsq", id, emptyState(s, "opsq"), ledgerFloor)
         .withColumn("__r", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("doc_id").orderBy(col("__seg").desc)))
@@ -2502,7 +2382,7 @@ object DedupQueries {
     // slice, later ones from the previous compaction's own snapshot
     val baseCorpus = baseState match {
       case None    => staticSigs.filter(historyPred)
-      case Some(p) => s.read.parquet(s"$p/sigs")
+      case Some(p) => stateRel(s, p, "sigs")
     }
     val present = baseCorpus
       .join(superseded, Seq("doc_id"), "left_anti")
@@ -2553,7 +2433,7 @@ object DedupQueries {
     // ... and the survivor state: present docs' quality from the
     // predecessor membership (still valid for untouched history) ∪ the
     // quality ledger (appended docs, re-scored upserts)
-    val presentQ = s.read.parquet(s"$survPrev/membership")
+    val presentQ = stateRel(s, survPrev, "membership")
       .join(superseded, Seq("doc_id"), "left_anti")
       .select("doc_id", "quality")
       .unionByName(appsQ.select("doc_id", "quality"))

@@ -155,15 +155,17 @@ private[graft] object SegLedger {
     * (its content rides in with `__seg` = the boundary − 1, legal only
     * for idempotent-insert families; see the class doc) — each row
     * tagged with its segment ordinal (`__seg` — the last-writer-wins
-    * resolution key). `empty` supplies the schema when no segment
-    * exists yet. */
+    * resolution key). `empty` declares the family's schema: every
+    * segment and checkpoint is read with it (an inferring read runs one
+    * Spark job per dir), and it is the result when no segment exists
+    * yet. */
   def read(s: SparkSession, root: String, below: Long,
       empty: => DataFrame, floor: Long = Long.MinValue): DataFrame = {
     val (ckpt, segDirs) = standing(root, below, floor)
-    val segs = segDirs
-      .map { case (n, p) => s.read.parquet(p).withColumn("__seg", lit(n)) }
-    val parts = ckpt.map(n =>
-      s.read.parquet(s"$root/compact-$n").withColumn("__seg", lit(n - 1))).toSeq ++ segs
+    lazy val schema = empty.schema
+    def dir(p: String, n: Long) = s.read.schema(schema).parquet(p).withColumn("__seg", lit(n))
+    val parts = ckpt.map(n => dir(s"$root/compact-$n", n - 1)).toSeq ++
+      segDirs.map { case (n, p) => dir(p, n) }
     parts.reduceOption(_.unionByName(_))
       .getOrElse(empty.withColumn("__seg", lit(0L)))
   }

@@ -660,18 +660,15 @@ class PlanBudgetSpec extends SparkSpec {
       // 1-row totals/min frames
       ("CurationQueries.scala", "budgets"), ("CurationQueries.scala", "fByLang"),
       ("CurationQueries.scala", "rate"), ("CurationQueries.scala", "wt"),
-      // CDC/retraction folds: every frame here is batch-derived —
-      // incident edges, touched components, closure accumulators,
-      // deleted ids, re-elected rows. The corpus-derived labels frames
-      // deliberately do NOT appear (r18 finding — hints removed).
-      ("DedupQueries.scala", "closureOrigs"), ("DedupQueries.scala", "comp"),
-      ("DedupQueries.scala", "comps"), ("DedupQueries.scala", "deleted"),
-      ("DedupQueries.scala", "dropKeys"), ("DedupQueries.scala", "ids"),
-      ("DedupQueries.scala", "incident"), ("DedupQueries.scala", "mRebuild"),
-      ("DedupQueries.scala", "oldAffected"), ("DedupQueries.scala", "origs"),
-      ("DedupQueries.scala", "rebuildComps"), ("DedupQueries.scala", "relabeled"),
-      ("DedupQueries.scala", "touched"), ("DedupQueries.scala", "touchedOrig"),
-      ("DedupQueries.scala", "vIds"),
+      // dedup batch queries: near-dup cluster labels (comp), and the
+      // retraction queries' (q181/q182) delete-derived frames — touched
+      // components, deleted ids, relabeled rows. The corpus-derived
+      // labels frames deliberately do NOT
+      // appear (r18 finding — hints removed). The streamed folds hold
+      // their batch-sized frames on the driver and filter by InSet
+      // (DedupQueries.semiIn/antiIn), so they carry no hint at all.
+      ("DedupQueries.scala", "comp"), ("DedupQueries.scala", "deleted"),
+      ("DedupQueries.scala", "relabeled"), ("DedupQueries.scala", "touched"),
       // end-to-end spines: probe/eval sets, candidate-sized predictions,
       // project dims, year spans
       ("EndToEndQueries.scala", "contaminated"), ("EndToEndQueries.scala", "preds"),
@@ -888,7 +885,8 @@ class PlanBudgetSpec extends SparkSpec {
     // one CLUSTERED deleted doc (a singleton would leave the label gen
     // legitimately empty and prove nothing about subset writes)
     val one = spark.read.parquet(s"$ccState/labels")
-      .join(DedupQueries.ccDeletedIds(spark, sf).withColumnRenamed("doc_id", "id"),
+      .join(DedupQueries.ccDeletedIds(graft.sources.Tables.documents(spark, sf))
+          .withColumnRenamed("doc_id", "id"),
         Seq("id"), "leftsemi")
       .select(min(col("id")).as("doc_id"))
     DedupQueries.survivorRetractStep(ccState, survState, root, one, 0L)

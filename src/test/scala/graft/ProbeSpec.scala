@@ -26,4 +26,16 @@ class ProbeSpec extends SparkSpec {
     assert(second.jobs.map(_.id).min > first.jobs.map(_.id).max,
       s"jobs of the first call in the second: ${first.jobs} / ${second.jobs}")
   }
+
+  test("a schema-less parquet read runs one inference job; a declared read runs none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe_infer_").toString
+    spark.range(0, 10, 1, 1).write.mode("overwrite").parquet(s"$dir/t")
+    val inferred = Probe.metered(spark.sparkContext)(spark.read.parquet(s"$dir/t"))
+    assert(inferred.jobs.size == 1 &&
+        inferred.jobs.head.kinds.exists(_.startsWith("ParallelCollectionRDD")),
+      s"inference jobs: ${inferred.jobs}")
+    val declared = Probe.metered(spark.sparkContext)(
+      spark.read.schema("id BIGINT").parquet(s"$dir/t"))
+    assert(declared.jobs.isEmpty, s"a declared read ran jobs: ${declared.jobs}")
+  }
 }

@@ -18,7 +18,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * but it adds a JOB. This spec meters jobs per fold on the bridge
   * fixture and pins them under measured+headroom ceilings.
   *
-  * Budgets are UPPER bounds with ~40% headroom over measured (local[4],
+  * Budgets are UPPER bounds with ~12% headroom over measured (local[4],
   * AQE on): job counts are structural — plan-shape-deterministic, not
   * timing- or host-dependent — so a breach means a code change added
   * driver actions to the fold path, exactly what the diet removed.
@@ -106,17 +106,16 @@ class FoldJobBudgetSpec extends SparkSpec {
     // trigger-rate bound is written against
     info(f"fold jobs — append=$jAppend (${wAppend}%.1fs) delete=$jDelete " +
       f"(${wDelete}%.1fs) split=$jSplit (${wSplit}%.1fs)")
-    // measured on the diet'd r20 fold: append=53, delete=63, split=65
-    // (local[4], AQE on — ~2.7 jobs per driver action from query-stage
-    // materialization; the r17 diet measured 63/74/76, r16's shape
-    // 82/100/102 on this same fixture). Budgets = measured + ~12%
-    // headroom (ratcheted from the r17-era 85/100/103 ceilings, which
-    // would have let a 30–40% action regression pass silently); tighten
-    // only by REMOVING actions — a breach means a code change added
-    // per-batch driver actions, exactly what the diet removed.
-    assert(jAppend <= 60, s"append-profile fold ran $jAppend jobs — over budget")
-    assert(jDelete <= 72, s"delete-profile fold ran $jDelete jobs — over budget")
-    assert(jSplit <= 74, s"split-profile fold ran $jSplit jobs — over budget")
+    // measured with declared state schemas, the one-shuffle batch head
+    // and driver-held batch frames: append=30, delete=32, split=32
+    // (local[4], AQE on). The history on this same fixture: 44/60/62
+    // before that change (ceilings 60/72/74), the r17 diet 63/74/76,
+    // r16's shape 82/100/102. Budgets = measured + ~12% headroom;
+    // tighten only by REMOVING actions — a breach means a code change
+    // added per-batch driver actions, exactly what the diet removed.
+    assert(jAppend <= 34, s"append-profile fold ran $jAppend jobs — over budget")
+    assert(jDelete <= 36, s"delete-profile fold ran $jDelete jobs — over budget")
+    assert(jSplit <= 36, s"split-profile fold ran $jSplit jobs — over budget")
   }
 
   test("componentsMergeStep: per-fold job count stays under the diet budget") {
@@ -131,10 +130,11 @@ class FoldJobBudgetSpec extends SparkSpec {
     val jSeed = step(0, Seq((1L, 2L), (10L, 11L)))
     val jMerge = step(1, Seq((2L, 10L)))
     info(s"merge fold jobs — seed=$jSeed merge=$jMerge")
-    // measured post-diet (r20): seed=12, merge=21 (zero collect
-    // actions — every pruning bucket set rides a pin). Same rule:
+    // measured with driver-held batch frames: seed=6, merge=8 (every
+    // key and bucket set is Scala over held rows, every semi/anti an
+    // InSet filter); r20 measured 12/21 (ceilings 14/24). Same rule:
     // measured + ~12% headroom, tighten only by removing actions.
-    assert(jSeed <= 14, s"seed-profile merge fold ran $jSeed jobs — over budget")
-    assert(jMerge <= 24, s"merge-profile fold ran $jMerge jobs — over budget")
+    assert(jSeed <= 7, s"seed-profile merge fold ran $jSeed jobs — over budget")
+    assert(jMerge <= 9, s"merge-profile fold ran $jMerge jobs — over budget")
   }
 }
