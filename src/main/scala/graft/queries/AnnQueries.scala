@@ -1399,10 +1399,8 @@ object AnnQueries {
           val perDay = coded.groupBy("bucket").count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap
           (0 to 3).foreach { day =>
-            coded.filter(col("bucket") === day)
-              .repartition(col("bucket"))
-              .write.partitionBy("bucket").mode("overwrite")
-              .parquet(s"$stage/gen-$day")
+            BucketedGens.writeBucketed(coded.filter(col("bucket") === day),
+              s"$stage/gen-$day")
             // day g's owners: every day ≤ g owns its own appended
             // bucket — append-only LSM expressed in owners-map terms
             BucketedGens.commit(stage, day,

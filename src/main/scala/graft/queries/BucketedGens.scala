@@ -198,14 +198,8 @@ private[graft] object BucketedGens {
     val oNext = org.apache.spark.sql.Observation()
     val perBucket = buckets.map(b =>
       count(when(col("bucket") === b, 1)).as(s"b$b"))
-    val next = build(pred.observe(oPred, count(lit(1)).as("n")))
-      .observe(oNext, count(lit(1)).as("n"), perBucket: _*)
-    // ONE file per bucket: a 32-partition frame sprayed through
-    // partitionBy writes up to 32 near-empty files per touched bucket,
-    // and tiny-file overhead then dominates every later pruned read of
-    // this generation (the batch-sized repartition shuffle is noise)
-    next.repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(dest)
+    writeBucketed(build(pred.observe(oPred, count(lit(1)).as("n")))
+      .observe(oNext, count(lit(1)).as("n"), perBucket: _*), dest)
     // AQE may replace a PROVABLY-EMPTY subtree with an empty relation
     // once an upstream stage materializes empty — dropping the
     // CollectMetrics node with it, so its Observation resolves to an
@@ -217,6 +211,18 @@ private[graft] object BucketedGens {
     val written = buckets.filter(b => metric(mN, s"b$b") > 0L).toSet
     (written, metric(mN, "n"), metric(mP, "n"))
   }
+
+  /** Write `df` under `dest` partitioned by its `bucket` column, ONE
+    * file per bucket: a 32-partition frame sprayed through partitionBy
+    * writes up to 32 near-empty files per bucket, and tiny-file overhead
+    * (not row bytes) then dominates every later pruned read — one file
+    * per bucket keeps point-read bytes proportional to rows (at batch
+    * size the repartition shuffle is noise). Every bucketed write of the
+    * state layer goes through here: generations, staged and compacted
+    * states. */
+  def writeBucketed(df: DataFrame, dest: String): Unit =
+    df.repartition(col("bucket"))
+      .write.partitionBy("bucket").mode("overwrite").parquet(dest)
 
   /** The owners CLOSURE of a committed generation: the gen itself plus
     * every generation its owners map references — the full set of dirs

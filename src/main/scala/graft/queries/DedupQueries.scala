@@ -597,7 +597,7 @@ object DedupQueries {
     // repair universe is every doc whose standing can change — members
     // of components touched by the batch's delta pairs or the delete
     // side's orig-closure rebuild, new arrivals (their quality rides
-    // the changelog into an O(arrivals) ledger — history quality lives
+    // the changelog into the fold's op ledger — history quality lives
     // in the bucketed membership artifact, read pruned), and remnant
     // singletons. Everything outside the universe passes through
     // byte-identical. Third query on the survivor oracle family: the
@@ -630,7 +630,7 @@ object DedupQueries {
 
     // LEDGER COMPACTION UNDER THE FULL CHANGELOG — q189's maintained
     // manifest with a COMPACTION folded into the middle of the stream:
-    // the ops/pairs/opsq ledger SEGMENTS are the CDC family's only
+    // the ops/pairs ledger SEGMENTS are the CDC family's only
     // unbounded carried state, so when they outgrow the standing
     // manifest (shouldCompact's size policy — the r17 replacement for
     // a hardcoded batch cadence) the step re-stages the at-rest state
@@ -663,19 +663,20 @@ object DedupQueries {
           EventQueries.stageRangedDrain(changelog, 4, "doc_id", "graft_mcmp_"),
           changelog.schema, sinkName) { (root, b, bid) =>
         // SIZE-DRIVEN cadence (r17 — was a hardcoded `bid == 2`):
-        // compact when the ledger segments outweigh 18% of the
+        // compact when the ledger segments outweigh 10% of the
         // standing manifest. The policy decides the splice point; the
         // oracle (same text as q189) proves whichever point it picks
-        // invisible. On this fixture one batch accrues ~12% of the
-        // manifest in segments (ops + opsq ≈ 2 × changelog quarter,
-        // scale-invariant — measured 0.122 at sf0.01 AND sf0.1), so
-        // 0.18 fires exactly once, before batch 2, and stays quiet
-        // after the truncation. Gen ids still double up (compaction
-        // 2b, batch 2b+1) and the decision replays idempotently
-        // (skip by marker; truncation is the ledger read FLOOR, so a
-        // replay that re-counts pre-vacuum segments only re-enters
-        // the skip path).
-        if (shouldCompact(root, 2 * bid, frac = 0.18)) {
+        // invisible. On this fixture one batch accrues 6-8% of the
+        // manifest in segments (the ops segment ≈ a changelog quarter,
+        // plus its few probe pairs — measured 0.068-0.076 before batch
+        // 1, 0.125-0.144 before batch 2 and 0.060-0.069 before batch 3
+        // at sf0.001, sf0.01 AND sf0.1), so 0.1 fires exactly once,
+        // before batch 2, and stays quiet after the truncation. Gen
+        // ids still double up (compaction 2b, batch 2b+1) and the
+        // decision replays idempotently (skip by marker; truncation is
+        // the ledger read FLOOR, so a replay that re-counts pre-vacuum
+        // segments only re-enters the skip path).
+        if (shouldCompact(root, 2 * bid, frac = 0.1)) {
           survivorCompactStep(ccState, survState, root, 2 * bid, sigs)
           // observable beside the fold ledger (separate key — the
           // fold-cadence gates read the plain sink name)
@@ -849,14 +850,14 @@ object DedupQueries {
           buckets, s"$labelsRoot/gen-$id") { p =>
         antiIn(p.select("id", "component"), "id", oldAffected)
           .unionByName(newLocal.df)
-          .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
+          .transform(bucketed("component", nb))
       },
       BucketedGens.observedWrite(
           BucketedGens.read(s, byidRoot, baseBy, atRestEmpty, Some(byBuckets)),
           byBuckets, s"$byidRoot/gen-$id") { p =>
         antiIn(p.select("id", "component"), "id", oldAffected)
           .unionByName(newLocal.df)
-          .withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
+          .transform(bucketed("id", nb))
       })
     val rows = base.map(_.rows).getOrElse(0L) - predRows + nextRows
     BucketedGens.commitFold(s, labelsRoot, base, id, nb, buckets, written, rows, ts)
@@ -909,50 +910,90 @@ object DedupQueries {
       nb0: Int = -1): String =
     graft.sources.ZOrder.ensureStagedDir(tag, d, s"$d/documents.parquet") { target =>
       EventQueries.multiWriteStage(target) { stage =>
-        val sig = docs.select(col("doc_id"),
-          TextDedup.simHashN(col("text"), 60).as("simhash"))
-        val pairs = TextDedup.simHashNearDup(sig, "doc_id", "simhash", 3)
-          .select("id_a", "id_b")
-          .localCheckpoint() // read by the components run AND the edge write
-        // the standing count rides the pin — the bucket count derives
-        // from it and the meta reuses it (was a separate count() job)
-        val labelsP = pinMetered(
-          Components.connectedComponents(pairs, "id_a", "id_b"))
-        val labels = labelsP.df
-        val nb = if (nb0 > 0) nb0 else stagedBuckets(s, labelsP.n)
-        // repartition BY BUCKET before every bucketed write: a
-        // 32-partition frame sprayed through partitionBy writes up to
-        // 32 near-empty files per bucket, and tiny-file overhead (not
-        // row bytes) then dominates every pruned read — ONE file per
-        // bucket keeps point-read bytes proportional to rows.
-        // The three writes share only the pinned labels/pairs frames —
-        // one parallel wave (r19, guide §2.6).
-        val fLw = scala.concurrent.Future(
-          labels.withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
-            .repartition(col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$stage/labels"))(foldPool)
-        val fBw = scala.concurrent.Future(
-          labels.withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
-            .repartition(col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$stage/labels_byid"))(foldPool)
-        // NO broadcast hint: labels is CORPUS-derived (one row per doc in
-        // any near-dup pair) — at 100 TB it's billions of rows, and a
-        // hint OOMs where a keyed shuffle join just costs an exchange.
-        // AQE still picks broadcast on its own at small scale.
-        pairs
-          .join(labels.select(col("id").as("id_a"), col("component")),
-            Seq("id_a"))
-          .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").mode("overwrite").parquet(s"$stage/edges")
-        Seq("labels" -> fLw, "labels_byid" -> fBw).foreach { case (w, f) =>
-          awaitFold(f, s"staged $w write") }
-        writeStateMeta(stage, "labels", nb, labelsP.n)
+        val (cc, _) = buildCcState(
+          docs.select(col("doc_id"), TextDedup.simHashN(col("text"), 60).as("simhash")),
+          stage, n => if (nb0 > 0) nb0 else stagedBuckets(s, n))
+        cc.writes.foreach(awaitFold(_, "staged cluster-state write"))
+        writeStateMeta(stage, "labels", cc.nb, cc.rows)
         StateFs.touch(s"$stage/_SUCCESS")
       }
     }
+
+  /** A built state's bucket count, its standing row count (read off its
+    * pin — the bucket count derives from it and the meta reuses it), and
+    * its bucketed writes, still running on [[foldPool]]: the caller
+    * joins them before it commits anything (metas, generations, the
+    * `_SUCCESS` marker), so several builds' writes form one wave. */
+  private final case class StateBuild(nb: Int, rows: Long,
+      writes: Seq[scala.concurrent.Future[Unit]])
+
+  /** `df` with its `bucket` column: pmod(`key`, nb). */
+  private def bucketed(key: String, nb: Int)(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.withColumn("bucket", pmod(col(key), lit(nb)).cast("int"))
+
+  /** Start the bucketed writes of `rels` under `dir` on [[foldPool]] —
+    * independent payloads of pinned frames, one parallel wave (r19,
+    * guide §2.6). */
+  private def writeWave(dir: String,
+      rels: Seq[(String, org.apache.spark.sql.DataFrame)])
+      : Seq[scala.concurrent.Future[Unit]] =
+    rels.map { case (rel, df) =>
+      scala.concurrent.Future(BucketedGens.writeBucketed(df, s"$dir/$rel"))(foldPool) }
+
+  /** THE cluster-state build, shared by initial staging and compaction:
+    * the banded near-dup pairs over `sigs` (doc_id, simhash), pinned —
+    * read by the components run AND the edge write — then the labels
+    * pinned with their count, the bucket count `nbOf(count)` (staging's
+    * density rule or compaction's rescale), and the bucketed writes
+    * under `dir`: `labels` and `edges` by component, `labels_byid` by
+    * id. Returns the build and the pinned labels (id, component). */
+  private def buildCcState(sigs: org.apache.spark.sql.DataFrame, dir: String,
+      nbOf: Long => Int): (StateBuild, org.apache.spark.sql.DataFrame) = {
+    val pairs = TextDedup.simHashNearDup(sigs, "doc_id", "simhash", 3)
+      .select("id_a", "id_b")
+      .localCheckpoint()
+    val labelsP = pinMetered(Components.connectedComponents(pairs, "id_a", "id_b"))
+    val labels = labelsP.df
+    val nb = nbOf(labelsP.n)
+    // NO broadcast hint on the edge join: labels is CORPUS-derived (one
+    // row per doc in any near-dup pair) — at 100 TB it's billions of
+    // rows, and a hint OOMs where a keyed shuffle join just costs an
+    // exchange. AQE still picks broadcast on its own at small scale.
+    (StateBuild(nb, labelsP.n, writeWave(dir, Seq(
+      "labels" -> labels.transform(bucketed("component", nb)),
+      "labels_byid" -> labels.transform(bucketed("id", nb)),
+      "edges" -> pairs.join(labels.select(col("id").as("id_a"), col("component")),
+          Seq("id_a")).transform(bucketed("component", nb))))),
+      labels)
+  }
+
+  /** THE survivor-state build, shared by initial staging and compaction:
+    * every present doc of `scored` (doc_id, quality) under its component
+    * in `labels` (id, component — an unclustered doc is its own
+    * singleton), pinned — read by the membership write AND the election
+    * — then the manifest ([[electSurvivors]]) pinned with its count, the
+    * bucket count `nbOf(count)` (one row per present component: the keyed
+    * relation whose density the count must hold), and the bucketed
+    * `membership` and `manifest` writes under `dir`, both by component —
+    * so a maintained-manifest generation can reference untouched buckets
+    * here instead of re-materializing them. */
+  private def buildSurvivorState(scored: org.apache.spark.sql.DataFrame,
+      labels: org.apache.spark.sql.DataFrame, dir: String,
+      nbOf: Long => Int): StateBuild = {
+    // labels is corpus-derived — no broadcast hint (see buildCcState)
+    val membership = scored
+      .join(labels.select(col("id").as("doc_id"), col("component")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("doc_id")).as("component"), col("quality"))
+      .localCheckpoint()
+    val manifestP = pinMetered(electSurvivors(membership))
+    val nb = nbOf(manifestP.n)
+    StateBuild(nb, manifestP.n, writeWave(dir, Seq(
+      "membership" -> membership.transform(bucketed("component", nb)),
+      "manifest" -> manifestP.df.transform(bucketed("component", nb)))))
+  }
 
   /** Staged bucket count (r19): the byte-floor density rule applied at
     * INITIAL staging, not only at compaction rescale — nb ≈ rows ·
@@ -1002,7 +1043,7 @@ object DedupQueries {
   /** The declared schema of every relation a staged or compacted state
     * holds (`labels` bucketed by component, `labels_byid` by id, `edges`,
     * the compaction's `sigs` snapshot, `membership`, `manifest`) and of
-    * every fold ledger's segments (`ops`, `pairs`, `opsq`, `dels`).
+    * every fold ledger's segments (`ops`, `pairs`, `dels`).
     * Every read of them declares it, for two reasons: over a corpus with
     * no near-duplicate pair the state holds no label rows, the
     * partitioned write leaves no data files, and an inferring read would
@@ -1019,9 +1060,8 @@ object DedupQueries {
       "membership" -> "doc_id BIGINT, component BIGINT, quality DOUBLE, bucket INT",
       "manifest" ->
         "component BIGINT, survivor_id BIGINT, n_members BIGINT, quality DOUBLE, bucket INT",
-      "ops" -> "op STRING, doc_id BIGINT, simhash BIGINT",
+      "ops" -> "op STRING, doc_id BIGINT, simhash BIGINT, quality DOUBLE",
       "pairs" -> "id_a BIGINT, id_b BIGINT",
-      "opsq" -> "op STRING, doc_id BIGINT, quality DOUBLE",
       "dels" -> "doc_id BIGINT")
   }
 
@@ -1274,7 +1314,7 @@ object DedupQueries {
         antiIn(pred, "orig", touchedOrig)
           .select("id", "component", "orig")
           .unionByName(recomputed.select("id", "component", "orig"))
-          .withColumn("bucket", pmod(col("orig"), lit(nb)).cast("int"))
+          .transform(bucketed("orig", nb))
       },
       SegLedger.append(bIdFrame, s"$root/dels", id))
     val baseRows = base.map(_.rows).getOrElse(labelRows(s, stateDir))
@@ -1369,7 +1409,7 @@ object DedupQueries {
       antiIn(pred, "orig", touchedOrig)
         .select("component", "survivor_id", "n_members", "quality", "orig")
         .unionByName(reElectedO)
-        .withColumn("bucket", pmod(col("orig"), lit(nbM)).cast("int"))
+        .transform(bucketed("orig", nbM))
     }
     val baseRows = baseM.map(_.rows)
       .getOrElse(manifestRows(s, survState))
@@ -1417,28 +1457,43 @@ object DedupQueries {
         * arbitrary membership */
       historyPred: org.apache.spark.sql.Column = col("doc_id") % 7 =!= 0,
       ts: Option[Long] = None): Long =
-    componentsCdcImpl(stateDir, root, b, id, staticSigs, historyPred, ts).rows
+    componentsCdcImpl(stateDir, root, batchHead(b, "cfold:opsPin", Seq("simhash")),
+      id, staticSigs, historyPred, ts).rows
 
   /** What [[componentsCdcImpl]] hands the manifest repair: the fold's
     * standing count, the affected docs' NEW labels (exactly the
     * components the batch rebuilt or merged), the affected docs' OLD
-    * ids (label rows dropped this batch), and the cumulative deletes —
+    * ids (label rows dropped this batch), the cumulative deletes and the
+    * live appends' qualities (both resolved from the one op ledger) —
     * so [[survivorCdcStep]] never re-derives the rebuild universe. */
   private final case class CdcFold(rows: Long, newLocal: Held,
-      oldAffected: Seq[Any], cumDels: org.apache.spark.sql.DataFrame)
+      oldAffected: Seq[Any], cumDels: org.apache.spark.sql.DataFrame,
+      appsQ: org.apache.spark.sql.DataFrame)
 
-  /** Batch work a COMPOSED caller (the manifest fold) has already paid
-    * that [[componentsCdcImpl]] would otherwise redo (r19/r20 job
-    * diet): NET op presence (hasD counts net-D docs — the only
-    * downstream question is "is there any delete/append work") with
-    * the seq-less payload-ambiguity check ALREADY ENFORCED by the
-    * caller, and the held net-op batch, whose rows carry the label
-    * payload columns (op, doc_id, simhash[, …]). survivorCdcStep folds
-    * its quality columns into the SAME aggregate and the SAME collect,
-    * so the composed fold pays one batch head where it paid a stats
-    * head plus two of each. */
-  private[queries] final case class CdcBatchPre(hasD: Boolean,
-      hasI: Boolean, ops: Held)
+  /** THE BATCH HEAD of a CDC fold — ONE action (r20 job diet): a single
+    * per-doc aggregate over the batch's [[netOps]] computes the net op (I
+    * beats D — max over {"D","I"}, the D-then-I upsert order), each
+    * surviving I payload (first non-null: D rows carry null payloads)
+    * and a per-doc payload-ambiguity flag, and its rows are held on the
+    * driver, so op presence, the ambiguity check and the touched id
+    * sets are Scala. q187's label fold asks for `simhash`, q189/q190's
+    * composed fold for `simhash` and `quality` — one head per batch
+    * either way, labeled `label`. A seq-less batch with >1 distinct I
+    * payload for one doc_id fails loudly. */
+  private def batchHead(b0: org.apache.spark.sql.DataFrame, label: String,
+      payloads: Seq[String]): Held = {
+    val ops = labeled(b0.sparkSession, label)(Held(netOps(b0).groupBy("doc_id").agg(
+      max("op").as("op"),
+      payloads.map(p => first(col(p), ignoreNulls = true).as(p)) ++
+        payloads.map(p => ambiguous(p).as(s"__amb_$p")): _*)))
+    if (!b0.columns.contains("seq")) payloads.foreach { p =>
+      require(ops.where(s"__amb_$p", true).isEmpty,
+        s"seq-less batch carries conflicting I payloads ($p) for one " +
+          "doc_id — the op order is ambiguous; ordered producers must " +
+          "ship a `seq` column")
+    }
+    ops
+  }
 
   /** Normalize an ORDERED changelog batch — a `seq` column carrying
     * each row's changelog position — to per-doc NET ops: the max-seq
@@ -1632,7 +1687,7 @@ object DedupQueries {
       maxSegments: Int = 64): Boolean =
     BucketedGens.latest(s"$root/manifest", below = Some(below)).exists { m =>
       val floor = segFloor(root, Some(below))
-      val fams = Seq("ops", "pairs", "opsq").map(k => s"$root/$k")
+      val fams = Seq("ops", "pairs").map(k => s"$root/$k")
       // the SEGMENT-COUNT width bound holds regardless of standing size
       // — a stream whose manifest empties (every doc deleted) must
       // still compact away its reconstruction plan's width; only the
@@ -1723,14 +1778,13 @@ object DedupQueries {
       .map(p => p.substring(p.lastIndexOf("gen-") + 4).toLong)
       .getOrElse(Long.MinValue)
 
+  /** [[componentsCdcStep]] over the batch's held [[batchHead]] `ops`. */
   private def componentsCdcImpl(stateDir0: String, root: String,
-      b0: org.apache.spark.sql.DataFrame, id: Long,
+      ops: Held, id: Long,
       staticSigs: org.apache.spark.sql.DataFrame,
       historyPred: org.apache.spark.sql.Column,
-      ts: Option[Long] = None,
-      pre: Option[CdcBatchPre] = None): CdcFold = {
-    val s = b0.sparkSession
-    val b = netOps(b0)
+      ts: Option[Long]): CdcFold = {
+    val s = ops.s
     val labelsRoot = s"$root/labels"
     val stateDir = effectiveState(s, root, Some(id), stateDir0)
     val nb = labelBuckets(stateDir)
@@ -1739,56 +1793,32 @@ object DedupQueries {
     def atRestRows = atRest.select(col("id"), col("component"), col("bucket"))
     val base = BucketedGens.latest(labelsRoot, below = Some(id))
     val emptyPairs = emptyState(s, "pairs")
+    val hasI = ops.where("op", "I").nonEmpty
     // THE BATCH'S NET OPS — this (and only this) lands as the batch's
     // `ops` ledger SEGMENT: per-batch ledger write I/O is O(batch), not
     // O(churn-since-compaction) (r17 — r16 rewrote the full cumulative
     // frames every fold). I beats D within a batch (the D-then-I upsert
-    // order), so a doc carries exactly one row per segment. ONE action
-    // (r20): the per-doc groupBy computes the net op + surviving payload
-    // + ambiguity flag, and its rows are held on the driver, so op
-    // presence, the ambiguity count and the touched id set are Scala —
-    // unless a composed caller (the manifest fold) already paid it and
-    // hands the held batch in via `pre` (r19 job diet).
-    val (hasD, hasI, ops) = pre match {
-      case Some(p) =>
-        // payload ambiguity already enforced by the composed caller's
-        // shared aggregate — nothing to recheck here
-        (p.hasD, p.hasI, p.ops)
-      case None =>
-        val ops = labeled(s, "cfold:opsPin")(Held(b.groupBy("doc_id").agg(
-          max("op").as("op"),
-          first(col("simhash"), ignoreNulls = true).as("simhash"),
-          ambiguous("simhash").as("__ambS"))))
-        if (!b0.columns.contains("seq"))
-          require(ops.where("__ambS", true).isEmpty,
-            "seq-less batch carries conflicting I payloads (simhash) for one " +
-              "doc_id — the op order is ambiguous; ordered producers must " +
-              "ship a `seq` column")
-        (ops.where("op", "D").nonEmpty, ops.where("op", "I").nonEmpty, ops)
-    }
-    // a composed caller's batch may carry extra payload columns
-    // (quality) — project to the label fold's shape; the ops ledger
-    // schema and every downstream slice are unchanged either way
-    val batchOps = ops.df.select("op", "doc_id", "simhash")
+    // order), so a doc carries exactly one row per segment. The I rows
+    // carry the head's quality when it has one (the composed manifest
+    // fold's) — ONE change ledger serves the label fold and the
+    // manifest repair; q187's label-only head writes null.
+    val batchOps = ops.df.select(col("op"), col("doc_id"), col("simhash"),
+      (if (ops.schema.fieldNames.contains("quality")) col("quality")
+       else lit(null).cast("double")).as("quality"))
     val bI = batchOps.filter(col("op") === "I").select("doc_id", "simhash")
     // cumulative state RECONSTRUCTED from the segments: last-writer-wins
-    // per doc over segment ordinals (within a segment the net op is
-    // unique). One window over O(churn-since-compaction) rows — the
-    // same read volume the r16 cumulative frames paid, with none of the
-    // per-batch full rewrites. A fold with NO standing segments (first
-    // batch, or right after a compaction — a DRIVER-side listing, no
-    // job) skips the window: its own net ops ARE the winners.
+    // per doc over segment ordinals ([[SegLedger.lastWriterWins]]). One
+    // window over O(churn-since-compaction) rows — the same read volume
+    // the r16 cumulative frames paid, with none of the per-batch full
+    // rewrites. A fold with NO standing segments (first batch, or right
+    // after a compaction — a DRIVER-side listing, no job) skips the
+    // window: its own net ops ARE the winners.
     val hasOpsSegs = SegLedger.dirs(s"$root/ops", id, ledgerFloor).nonEmpty
     val allOps = SegLedger.read(s, s"$root/ops", id, emptyState(s, "ops"), ledgerFloor)
       .unionByName(batchOps.withColumn("__seg", lit(id)))
     val winners =
       if (!hasOpsSegs) batchOps // already one net row per doc, and held
-      else labeled(s, "cfold:winners")(
-        allOps.withColumn("__r", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("doc_id").orderBy(col("__seg").desc)))
-        .filter(col("__r") === 1)
-        .localCheckpoint())
+      else labeled(s, "cfold:winners")(SegLedger.lastWriterWins(allOps).localCheckpoint())
     val cumDels = winners.filter(col("op") === "D").select("doc_id")
     val cumApps = winners.filter(col("op") === "I").select("doc_id", "simhash")
     // EVERY touched doc's standing evidence dies: a delete forgets the
@@ -2005,7 +2035,7 @@ object DedupQueries {
         predBy, byBuckets, s"$byidRoot/gen-$id") { pred =>
       antiIn(pred.select("id", "component"), "id", oldAffected)
         .unionByName(newLocal.df)
-        .withColumn("bucket", pmod(col("id"), lit(nb)).cast("int"))
+        .transform(bucketed("id", nb))
     }))(foldPool)
     // O(batch) ledger segments — the batch's own contribution, nothing
     // cumulative is ever rewritten (the purge happens at read time)
@@ -2018,7 +2048,7 @@ object DedupQueries {
         predTouched, buckets, s"$labelsRoot/gen-$id") { pred =>
       antiIn(pred.select("id", "component"), "id", oldAffected)
         .unionByName(newLocal.df)
-        .withColumn("bucket", pmod(col("component"), lit(nb)).cast("int"))
+        .transform(bucketed("component", nb))
     })
     val (writtenBy, _, _) = awaitFold(fByid, "byid mirror write")
     awaitFold(fOps, "ops segment append")
@@ -2032,7 +2062,8 @@ object DedupQueries {
     // no per-batch ledger vacuum: segments ACCUMULATE until a
     // compaction truncates the family (that is the trade — O(batch)
     // writes now, one bulk fold when the size policy fires)
-    CdcFold(rows, newLocal, oldAffected, cumDels)
+    CdcFold(rows, newLocal, oldAffected, cumDels,
+      winners.filter(col("op") === "I").select("doc_id", "quality"))
   }
 
   /** The survivor-manifest state AT REST (q182): `membership`
@@ -2069,37 +2100,13 @@ object DedupQueries {
       nbM0: Int = -1): String =
     graft.sources.ZOrder.ensureStagedDir(tag, d, s"$d/documents.parquet") { target =>
       EventQueries.multiWriteStage(target) { stage =>
-        val labels = stateRel(s, ccState, "labels")
-        // labels is corpus-derived — no broadcast hint (see stagedCcState)
-        val membership = docs
-          .join(labels.select(col("id").as("doc_id"), col("component")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("component"),
-            TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality"))
-          .localCheckpoint() // read by the membership write AND the manifest agg
-        // the manifest count rides the pin — the bucket count derives
-        // from it and the meta reuses it (was a separate count() job)
-        val manifestP = pinMetered(electSurvivors(membership))
-        val nbM = if (nbM0 > 0) nbM0 else stagedBuckets(s, manifestP.n)
-        // membership ∥ manifest writes — independent payloads of the
-        // pinned frames (r19, guide §2.6)
-        val fMw = scala.concurrent.Future(
-          membership
-            .withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
-            .repartition(col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$stage/membership"))(foldPool)
-        // the manifest keyed by the same component buckets, so a
-        // maintained-manifest generation can reference untouched
-        // buckets here instead of re-materializing them
-        manifestP.df
-          .withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(s"$stage/manifest")
-        awaitFold(fMw, "staged membership write")
-        writeStateMeta(stage, "manifest", nbM, manifestP.n)
+        val surv = buildSurvivorState(
+          docs.select(col("doc_id"),
+            TextFns.qualityScore(col("text"), TextQueries.qualityStops).as("quality")),
+          stateRel(s, ccState, "labels"), stage,
+          n => if (nbM0 > 0) nbM0 else stagedBuckets(s, n))
+        surv.writes.foreach(awaitFold(_, "staged survivor-state write"))
+        writeStateMeta(stage, "manifest", surv.nb, surv.rows)
         StateFs.touch(s"$stage/_SUCCESS")
       }
     }
@@ -2151,9 +2158,9 @@ object DedupQueries {
     * batch's arrivals — minus the deletes. Old rows keyed by a V doc or
     * a batch-deleted id drop; V re-elects per coalesced new component
     * with quality from the pruned history membership buckets ∪ the
-    * O(arrivals) quality ledger (ledger WINS for re-appended docs —
-    * their membership rows are superseded evidence; the ledger applies
-    * the same D-then-I upsert order as the id ledgers). Manifest
+    * live appends' qualities off the fold's op ledger (the ledger WINS
+    * for re-appended docs — their membership rows are superseded
+    * evidence; it applies the same D-then-I upsert order). Manifest
     * generations are BUCKET-PARTITIONED by pmod(component, 64)
     * ([[BucketedGens]]): only buckets holding retired or re-elected
     * keys are written, so pass-through rows are never rewritten or
@@ -2166,75 +2173,22 @@ object DedupQueries {
       historyPred: org.apache.spark.sql.Column = col("doc_id") % 7 =!= 0,
       ts: Option[Long] = None): Long = {
     val s = b0.sparkSession
-    val b = netOps(b0) // ordered batches reduce to per-doc net ops ONCE
     val manRoot = s"$root/manifest"
     val survState = effectiveState(s, root, Some(id), survState0)
     val nbM = manifestBuckets(survState)
     val baseM = BucketedGens.latest(manRoot, below = Some(id))
-    // ONE action for the WHOLE composed fold's batch head (r20 job
-    // diet — r19 still paid a stats head PLUS a net-op checkpoint; the
-    // two-distinct + anti-join + union shape also cost three exchanges
-    // where one groupBy costs one): a single per-doc aggregate computes
-    // the net op (I beats D — max over {"D","I"}), the surviving I
-    // payload (first non-null: D rows carry null simhash/quality), and
-    // a per-doc payload-ambiguity flag; its rows are held on the
-    // driver, so op presence, the ambiguity counts, the delete side's
-    // manifest bucket set and the arrival ids are Scala. The flags
-    // replace the old rIs==dI / rIq==dI global-distinct check with the
-    // SAME predicate per doc: >1 distinct I payload for one doc_id.
-    val ops = labeled(s, "mfold:opsPin")(Held(b.groupBy("doc_id").agg(
-      max("op").as("op"),
-      first(col("simhash"), ignoreNulls = true).as("simhash"),
-      first(col("quality"), ignoreNulls = true).as("quality"),
-      ambiguous("simhash").as("__ambS"),
-      ambiguous("quality").as("__ambQ"))))
-    if (!b0.columns.contains("seq")) {
-      require(ops.where("__ambS", true).isEmpty,
-        "seq-less batch carries conflicting I payloads (simhash) for one " +
-          "doc_id — the op order is ambiguous; ordered producers must " +
-          "ship a `seq` column")
-      require(ops.where("__ambQ", true).isEmpty,
-        "seq-less batch carries conflicting I payloads (quality) for one " +
-          "doc_id — the op order is ambiguous; ordered producers must " +
-          "ship a `seq` column")
-    }
+    // ONE batch head for the WHOLE composed fold: the label fold reads
+    // its simhash payload, the repair its quality payload
+    val ops = batchHead(b0, "mfold:opsPin", Seq("simhash", "quality"))
     // NET delete and arrival docs: a doc whose D was superseded by a
     // same-batch I is an arrival — it reaches manBuckets and dropKeys
     // through V
     val bD = ops.where("op", "D").map(_.getAs[Any]("doc_id"))
     val bIids = ops.where("op", "I").map(_.getAs[Any]("doc_id"))
-    // the quality ledger in SEGMENT form (r17, same discipline as the
-    // fold's op/pair ledgers): the batch lands only its net ops, the
-    // cumulative "live append qualities" resolve last-writer-wins.
-    // A projection of the one held batch — no second action.
-    val batchOpsQ = ops.df.select("op", "doc_id", "quality")
-    // reconstruction + segment append OVERLAP the label fold on
-    // [[foldPool]] (r19, guide §2.6): this family ($root/opsq) is
-    // touched by nothing inside the label fold, and both the listing
-    // and the window read strictly below `id`, so the append's own
-    // segment can never leak into its batch's reconstruction.
-    // No standing opsq segment (driver-side listing) ⇒ the batch's own
-    // net I rows ARE the live qualities — skip the window + pin.
-    val fAppsQ = scala.concurrent.Future(labeled(s, "mfold:opsq") {
-      val q =
-        if (SegLedger.dirs(s"$root/opsq", id, segFloor(root, Some(id))).isEmpty)
-          batchOpsQ.filter(col("op") === "I").select("doc_id", "quality")
-        else SegLedger.read(s, s"$root/opsq", id, emptyState(s, "opsq"),
-            segFloor(root, Some(id)))
-          .unionByName(batchOpsQ.withColumn("__seg", lit(id)))
-          .withColumn("__r", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("doc_id").orderBy(col("__seg").desc)))
-          .filter(col("__r") === 1 && col("op") === "I")
-          .select("doc_id", "quality")
-          .localCheckpoint()
-      SegLedger.append(batchOpsQ, s"$root/opsq", id)
-      q
-    })(foldPool)
-    val fold = componentsCdcImpl(ccState, root,
-      b.select("op", "doc_id", "simhash"), id, staticSigs, historyPred, ts,
-      Some(CdcBatchPre(bD.nonEmpty, bIids.nonEmpty, ops)))
-    val appsQ = awaitFold(fAppsQ, "quality-ledger reconstruction")
+    val fold = componentsCdcImpl(ccState, root, ops, id, staticSigs, historyPred, ts)
+    // the live appends' qualities, resolved from the same op ledger as
+    // the label fold's cumulative state
+    val appsQ = fold.appsQ
     // re-election universe V: the fold's affected docs (new labels ∪
     // dropped old members) + arrivals, minus the deletes. Its inputs are
     // all held, so V is a driver-side key set: the only action is the
@@ -2248,7 +2202,7 @@ object DedupQueries {
     val appsQv = semiIn(appsQ, "doc_id", v).select("doc_id", "quality")
     // history quality from pruned membership buckets (bucket key = the
     // at-rest COALESCED component — singletons under their own id);
-    // docs in the quality ledger are anti-joined off — for a
+    // docs with a live append quality are anti-joined off — for a
     // re-appended doc the ledger row is current, the membership stale.
     // The bucket list covers exactly the v ids the ledger does NOT
     // carry — correct in both regimes (before a compaction those are
@@ -2298,7 +2252,7 @@ object DedupQueries {
       antiIn(pred, "component", dropKeys)
         .select("component", "survivor_id", "n_members", "quality")
         .unionByName(reElected)
-        .withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
+        .transform(bucketed("component", nbM))
     })
     val baseRows = baseM.map(_.rows)
       .getOrElse(manifestRows(s, survState))
@@ -2309,7 +2263,7 @@ object DedupQueries {
 
   /** COMPACTION for the CDC fold family (q190): fold the accumulated
     * ledger SEGMENTS into a RE-STAGED at-rest state and truncate them.
-    * The segment families (`ops`/`pairs`/`opsq`) are the fold's only
+    * The segment families (`ops`/`pairs`) are the fold's only
     * unbounded carried state — correct forever, but each batch re-pays
     * their read-side reconstruction, a scale-killer after enough churn.
     * Compaction derives the PRESENT corpus (history minus superseded,
@@ -2357,26 +2311,13 @@ object DedupQueries {
     val rowsLPrev = stateMeta(ccPrev, "labels").map(_._2).getOrElse(-1L)
     val nbMPrev = manifestBuckets(survPrev)
     val rowsMPrev = stateMeta(survPrev, "manifest").map(_._2).getOrElse(-1L)
-    // the cumulative ledgers reconstructed ONCE from their segments —
-    // the bulk fold this compaction exists to amortize; the two
-    // reconstructions touch disjoint families — one parallel wave (r19,
-    // guide §2.6)
-    val (winners, appsQ) = inParallel(
-      SegLedger.read(s, s"$root/ops", id, emptyState(s, "ops"), ledgerFloor)
-        .withColumn("__r", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("doc_id").orderBy(col("__seg").desc)))
-        .filter(col("__r") === 1)
-        .localCheckpoint(),
-      SegLedger.read(s, s"$root/opsq", id, emptyState(s, "opsq"), ledgerFloor)
-        .withColumn("__r", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("doc_id").orderBy(col("__seg").desc)))
-        .filter(col("__r") === 1 && col("op") === "I")
-        .select("doc_id", "quality")
-        .localCheckpoint())
+    // the cumulative op ledger reconstructed ONCE from its segments —
+    // the bulk fold this compaction exists to amortize
+    val winners = SegLedger.lastWriterWins(
+        SegLedger.read(s, s"$root/ops", id, emptyState(s, "ops"), ledgerFloor))
+      .localCheckpoint()
     val cumDels = winners.filter(col("op") === "D").select("doc_id")
-    val cumApps = winners.filter(col("op") === "I").select("doc_id", "simhash")
+    val cumApps = winners.filter(col("op") === "I")
     val superseded = cumDels.unionByName(cumApps.select("doc_id")).distinct()
     // the base corpus chains: first compaction from the historyPred
     // slice, later ones from the previous compaction's own snapshot
@@ -2395,88 +2336,38 @@ object DedupQueries {
     // below reads `present` from its checkpoint blocks, not this dir.
     val fSigs = scala.concurrent.Future(
       present.write.mode("overwrite").parquet(s"$stateDir/sigs"))(foldPool)
-    // rebuild the cluster state over the present corpus — the same
-    // shape stagedCcState stages from scratch
-    val pairs = TextDedup.simHashNearDup(present, "doc_id", "simhash", 3)
-      .select("id_a", "id_b")
-      .localCheckpoint() // read by the components run AND the edge write
-    // the standing count rides the pin (observe) — nb derives from it
-    // BEFORE the bucketed writes, and the meta write reuses it
-    val labelsP = pinMetered(
-      Components.connectedComponents(pairs, "id_a", "id_b"))
-    val labels = labelsP.df
-    val nLabels = labelsP.n
+    // rebuild the cluster state over the present corpus — the build
+    // stagedCcState stages from scratch, at the rescaled bucket count
     val minBB = confMinBucketBytes(s)
-    val nbL = rescaleBuckets(nbLPrev, rowsLPrev, nLabels,
-      scaledBytesEst(s"$ccPrev/labels", rowsLPrev, nLabels), minBB)
-    // the three cluster-state writes share only the pinned labels/pairs
-    // frames — one parallel wave (r19, guide §2.6)
-    val fLabelsW = scala.concurrent.Future(
-      labels.withColumn("bucket", pmod(col("component"), lit(nbL)).cast("int"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$stateDir/labels"))(foldPool)
-    val fByidW = scala.concurrent.Future(
-      labels.withColumn("bucket", pmod(col("id"), lit(nbL)).cast("int"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$stateDir/labels_byid"))(foldPool)
-    // corpus-derived labels — no broadcast hint (see stagedCcState)
-    val fEdgesW = scala.concurrent.Future(
-      pairs
-        .join(labels.select(col("id").as("id_a"), col("component")),
-          Seq("id_a"))
-        .withColumn("bucket", pmod(col("component"), lit(nbL)).cast("int"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$stateDir/edges"))(foldPool)
+    val (cc, labels) = buildCcState(present, stateDir, n =>
+      rescaleBuckets(nbLPrev, rowsLPrev, n, scaledBytesEst(s"$ccPrev/labels", rowsLPrev, n),
+        minBB))
     // ... and the survivor state: present docs' quality from the
     // predecessor membership (still valid for untouched history) ∪ the
-    // quality ledger (appended docs, re-scored upserts)
-    val presentQ = stateRel(s, survPrev, "membership")
-      .join(superseded, Seq("doc_id"), "left_anti")
-      .select("doc_id", "quality")
-      .unionByName(appsQ.select("doc_id", "quality"))
-    val membership = presentQ
-      .join(labels.select(col("id").as("doc_id"), col("component")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("component"),
-        col("quality"))
-      .localCheckpoint() // membership write + manifest agg + counts
-    // the manifest count rides the pin — nbM derives from it before
-    // the bucketed writes (one row per present component, the relation
-    // whose density the bucket count must hold)
-    val manifestP = pinMetered(electSurvivors(membership))
-    val manifest = manifestP.df
-    val nManifest = manifestP.n
-    val nbM = rescaleBuckets(nbMPrev, rowsMPrev, nManifest,
-      scaledBytesEst(s"$survPrev/manifest", rowsMPrev, nManifest), minBB)
-    // membership ∥ manifest writes (independent payloads of the pinned
-    // frames), then join every outstanding write future before any
-    // commit marker below — the marker must still be LAST
-    val fMembershipW = scala.concurrent.Future(
-      membership.withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$stateDir/membership"))(foldPool)
-    manifest.withColumn("bucket", pmod(col("component"), lit(nbM)).cast("int"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$stateDir/manifest")
-    Seq(fSigs, fLabelsW, fByidW, fEdgesW, fMembershipW).foreach(f =>
+    // live appends' qualities (appended docs, re-scored upserts)
+    val surv = buildSurvivorState(
+      stateRel(s, survPrev, "membership")
+        .join(superseded, Seq("doc_id"), "left_anti")
+        .select("doc_id", "quality")
+        .unionByName(cumApps.select("doc_id", "quality")),
+      labels, stateDir, n =>
+        rescaleBuckets(nbMPrev, rowsMPrev, n,
+          scaledBytesEst(s"$survPrev/manifest", rowsMPrev, n), minBB))
+    // join every outstanding write of the wave before any commit marker
+    // below — the marker must still be LAST
+    (fSigs +: (cc.writes ++ surv.writes)).foreach(f =>
       awaitFold(f, "compaction write wave"))
     // ledger truncation is the SEGMENT VACUUM below (after the marker):
     // post-compaction folds list no segment below their id and read
     // empty frames — nothing is written here
     // full-snapshot generation pointers: every bucket at the NEW rest
     // (the byid mirror carries the same standing count by construction)
-    writeStateMeta(stateDir, "labels", nbL, nLabels)
-    writeStateMeta(stateDir, "manifest", nbM, nManifest)
-    BucketedGens.commit(s"$root/labels", id, BucketedGens.initialOwners(nbL), nLabels)
-    BucketedGens.commit(s"$root/labels_byid", id, BucketedGens.initialOwners(nbL), nLabels)
-    BucketedGens.commit(s"$root/manifest", id, BucketedGens.initialOwners(nbM),
-      nManifest)
+    writeStateMeta(stateDir, "labels", cc.nb, cc.rows)
+    writeStateMeta(stateDir, "manifest", surv.nb, surv.rows)
+    BucketedGens.commit(s"$root/labels", id, BucketedGens.initialOwners(cc.nb), cc.rows)
+    BucketedGens.commit(s"$root/labels_byid", id, BucketedGens.initialOwners(cc.nb), cc.rows)
+    BucketedGens.commit(s"$root/manifest", id, BucketedGens.initialOwners(surv.nb),
+      surv.rows)
     // the OVERALL commit marker, after every artifact above: a replay
     // that finds it skips; one that does not re-runs from predecessors
     // that are still intact (no vacuum has run yet)
@@ -2487,7 +2378,6 @@ object DedupQueries {
     BucketedGens.vacuum(s, s"$root/manifest", baseM, id)
     SegLedger.vacuum(s"$root/ops", id)
     SegLedger.vacuum(s"$root/pairs", id)
-    SegLedger.vacuum(s"$root/opsq", id)
     // the state vacuum is RETENTION-AWARE: a pinned (or keepLast-held)
     // generation's AtRest buckets resolve against the compacted state
     // that was current when it committed — deleting that snapshot would

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * INSERTS (the retraction family's `dels` — a doc id, never retracted):
   * they replace the per-fold union of an unbounded segment list with
   * one checkpoint read + the tail. They are NOT legal for the
-  * last-writer-wins families (`ops`/`pairs`/`opsq`) — a checkpoint
+  * last-writer-wins families (`ops`/`pairs`) — a checkpoint
   * collapses per-row segment ordinals, which LWW resolution needs;
   * those families truncate through the state-level compaction's read
   * floor instead.
@@ -169,6 +169,17 @@ private[graft] object SegLedger {
     parts.reduceOption(_.unionByName(_))
       .getOrElse(empty.withColumn("__seg", lit(0L)))
   }
+
+  /** LAST-WRITER-WINS per doc over a [[read]] of a per-doc family: the
+    * row of each `doc_id` from its highest segment ordinal (`__seg`;
+    * within one segment a doc carries exactly one net row). The one
+    * definition the CDC fold's cumulative op state resolves through,
+    * per fold and at compaction. */
+  def lastWriterWins(segs: DataFrame): DataFrame =
+    segs.withColumn("__r", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("doc_id").orderBy(col("__seg").desc)))
+      .filter(col("__r") === 1).drop("__r")
 
   /** Total rows across committed segments in (`floor`, `below`) (plus
     * the resolving checkpoint's rows, when one exists) — read from the

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming extension (SURVEY §2.10 — the reference is pure
   * batch; this is the streaming twin of graft.queries.EventQueries so the
@@ -25,16 +24,6 @@ object EventPipeline {
       .select(
         col("window.start").as("hour_start"),
         col("event_type"), col("n"), col("total_value"))
-
-  /** Stream-static enrichment: left-join a streaming event frame against
-    * a static dimension (broadcast per micro-batch — no stream-side
-    * shuffle, no state). The streaming twin of the J1/J2 broadcast
-    * lookup chain. The static side's FILE LISTING is pinned when the dim
-    * DataFrame is created — rows of those files are re-read per batch,
-    * but a re-staged directory (new/deleted part files) is NOT picked up;
-    * restart the query with a fresh dim frame to roll reference data. */
-  def enrichWithDim(events: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
-    events.join(broadcast(dim), keys, "left")
 
   /** Streaming exact deduplication: drop rows repeating `idCols` while
     * their event time is within `delay` of the watermark — the streaming
@@ -151,52 +140,4 @@ object EventPipeline {
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
-  case class SessionState(start: Long, last: Long, n: Long, value: Double)
-  case class Session(user_id: Long, session_start_sec: Long, n_events: Long,
-                     duration_sec: Long, session_value: Double)
-
-  /** Gap-based sessionization via flatMapGroupsWithState — the streaming
-    * form of q44_sessionize: a session closes after 30 minutes of
-    * silence (processing-time timeout for liveness; event-time gap for
-    * in-batch splits). `timeout=NoTimeout` disables the liveness timer
-    * (sessions then only close when a later event arrives) — used by the
-    * deterministic tests. */
-  def sessionize(
-      events: Dataset[Event],
-      timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout()): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapSec = 1800L
-    val useTimer = timeout != GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), timeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(s =>
-              Session(userId, s.start, s.n, s.last - s.start, s.value)).toSeq
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val sec = e.ts.getTime / 1000
-              cur match {
-                case Some(s) if sec - s.last > gapSec =>
-                  closed ::= Session(userId, s.start, s.n, s.last - s.start, s.value)
-                  cur = Some(SessionState(sec, sec, 1, e.value))
-                case Some(s) =>
-                  cur = Some(SessionState(s.start, sec, s.n + 1, s.value + e.value))
-                case None =>
-                  cur = Some(SessionState(sec, sec, 1, e.value))
-              }
-            }
-            cur.foreach(state.update)
-            if (useTimer) state.setTimeoutDuration(s"$gapSec seconds")
-            closed.reverse.iterator
-          }
-      }
-  }
 }

@@ -675,8 +675,6 @@ class PlanBudgetSpec extends SparkSpec {
       ("EndToEndQueries.scala", "probe"), ("EndToEndQueries.scala", "projects"),
       ("EndToEndQueries.scala", "scored"), ("EndToEndQueries.scala", "semDups"),
       ("EndToEndQueries.scala", "years"),
-      // streaming enrichment: caller-provided dimension (API contract)
-      ("EventPipeline.scala", "dim"),
       // CVA reference surface: country/org/question dims, per-(iso,year)
       // rate tables, survey-side aggregates — all reference-bounded
       ("ExchangeRates.scala", "df"), ("FlowCuration.scala", "isos"),

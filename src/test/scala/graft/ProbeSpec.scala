@@ -38,4 +38,25 @@ class ProbeSpec extends SparkSpec {
       spark.read.schema("id BIGINT").parquet(s"$dir/t"))
     assert(declared.jobs.isEmpty, s"a declared read ran jobs: ${declared.jobs}")
   }
+
+  test("a micro-batch's jobs read as <name>#<batch>, one site per batch") {
+    import spark.implicits._
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark)
+    val q = in.toDF().writeStream.queryName("graft_probe_drain")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.write.format("noop").mode("overwrite").save() }
+      .start()
+    try {
+      val m = Probe.metered(spark.sparkContext) {
+        in.addData(1L, 2L)
+        q.processAllAvailable()
+        in.addData(3L)
+        q.processAllAvailable()
+      }
+      val sites = m.jobs.map(_.site).toSet
+      assert(sites.contains("graft_probe_drain#0") && sites.contains("graft_probe_drain#1"),
+        s"sites: $sites")
+      assert(!sites.exists(_.contains("\n")), s"a multi-line site is left: $sites")
+    } finally q.stop()
+  }
 }

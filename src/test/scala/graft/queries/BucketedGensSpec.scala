@@ -197,7 +197,7 @@ class BucketedGensSpec extends SparkSpec {
     BucketedGens.commit(s"$root/manifest", 3, BucketedGens.initialOwners(4), 1000)
     assert(DedupQueries.shouldCompact(root, 10, 0.05), "100 rows > 5% of 1000")
     assert(!DedupQueries.shouldCompact(root, 10, 0.15), "100 rows < 15% of 1000")
-    seg("opsq", 5, 100)
+    seg("pairs", 5, 100)
     assert(DedupQueries.shouldCompact(root, 10, 0.15),
       "families sum: 200 rows > 15% of 1000")
     // a committed compacted state FLOORS the count — absorbed segments

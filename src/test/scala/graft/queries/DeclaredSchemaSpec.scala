@@ -53,7 +53,7 @@ class DeclaredSchemaSpec extends SparkSpec {
           lit(null).cast("double").as("quality")))
     val root = Files.createTempDirectory("graft_declared_schema_root_").toString
     DedupQueries.survivorCdcStep(cc, surv, root, batch, 0L, sigs)
-    for (rel <- Seq("ops", "pairs", "opsq")) {
+    for (rel <- Seq("ops", "pairs")) {
       assert(SegLedger.rows(s"$root/$rel", 1L) > 0L, s"fixture: the $rel segment is empty")
       assertDeclared(rel, s"$root/$rel/seg-0")
     }

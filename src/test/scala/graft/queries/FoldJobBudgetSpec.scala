@@ -106,16 +106,19 @@ class FoldJobBudgetSpec extends SparkSpec {
     // trigger-rate bound is written against
     info(f"fold jobs — append=$jAppend (${wAppend}%.1fs) delete=$jDelete " +
       f"(${wDelete}%.1fs) split=$jSplit (${wSplit}%.1fs)")
-    // measured with declared state schemas, the one-shuffle batch head
-    // and driver-held batch frames: append=30, delete=32, split=32
-    // (local[4], AQE on). The history on this same fixture: 44/60/62
-    // before that change (ceilings 60/72/74), the r17 diet 63/74/76,
-    // r16's shape 82/100/102. Budgets = measured + ~12% headroom;
-    // tighten only by REMOVING actions — a breach means a code change
-    // added per-batch driver actions, exactly what the diet removed.
-    assert(jAppend <= 34, s"append-profile fold ran $jAppend jobs — over budget")
-    assert(jDelete <= 36, s"delete-profile fold ran $jDelete jobs — over budget")
-    assert(jSplit <= 36, s"split-profile fold ran $jSplit jobs — over budget")
+    // measured with the one change ledger (the op ledger carries the
+    // arrivals' quality; no second quality ledger to append or window):
+    // append=29, delete=29, split=29 (local[4], AQE on). The history on
+    // this same fixture: 30/32/32 with a separate quality ledger
+    // (ceilings 34/36/36), 44/60/62 before declared state schemas and
+    // driver-held batch frames (ceilings 60/72/74), the r17 diet
+    // 63/74/76, r16's shape 82/100/102. Budgets = measured + ~12%
+    // headroom; tighten only by REMOVING actions — a breach means a code
+    // change added per-batch driver actions, exactly what the diet
+    // removed.
+    assert(jAppend <= 32, s"append-profile fold ran $jAppend jobs — over budget")
+    assert(jDelete <= 32, s"delete-profile fold ran $jDelete jobs — over budget")
+    assert(jSplit <= 32, s"split-profile fold ran $jSplit jobs — over budget")
   }
 
   test("componentsMergeStep: per-fold job count stays under the diet budget") {

@@ -52,23 +52,6 @@ class EventPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("enrichWithDim: stream rows pick up dim attributes, misses stay null") {
-    import spark.implicits._
-    val input = MemoryStream[EventPipeline.Event](spark)
-    val dim = Seq((10L, "gold"), (11L, "basic")).toDF("user_id", "tier")
-    val q = EventPipeline.enrichWithDim(input.toDF(), dim, Seq("user_id"))
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    try {
-      input.addData(
-        EventPipeline.Event(1, ts(0), 10, "click", 1.0),
-        EventPipeline.Event(2, ts(1), 99, "click", 1.0)) // no dim row
-      q.processAllAvailable()
-      val rows = spark.table("enriched").collect()
-        .map(r => r.getAs[Long]("event_id") -> Option(r.getAs[String]("tier"))).toMap
-      assert(rows == Map(1L -> Some("gold"), 2L -> None))
-    } finally q.stop()
-  }
-
   test("dedupWithinWatermark: retransmitted ids dropped across batches, state ages out") {
     val sqlc = spark.sqlContext
     import spark.implicits._
@@ -177,27 +160,5 @@ class EventPipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out == Map(1L -> 1.0, 2L -> 2.0), s"partial dir poisoned the merge: $out")
     assert(!partial.exists(), "dead partial version dir was not pruned")
-  }
-
-  test("sessionize: >30min gap splits sessions within a batch") {
-    val sqlc = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[EventPipeline.Event](spark)
-    // user 10: events at t0, t10 (one session), then t60 (new session);
-    // the first session closes when the second opens.
-    input.addData(
-      EventPipeline.Event(1, ts(0), 10, "click", 1.0),
-      EventPipeline.Event(2, ts(10), 10, "click", 2.0),
-      EventPipeline.Event(3, ts(60), 10, "click", 4.0))
-    val q = EventPipeline.sessionize(input.toDS(),
-      org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
-      .writeStream.format("memory").queryName("sessions").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("sessions").collect()
-        .map(r => (r.getAs[Long]("n_events"), r.getAs[Long]("duration_sec"),
-          r.getAs[Double]("session_value"))).toSet
-      assert(rows == Set((2L, 600L, 3.0))) // first session emitted on split
-    } finally q.stop()
   }
 }
