@@ -5,6 +5,7 @@ import graft.ann.Knn
 import graft.functions.VectorFns
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Similarity search over the `embeddings` table: brute-force cosine
   * top-k (exact baseline) and the sign-bit LSH-bucketed scale path.
@@ -472,7 +473,7 @@ object AnnQueries {
         graft.ann.KMeans.fit(emb, "vec_id", "embedding", k = k16, iters = it2)
           .toDF("cid", "cent").coalesce(1).write.mode("overwrite").parquet(target)
       }
-      val loaded = s.read.parquet(dir).collect()
+      val loaded = StateFs.readParquet(s, dir).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
       graft.ann.Knn.ivfTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", loaded, k = 3, probes = 12)
@@ -711,7 +712,7 @@ object AnnQueries {
         rows.toDF("b", "l", "cent").coalesce(1)
           .write.mode("overwrite").parquet(target)
       }
-      val loaded = s.read.parquet(dir).collect()
+      val loaded = StateFs.readParquet(s, dir).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
       val branches = loaded.filter(_._2 == -1).sortBy(_._1)
         .map { case (b, _, c) => (b, c) }.toSeq
@@ -855,7 +856,7 @@ object AnnQueries {
         graft.ann.Pq.encode(emb, "vec_id", "embedding", cents, cb,
           residual = true).write.mode("overwrite").parquet(target)
       }
-      graft.ann.Pq.ivfPqTopKFromIndex(s.read.parquet(codesDir),
+      graft.ann.Pq.ivfPqTopKFromIndex(StateFs.readParquet(s, codesDir),
         emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", cents, cb, k = 3, probes = 16, r = 30, residual = true)
     },
@@ -1068,8 +1069,8 @@ object AnnQueries {
       val emb = Tables.embeddings(s, d)
       val (cents, cb) = persistedFaissIndex(s, d, histOnly = true)
       val (histCodesDir, deltaCodesDir) = appendedFaissSegments(s, d, cents, cb)
-      val index = s.read.parquet(histCodesDir)
-        .unionByName(s.read.parquet(deltaCodesDir))
+      val index = StateFs.readParquet(s, histCodesDir)
+        .unionByName(StateFs.readParquet(s, deltaCodesDir))
       val queries = emb.filter(col("vec_id") < 10)
       val approx = graft.ann.Pq.ivfPqTopKFromIndex(index, emb, queries,
         "vec_id", "embedding", cents, cb, k = 3, probes = 16, r = 30,
@@ -1118,10 +1119,10 @@ object AnnQueries {
         s"graft_ivfpq_codes_compact_$faissKeySuffix",
         d, s"$d/embeddings.parquet") { target =>
         graft.ann.Pq.compactIndex(
-            Seq(s.read.parquet(histCodesDir), s.read.parquet(deltaCodesDir)))
+            Seq(StateFs.readParquet(s, histCodesDir), StateFs.readParquet(s, deltaCodesDir)))
           .write.mode("overwrite").parquet(target)
       }
-      graft.ann.Pq.ivfPqTopKFromIndex(s.read.parquet(compactDir), emb,
+      graft.ann.Pq.ivfPqTopKFromIndex(StateFs.readParquet(s, compactDir), emb,
         emb.filter(col("vec_id") < 10), "vec_id", "embedding", cents, cb,
         k = 3, probes = 16, r = 30, residual = true, prefilterCells = true)
     },
@@ -1221,8 +1222,8 @@ object AnnQueries {
       val emb = Tables.embeddings(s, d)
       val (cents, cb) = persistedFaissIndex(s, d, histOnly = true)
       val (histCodesDir, deltaCodesDir) = appendedFaissSegments(s, d, cents, cb)
-      val index = s.read.parquet(histCodesDir)
-        .unionByName(s.read.parquet(deltaCodesDir))
+      val index = StateFs.readParquet(s, histCodesDir)
+        .unionByName(StateFs.readParquet(s, deltaCodesDir))
       // the drop-list as data: one column of vec_ids, the dedup-family
       // output shape (q140's drop-list is exactly this frame)
       val tombstones = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
@@ -1267,19 +1268,17 @@ object AnnQueries {
         val seg = s"$root/rows/seg-$id"
         graft.ann.Pq.encode(b, "vec_id", "embedding", cents, cb,
           residual = true).write.mode("overwrite").parquet(seg)
-        // ledger count from the LANDED files (footer row counts — a
-        // metadata read), so the ledger describes what committed, not
-        // what was attempted
-        b.sparkSession.read.parquet(seg).count()
+        // ledger count from the LANDED files' footers (no job), so the
+        // ledger describes what committed, not what was attempted
+        StateFs.parquetFooterRows(seg)
       }
       // rows/ appears only when a batch actually commits (the
       // drainToParquet empty-drain contract applied to segments)
       val streamed = if (!StateFs.exists(s"$segRoot/rows"))
-        s.read.parquet(histCodesDir).limit(0)
-      else s.read.option("recursiveFileLookup", "true")
-        .parquet(s"$segRoot/rows")
+        StateFs.readParquet(s, histCodesDir).limit(0)
+      else segments(s, s"$segRoot/rows")
       graft.ann.Pq.ivfPqTopKFromIndex(
-        s.read.parquet(histCodesDir).unionByName(streamed),
+        StateFs.readParquet(s, histCodesDir).unionByName(streamed),
         emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         cents, cb, k = 3, probes = 16, r = 30, residual = true)
     },
@@ -1313,11 +1312,11 @@ object AnnQueries {
         s"graft_ivfpq_codes_compactdel_$faissKeySuffix",
         d, s"$d/embeddings.parquet") { target =>
         graft.ann.Pq.compactIndex(
-            Seq(s.read.parquet(histCodesDir), s.read.parquet(deltaCodesDir)),
+            Seq(StateFs.readParquet(s, histCodesDir), StateFs.readParquet(s, deltaCodesDir)),
             tombstones = Some(tombstones))
           .write.mode("overwrite").parquet(target)
       }
-      graft.ann.Pq.ivfPqTopKFromIndex(s.read.parquet(compactDir), emb,
+      graft.ann.Pq.ivfPqTopKFromIndex(StateFs.readParquet(s, compactDir), emb,
         emb.filter(col("vec_id") < 10), "vec_id", "embedding", cents, cb,
         k = 3, probes = 16, r = 30, residual = true, prefilterCells = true)
     },
@@ -1353,9 +1352,10 @@ object AnnQueries {
           .withColumn("gen", expr("CAST((vec_id DIV 10) % 4 AS INT)"))
           .write.mode("overwrite").partitionBy("gen").parquet(target)
       }
-      val asOf = s.read.parquet(genDir).filter(col("gen") <= 1).drop("gen")
+      val asOf = StateFs.readParquet(s, genDir, StructField("gen", IntegerType))
+        .filter(col("gen") <= 1).drop("gen")
       graft.ann.Pq.ivfPqTopKFromIndex(
-        s.read.parquet(histCodesDir).unionByName(asOf),
+        StateFs.readParquet(s, histCodesDir).unionByName(asOf),
         emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         cents, cb, k = 3, probes = 16, r = 30, residual = true)
     },
@@ -1420,11 +1420,11 @@ object AnnQueries {
       require(gen1.genId == 1L,
         s"q193: as-of day-1 must resolve generation 1, got ${gen1.genId}")
       val asOf = BucketedGens.read(s, genRoot, Some(gen1),
-          s.read.parquet(histCodesDir).limit(0)
+          StateFs.readParquet(s, histCodesDir).limit(0)
             .withColumn("bucket", lit(0))) // AtRest never referenced here
         .drop("bucket")
       graft.ann.Pq.ivfPqTopKFromIndex(
-        s.read.parquet(histCodesDir).unionByName(asOf),
+        StateFs.readParquet(s, histCodesDir).unionByName(asOf),
         emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         cents, cb, k = 3, probes = 16, r = 30, residual = true)
     },
@@ -1470,7 +1470,6 @@ object AnnQueries {
       val segRoot = EventQueries.foldDrain(s,
           EventQueries.stageRangedDrain(changelog, 2, "vec_id", "graft_std_"),
           changelog.schema, "graft_stream_tombstone_delete") { (root, b, id) =>
-        val ss = b.sparkSession
         val seg = s"$root/rows/seg-$id"
         val tomb = s"$root/tombs/seg-$id"
         graft.ann.Pq.encode(b.filter(col("op") === "I")
@@ -1482,16 +1481,16 @@ object AnnQueries {
         // ledger row = appends landed + deletes landed, both from the
         // committed files' footers — the scaling evidence that segment
         // COUNT tracks trigger cadence while rows track volume
-        ss.read.parquet(seg).count() + ss.read.parquet(tomb).count()
+        StateFs.parquetFooterRows(seg) + StateFs.parquetFooterRows(tomb)
       }
-      val hist = s.read.parquet(histCodesDir)
+      val hist = StateFs.readParquet(s, histCodesDir)
       val streamed = if (!StateFs.exists(s"$segRoot/rows"))
         hist.limit(0)
-      else s.read.option("recursiveFileLookup", "true").parquet(s"$segRoot/rows")
+      else segments(s, s"$segRoot/rows")
       val index = hist.unionByName(streamed)
       val served = if (!StateFs.exists(s"$segRoot/tombs")) index
       else graft.ann.Pq.withoutTombstones(index,
-        s.read.option("recursiveFileLookup", "true").parquet(s"$segRoot/tombs"))
+        segments(s, s"$segRoot/tombs"))
       graft.ann.Pq.ivfPqTopKFromIndex(served,
         emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         cents, cb, k = 3, probes = 16, r = 30, residual = true)
@@ -1629,6 +1628,13 @@ object AnnQueries {
     s"v${graft.ann.KMeans.recipeVersion}p${graft.ann.Pq.recipeVersion}" +
       s"_n${faissNlist}m${faissM}k${faissK}i$faissIters"
 
+  /** A drain's `seg-<id>` tree read as one relation, its schema declared
+    * from the first segment's footer. */
+  private def segments(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.schema(StateFs.parquetFooterSchema(s, dir))
+      .option("recursiveFileLookup", "true").parquet(dir)
+
   private def persistedFaissIndex(s: org.apache.spark.sql.SparkSession, d: String,
       /** true → train BOTH quantizers on history alone (vec_id % 10 <> 0)
         * under a distinct cache tag — q148's frozen-index contract */
@@ -1651,7 +1657,7 @@ object AnnQueries {
       rows.toDF("kind", "m", "cid", "cent").coalesce(1)
         .write.mode("overwrite").parquet(target)
     }
-    val loaded = s.read.parquet(dir).collect()
+    val loaded = StateFs.readParquet(s, dir).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getSeq[Double](3).toSeq))
     val cents = loaded.filter(_._1 == 0).sortBy(_._3)
       .map { case (_, _, cid, c) => (cid, c) }.toSeq

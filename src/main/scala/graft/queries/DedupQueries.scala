@@ -939,7 +939,7 @@ object DedupQueries {
       rels: Seq[(String, org.apache.spark.sql.DataFrame)])
       : Seq[scala.concurrent.Future[Unit]] =
     rels.map { case (rel, df) =>
-      scala.concurrent.Future(BucketedGens.writeBucketed(df, s"$dir/$rel"))(foldPool) }
+      onPool(BucketedGens.writeBucketed(df, s"$dir/$rel")) }
 
   /** THE cluster-state build, shared by initial staging and compaction:
     * the banded near-dup pairs over `sigs` (doc_id, simhash), pinned —
@@ -1360,11 +1360,11 @@ object DedupQueries {
     // the generations the fold is writing. The batch ids and the
     // originals are held on the driver: the coalesce is Scala.
     val bIds = Held(b.select("doc_id")).keys("doc_id")
-    val fTouchedOrig = scala.concurrent.Future {
+    val fTouchedOrig = onPool {
       val comp = Held(atRestLabelsForIds(s, ccState, bIds)).rows
         .map(r => r.get(0) -> r.get(1)).toMap
       bIds.map(d => comp.getOrElse(d, d)).distinct
-    }(foldPool)
+    }
     val (_, rebuilt) = componentsRetractImpl(ccState, root, b, bIds, id, ts)
     val baseM = BucketedGens.latest(manRoot, below = Some(id))
     val atRestRows = atRestManifestGenRows(s, survState)
@@ -1616,11 +1616,21 @@ object DedupQueries {
         t
       }))
 
+  /** Run `f` on [[foldPool]] under the SUBMITTING thread's job
+    * description. Local properties are inherited when a thread is
+    * created, so a reused pool thread would otherwise label its jobs
+    * with whatever step or micro-batch first created it. */
+  private[queries] def onPool[A](f: => A): scala.concurrent.Future[A] = {
+    val s = org.apache.spark.sql.SparkSession.active
+    val d = s.sparkContext.getLocalProperty("spark.job.description")
+    scala.concurrent.Future(labeled(s, d)(f))(foldPool)
+  }
+
   /** Label the jobs of one fold step (guide §1.5) so graft.Probe's
     * by-site table / the UI can attribute the family's ~70 ms
     * driver-action slots to steps.
     * Thread-local, so pool-side steps label their own jobs. */
-  private def labeled[A](s: org.apache.spark.sql.SparkSession, d: String)(
+  private[queries] def labeled[A](s: org.apache.spark.sql.SparkSession, d: String)(
       f: => A): A = {
     val sc = s.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -1647,7 +1657,7 @@ object DedupQueries {
     * results returned, failures propagated. ONLY for pairs with no data
     * or commit-order dependency (commits stay sequential on the caller). */
   private def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val fb = scala.concurrent.Future(b)(foldPool)
+    val fb = onPool(b)
     val ra = a
     (ra, awaitFold(fb, "inParallel"))
   }
@@ -1842,7 +1852,7 @@ object DedupQueries {
     // closure walk below — the two share no inputs beyond the already-
     // held batch/winners frames (r19 job diet, guide §2.6); awaited
     // at ledgerEdges, its first consumer
-    val fLedger = scala.concurrent.Future(labeled(s, "cfold:pairLedger")(
+    val fLedger = onPool(labeled(s, "cfold:pairLedger")(
       if (pairSegs.isEmpty) emptyPairs
       else segPairs
         .join(opsTouchA, col("id_a") === col("__ta") && col("__tsa") > col("__seg"),
@@ -1850,7 +1860,7 @@ object DedupQueries {
         .join(opsTouchB, col("id_b") === col("__tb") && col("__tsb") > col("__seg"),
           "left_anti")
         .select("id_a", "id_b")
-        .localCheckpoint()))(foldPool)
+        .localCheckpoint()))
     // THE DOC-KEYED LABEL MIRROR (r17): every id-keyed probe below
     // resolves through pmod(id, nb) point reads of the `labels_byid`
     // generations — r16 pinned the FULL standing label relation here, an
@@ -1915,7 +1925,7 @@ object DedupQueries {
     val supersededAtRest = cumDels.unionByName(cumApps.select("doc_id"))
     // held: the append-side contraction probe (aApp below) resolves the
     // pair endpoints' current labels from its key sets
-    val fDeltaPairs = scala.concurrent.Future(labeled(s, "cfold:deltaPairs")(
+    val fDeltaPairs = onPool(labeled(s, "cfold:deltaPairs")(
       if (!hasI) Held.empty(s, stateSchemas("pairs")) else {
         // the probe's base corpus is whatever the at-rest state COVERS:
         // the historyPred slice of the static frame initially, the
@@ -1931,7 +1941,7 @@ object DedupQueries {
         // read by the merge AND the ledger write
         Held(TextDedup.simHashNearDupAgainst(bI, present, "doc_id", "simhash", 3)
           .select("id_a", "id_b"))
-      }))(foldPool)
+      }))
     val (rebuildComps, closureOrigs, mRebuild) =
       if (!hasTouched) (Seq.empty[Any], Seq.empty[Any], Seq.empty[Any])
       else {
@@ -2030,19 +2040,19 @@ object DedupQueries {
     // re-bases BOTH roots strictly below `id` and overwrites every
     // partial dir whole (ledger segments included — a replayed batch
     // overwrites its own segment).
-    val fByid = scala.concurrent.Future(labeled(s, "cfold:byidWrite")(
+    val fByid = onPool(labeled(s, "cfold:byidWrite")(
       BucketedGens.observedWrite(
         predBy, byBuckets, s"$byidRoot/gen-$id") { pred =>
       antiIn(pred.select("id", "component"), "id", oldAffected)
         .unionByName(newLocal.df)
         .transform(bucketed("id", nb))
-    }))(foldPool)
+    }))
     // O(batch) ledger segments — the batch's own contribution, nothing
     // cumulative is ever rewritten (the purge happens at read time)
-    val fOps = scala.concurrent.Future(labeled(s, "cfold:opsSeg")(
-      SegLedger.append(batchOps, s"$root/ops", id)))(foldPool)
-    val fPairs = scala.concurrent.Future(labeled(s, "cfold:pairsSeg")(
-      if (hasI) SegLedger.append(deltaPairs.df, s"$root/pairs", id)))(foldPool)
+    val fOps = onPool(labeled(s, "cfold:opsSeg")(
+      SegLedger.append(batchOps, s"$root/ops", id)))
+    val fPairs = onPool(labeled(s, "cfold:pairsSeg")(
+      if (hasI) SegLedger.append(deltaPairs.df, s"$root/pairs", id)))
     val (written, nextRows, predRows) = labeled(s, "cfold:labelsWrite")(
       BucketedGens.observedWrite(
         predTouched, buckets, s"$labelsRoot/gen-$id") { pred =>
@@ -2334,8 +2344,8 @@ object DedupQueries {
     // their base corpus (historyPred no longer describes what the
     // at-rest state absorbed). Written on the pool — the pair probe
     // below reads `present` from its checkpoint blocks, not this dir.
-    val fSigs = scala.concurrent.Future(
-      present.write.mode("overwrite").parquet(s"$stateDir/sigs"))(foldPool)
+    val fSigs = onPool(
+      present.write.mode("overwrite").parquet(s"$stateDir/sigs"))
     // rebuild the cluster state over the present corpus — the build
     // stagedCcState stages from scratch, at the rescaled bucket count
     val minBB = confMinBucketBytes(s)

@@ -586,7 +586,7 @@ object EndToEndQueries {
            count(DISTINCT id) AS n_ids
          FROM ysplit
          WHERE id BETWEEN 200 AND 900 AND year BETWEEN 2021 AND 2022""") { (s, d) =>
-      s.read.parquet(zStagedSpineDir(s, d))
+      StateFs.readParquet(s, zStagedSpineDir(s, d))
         .filter(col("id").between(200, 900) && col("year").between(2021, 2022))
         .agg(count(lit(1)).as("n"), round(sum("amountUSD"), 4).as("amount"),
           countDistinct("id").as("n_ids"))

@@ -5,6 +5,7 @@ import graft.operators.AsOfJoin
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Event-stream semantics in batch form: tumbling-window aggregation,
   * gap-based sessionization, JSON property extraction. The same
@@ -287,7 +288,7 @@ object EventQueries {
     // table. Guard BOTH modes.
     if (!StateFs.exists(s"$out/rows"))
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], frame.schema)
-    else s.read.parquet(s"$out/rows")
+    else s.read.schema(frame.schema).parquet(s"$out/rows")
   }
 
   /** [[drainToParquet]] of a stream over the staged input `in`: the
@@ -923,8 +924,8 @@ object EventQueries {
         events.filter(col("event_id") % 10 === 0)
           .write.mode("overwrite").parquet(target)
       }
-      finishDaily(mergeDailyRaw(s.read.parquet(matDir),
-        dailyPartial(s.read.parquet(deltaDir))))
+      finishDaily(mergeDailyRaw(StateFs.readParquet(s, matDir),
+        dailyPartial(StateFs.readParquet(s, deltaDir))))
     },
 
     // STREAMING VIEW MAINTENANCE — q156's refresh as a continuously
@@ -951,7 +952,7 @@ object EventQueries {
         batch.schema, "graft_stream_agg_refresh")(viewMergeStep)
       latestViewGen(root) match {
         case None      => finishDaily(dailyPartial(batch.limit(0)))
-        case Some(dir) => finishDaily(s.read.parquet(dir))
+        case Some(dir) => finishDaily(StateFs.readParquet(s, dir))
       }
     },
 
@@ -976,9 +977,9 @@ object EventQueries {
          WHERE event_id % 10 <> 0 OR day_num = (SELECT min(day_num) FROM e)
          GROUP BY event_type, day_num""") { (s, d) =>
       val dir = backfilledRollupDir(s, d)
-      // the partition column comes back type-inferred — pin it to the
-      // oracle's BIGINT before the shared finisher
-      finishDaily(s.read.parquet(dir)
+      // the partition column reads as INT (what discovery infers from the
+      // day numbers) — pin it to the oracle's BIGINT before the finisher
+      finishDaily(StateFs.readParquet(s, dir, StructField("day_num", IntegerType))
         .withColumn("day_num", col("day_num").cast("long")))
     },
 
@@ -1067,9 +1068,9 @@ object EventQueries {
     QueryDef("q163_cdc_incremental_refresh", Seq("A5", "R4"),
       postCdcRollupSql) { (s, d) =>
       val signed = graft.operators.IncrementalView.signedPartials(
-        Seq("event_type", "day_num"), s.read.parquet(cdcDeltaDir(s, d)))
+        Seq("event_type", "day_num"), StateFs.readParquet(s, cdcDeltaDir(s, d)))
       finishPostCdc(graft.operators.IncrementalView.dropEmptied(
-        mergeDailyRaw(s.read.parquet(incrAggBaseDir(s, d)), signed)))
+        mergeDailyRaw(StateFs.readParquet(s, incrAggBaseDir(s, d)), signed)))
     },
 
     // STREAMING CDC VIEW MAINTENANCE — q158's continuously maintained
@@ -1090,15 +1091,15 @@ object EventQueries {
     QueryDef("q167_stream_cdc_view", Seq("A5", "R4"),
       postCdcRollupSql) { (s0, d) =>
       val matDir = incrAggBaseDir(s0, d)
-      val batch = s0.read.parquet(cdcDeltaDir(s0, d))
+      val batch = StateFs.readParquet(s0, cdcDeltaDir(s0, d))
       val s = streamSession(s0)
       val root = foldDrain(s, stageRangedDrain(batch, 2, "ts", "graft_scv_"),
           batch.schema, "graft_stream_cdc_view") { (root, b, id) =>
         cdcViewMergeStep(root, matDir, b, id)
       }
       val served = latestViewGen(root) match {
-        case None      => s.read.parquet(matDir) // no delta arrived: the view IS the base
-        case Some(dir) => s.read.parquet(dir)
+        case None      => StateFs.readParquet(s, matDir) // no delta arrived: the view IS the base
+        case Some(dir) => StateFs.readParquet(s, dir)
       }
       finishPostCdc(graft.operators.IncrementalView.dropEmptied(served))
     },
@@ -1183,8 +1184,8 @@ object EventQueries {
     val s = b.sparkSession
     val base = latestViewGen(root, below = Some(id))
     val prev = base match {
-      case Some(p) => s.read.parquet(p)
-      case None    => s.read.parquet(baseDir)
+      case Some(p) => StateFs.readParquet(s, p)
+      case None    => StateFs.readParquet(s, baseDir)
     }
     val merged = mergeDailyRaw(prev,
       graft.operators.IncrementalView.signedPartials(
@@ -1306,7 +1307,7 @@ object EventQueries {
     val part = dailyPartial(b)
     val merged = base match {
       case None       => part
-      case Some(prev) => mergeDailyRaw(b.sparkSession.read.parquet(prev), part)
+      case Some(prev) => mergeDailyRaw(StateFs.readParquet(b.sparkSession, prev), part)
     }
     val next = s"$root/gen-$id"
     // count rides the write — see cdcViewMergeStep

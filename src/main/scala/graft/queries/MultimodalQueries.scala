@@ -156,7 +156,7 @@ object MultimodalQueries {
             lit(null).cast("string").as("meta"))
           .write.mode("overwrite").parquet(target)
       }
-      MediaColumns.extractFeatures(s.read.parquet(dir), dims = 16)
+      MediaColumns.extractFeatures(StateFs.readParquet(s, dir), dims = 16)
         .select(col("media_id"), col("width"), col("height"),
           size(col("features")).as("n_features"),
           round(element_at(col("features"), 1) * 255).cast("int").as("f0_gray"),
@@ -199,7 +199,7 @@ object MultimodalQueries {
             lit(null).cast("string").as("meta"))
           .write.mode("overwrite").parquet(target)
       }
-      MediaColumns.extractFeatures(s.read.parquet(dir), dims = 8)
+      MediaColumns.extractFeatures(StateFs.readParquet(s, dir), dims = 8)
         .select(col("media_id"), col("width"), col("height"),
           size(col("features")).as("n_features"),
           round(element_at(col("features"), 1) * 32768).cast("int").as("f0_amp"),
@@ -246,7 +246,7 @@ object MultimodalQueries {
             lit(null).cast("string").as("meta"))
           .write.mode("overwrite").parquet(target)
       }
-      MediaColumns.sampleFramesDecoded(s.read.parquet(dir))
+      MediaColumns.sampleFramesDecoded(StateFs.readParquet(s, dir))
         .select(col("media_id"), col("frame_idx"), col("width"), col("height"),
           round(col("f_mean") * 255).cast("int").as("f_gray"))
     },

@@ -7,6 +7,7 @@ import graft.sources.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Round-4 pipeline battery: the shard/packing, span-dedup, CDC and
   * interval-join operations a training-data pipeline runs AROUND the
@@ -410,7 +411,7 @@ object PipelineQueries {
       val baseDir = graft.sources.ZOrder.ensureStagedDir(
         "graft_scd2_ivm_base", d, s"$d/events.parquet") { target =>
         asOfPartial(facts(Tables.events(s, d)).filter(col("event_id") % 10 =!= 0),
-            s.read.parquet(dimDir))
+            StateFs.readParquet(s, dimDir))
           .write.mode("overwrite").parquet(target)
       }
       // artifact 3: the delta landing file (raw fact rows)
@@ -420,8 +421,8 @@ object PipelineQueries {
           .write.mode("overwrite").parquet(target)
       }
       graft.operators.IncrementalView.mergePartials(Seq("bucket"),
-          s.read.parquet(baseDir),
-          asOfPartial(s.read.parquet(deltaDir), s.read.parquet(dimDir)))
+          StateFs.readParquet(s, baseDir),
+          asOfPartial(StateFs.readParquet(s, deltaDir), StateFs.readParquet(s, dimDir)))
         .select(col("bucket"), col("n"), round(col("sum_value"), 4).as("total_value"))
     },
 
@@ -709,7 +710,7 @@ object PipelineQueries {
         "graft_scd2_dim_maintained", d, s"$d/events.parquet") { target =>
         EventQueries.multiWriteStage(target) { stage =>
           // yesterday's dim: intervals over the history change log
-          s.read.parquet(scd2BaseDimDir(s, d))
+          StateFs.readParquet(s, scd2BaseDimDir(s, d), bucketPart)
             .write.partitionBy("bucket").mode("append").parquet(stage)
           val (pruned, touched) = scd2TouchedRebuild(s, d)
           if (touched.nonEmpty) {
@@ -724,8 +725,8 @@ object PipelineQueries {
           }
         }
       }
-      s.read.parquet(dimDir).select("user_id", "valid_from", "event_id",
-        "valid_to", "is_current", "attr_value")
+      StateFs.readParquet(s, dimDir, bucketPart)
+        .select("user_id", "valid_from", "event_id", "valid_to", "is_current", "attr_value")
     },
   )
 
@@ -759,6 +760,8 @@ object PipelineQueries {
   }
 
   private def bucketOf: Column = (col("user_id") % 64).cast("int")
+  /** The `bucket` partition column as discovery types it on read. */
+  private val bucketPart = StructField("bucket", IntegerType)
 
   /** The change log at rest, partitioned by user bucket — what makes
     * the q169 rebuild's read prunable. */
@@ -792,7 +795,7 @@ object PipelineQueries {
     // bounded driver list: 64 buckets exist in total
     val touched = delta.select(bucketOf.as("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val pruned = s.read.parquet(scd2LogDir(s, d))
+    val pruned = StateFs.readParquet(s, scd2LogDir(s, d), bucketPart)
       .filter(col("bucket").isin(touched: _*)).drop("bucket")
     (pruned, touched)
   }

@@ -291,8 +291,8 @@ object RelationalQueries {
           .write.mode("overwrite").parquet(target)
       }
       graft.operators.IncrementalView.mergePartials(Seq("n_name", "o_year"),
-          s.read.parquet(incrJoinBaseDir(s, d)),
-          joinViewPartial(s, d, s.read.parquet(deltaDir)))
+          StateFs.readParquet(s, incrJoinBaseDir(s, d)),
+          joinViewPartial(s, d, StateFs.readParquet(s, deltaDir)))
         .select(col("n_name"), col("o_year"), col("n"),
           round(col("sum_value"), 4).as("total_price"))
     },
@@ -346,7 +346,7 @@ object RelationalQueries {
       // (q160) registers, so the planner's broadcast decision comes
       // from their ANALYZE'd statistics and the two refresh paths can
       // never plan against different dim snapshots.
-      val enriched = s.read.parquet(deltaDir)
+      val enriched = StateFs.readParquet(s, deltaDir)
         .join(statsDim(s, d, "customer", "customer",
             Tables.customer(s, d).select("c_custkey", "c_nationkey")),
           col("o_custkey") === col("c_custkey"))
@@ -359,7 +359,7 @@ object RelationalQueries {
         Seq("n_name", "o_year"), enriched)
       graft.operators.IncrementalView.dropEmptied(
           graft.operators.IncrementalView.mergePartials(Seq("n_name", "o_year"),
-            s.read.parquet(incrJoinBaseDir(s, d)), signed))
+            StateFs.readParquet(s, incrJoinBaseDir(s, d)), signed))
         .select(col("n_name"), col("o_year"), col("n"),
           round(col("sum_value"), 4).as("total_price"))
     },

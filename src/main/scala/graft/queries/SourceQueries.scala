@@ -4,6 +4,7 @@ import graft.QueryDef
 import graft.operators.{Joins, SkewJoin, Unnest}
 import graft.sources.{Bucketing, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Remaining §2 coverage: left-join enrichment, overlap-patch unions,
   * rollup/compare aggregations, CSV and partitioned-parquet round trips,
@@ -139,7 +140,7 @@ object SourceQueries {
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
-      s.read.parquet(tmp)
+      StateFs.readParquet(s, tmp, StructField("o_year", IntegerType))
         .filter(col("o_year") >= 1999) // prunes partitions, not rows
         .groupBy("o_year")
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 4).as("total"))
@@ -167,7 +168,7 @@ object SourceQueries {
       val dir = graft.sources.ZOrder.ensureStaged(
         "graft_zorder", d, s"$d/lineitem.parquet", "l_partkey", "l_suppkey")(
         Tables.lineitem(s, d).select("l_partkey", "l_suppkey", "l_extendedprice"))
-      s.read.parquet(dir)
+      StateFs.readParquet(s, dir)
         .filter(col("l_partkey").between(50, 150) && col("l_suppkey").between(2, 8))
         .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 4).as("amount"),
           countDistinct("l_partkey").as("n_parts"))

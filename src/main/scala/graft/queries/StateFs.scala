@@ -2,6 +2,13 @@ package graft.queries
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Filesystem seam for the maintained-state layer ([[BucketedGens]],
   * [[SegLedger]], the staged-state metas and compaction markers): every
@@ -170,4 +177,45 @@ private[graft] object StateFs {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }.sum
+
+  /** The first data file under `path` in listing order, descending into
+    * subdirectories (`partitionBy` output, segment trees) and skipping
+    * `_`/`.` names — the file a schema-less read with `mergeSchema` off
+    * takes its schema from. */
+  private def firstDataFile(p: Path): Option[Path] = {
+    val fs = fsOf(p)
+    if (!fs.exists(p)) None
+    else if (fs.getFileStatus(p).isFile) Some(p)
+    else fs.listStatus(p).toSeq.sortBy(_.getPath.getName).iterator
+      .filterNot { st => val n = st.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+      .flatMap(st => if (st.isFile) Some(st.getPath) else firstDataFile(st.getPath))
+      .nextOption()
+  }
+
+  /** The schema a schema-less parquet read of `path` infers, read from
+    * one data file's footer on the driver — no Spark job (inference runs
+    * a 1-task job per read). The conversion is inference's own
+    * (`ParquetFileFormat.readSchemaFromFooter` under the session conf),
+    * so Spark's row-metadata schema and `nanosAsLong` shape it the same.
+    * `partitions` are `partitionBy` columns with the types partition
+    * discovery gives them; they come last, as inference puts them.
+    * Throws, naming `path`, when it holds no data file: a declared read
+    * of nothing must not read as some other relation. */
+  def parquetFooterSchema(s: SparkSession, path: String,
+      partitions: StructField*): StructType = {
+    val hconf = s.sparkContext.hadoopConfiguration
+    val f = firstDataFile(new Path(path)).getOrElse(throw new IllegalStateException(
+      s"no parquet data file under $path to read its schema from"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf),
+      HadoopReadOptions.builder(hconf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try new Footer(f, r.getFooter) finally r.close()
+    StructType(ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(s.sessionState.conf)) ++ partitions)
+  }
+
+  /** A parquet read of `path` with its schema declared from the footer
+    * ([[parquetFooterSchema]]) instead of inferred. */
+  def readParquet(s: SparkSession, path: String, partitions: StructField*): DataFrame =
+    s.read.schema(parquetFooterSchema(s, path, partitions: _*)).parquet(path)
 }

@@ -19,8 +19,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Reads `name` with its schema declared from the file's footer
+    * (`StateFs.parquetFooterSchema`): a schema-less read runs a 1-task
+    * inference job on every call, a declared one runs none. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.queries.StateFs.readParquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -44,7 +47,8 @@ object Tables {
 
   /** The events schema exactly as THIS Spark version's parquet reader
     * yields it — readStream over the original files must declare the
-    * reader's schema, then normalize via [[tsToNanos]]. */
+    * reader's schema, then normalize via [[tsToNanos]]. The footer
+    * declares the read, so this plans a scan and runs no job. */
   def eventsRawSchema(s: SparkSession, d: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     load(s, d, "events").schema

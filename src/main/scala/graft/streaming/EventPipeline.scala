@@ -77,7 +77,7 @@ object EventPipeline {
           .agg(max(struct(col("sec"), col("event_id"), col("op"), col("value"))).as("m"))
         val merged = completeVersions(s, stateDir).maxOption match {
           case None => delta
-          case Some(v) => s.read.parquet(s"$stateDir/v$v").union(delta)
+          case Some(v) => graft.queries.StateFs.readParquet(s, s"$stateDir/v$v").union(delta)
             .groupBy("entity").agg(max(col("m")).as("m"))
         }
         // number past every existing dir, partial or complete, so the
@@ -136,7 +136,7 @@ object EventPipeline {
 
   /** Latest committed CDC state version written by [[cdcApply]]. */
   def cdcState(s: org.apache.spark.sql.SparkSession, stateDir: String): DataFrame =
-    s.read.parquet(s"$stateDir/v${completeVersions(s, stateDir).max}")
+    graft.queries.StateFs.readParquet(s, s"$stateDir/v${completeVersions(s, stateDir).max}")
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)

@@ -69,20 +69,54 @@ class DeclaredSchemaSpec extends SparkSpec {
     assertDeclared("dels", s"$root/retract/dels/seg-0")
   }
 
-  test("no schema-less parquet read is left in the fold state layer") {
-    val files = Seq("DedupQueries", "BucketedGens", "SegLedger")
-      .map(n => new java.io.File(s"src/main/scala/graft/queries/$n.scala"))
-    assert(files.forall(_.isFile), "run from the repository root")
-    val inferring = """read\s*\.\s*parquet\(""".r
-    val hits = files.flatMap { f =>
+  test("a drain's readback declares its frame's schema, which is what inference gives") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val src = Files.createTempDirectory("graft_declared_drain_").toString
+    spark.range(0, 20, 1, 2).select(col("id"), (col("id") % 3).as("k"))
+      .write.parquet(s"$src/in")
+    val in = spark.read.parquet(s"$src/in").schema
+    for (update <- Seq(false, true)) {
+      // `one` is NOT NULL in the frame; the files Spark writes say nullable
+      val frame = spark.readStream.schema(in).parquet(s"$src/in")
+        .select(col("id"), (col("k") + 1).as("k1"), lit(1).as("one"))
+      val out = EventQueries.drainToParquet(frame, s"graft_declared_drain_$update", update)
+      val rows = out.queryExecution.analyzed.collectFirst {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.rootPaths.head.toString
+      }.getOrElse(fail("the readback reads no files"))
+      val inferred = spark.read.parquet(rows).schema
+      assert(out.schema == inferred,
+        s"update=$update: declared ${out.schema.toDDL} but inference gives ${inferred.toDDL}")
+      assert(out.count() == 20L)
+    }
+  }
+
+  /** Schema-less reads kept on purpose, by file, each with its reason. */
+  private val inferringAllowed: Map[String, String] = Map(
+    "EventQueries.scala" ->
+      "q162 reads its at-rest table with mergeSchema: the union of the files' schemas is the query")
+
+  test("no schema-less parquet read in queries/, sources/, streaming/") {
+    val roots = Seq("queries", "sources", "streaming")
+      .map(d => new java.io.File(s"src/main/scala/graft/$d"))
+    assert(roots.forall(_.isDirectory), "run from the repository root")
+    // `read`, any `.option(...)` calls, then `.parquet(`: no `.schema(`
+    val inferring = """\bread((?:\s*\.\s*option\([^()]*\))*)\s*\.\s*parquet\(""".r
+    val hits = roots.flatMap(_.listFiles().filter(_.getName.endsWith(".scala"))).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val text = try src.mkString finally src.close()
       inferring.findAllMatchIn(text).map { m =>
-        s"${f.getName}:${text.substring(0, m.start).count(_ == '\n') + 1}"
+        (f.getName, text.substring(0, m.start).count(_ == '\n') + 1)
       }
     }
-    assert(hits.isEmpty,
-      s"read with the relation's declared schema (stateRel / SegLedger's empty) " +
-        s"instead of inferring it: ${hits.mkString(", ")}")
+    val (allowed, left) = hits.partition { case (f, _) => inferringAllowed.contains(f) }
+    assert(left.isEmpty,
+      s"declare the schema (StateFs.readParquet / parquetFooterSchema, the writer's frame, " +
+        s"stateRel, SegLedger's empty) instead of inferring it: " +
+        left.map { case (f, l) => s"$f:$l" }.mkString(", "))
+    // an allowlist entry whose read is gone must go too
+    assert(allowed.map(_._1).toSet == inferringAllowed.keySet,
+      s"stale allowlist entries: ${inferringAllowed.keySet -- allowed.map(_._1)}")
+    assert(allowed.size == inferringAllowed.size,
+      s"more than one allowed read in a file: ${allowed.mkString(", ")}")
   }
 }
